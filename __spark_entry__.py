@@ -130,7 +130,7 @@ def _index(spark: SparkSession, sf_dir: str) -> Index:
                    idx.mat.turns):
             df.persist()
         idx.postings.count()
-        idx.corpus.count()  # scoring calls corpus.first() per query
+        idx.corpus.count()  # every query's stats read scans the corpus row
         # The deferred doc-id rank is materialized by the counts above;
         # its range-partitioned parents are dead weight from here on.
         idx.mat.release_intermediates()

@@ -562,6 +562,8 @@ def lsh_batch_topk_stored(
 
     Returns (qid, id, cos) — per qid identical to
     :func:`lsh_topk_stored` at the same radius (asserted in tests)."""
+    if not queries:  # no probe set, so no scan predicate to build
+        return spark.createDataFrame([], "qid long, id long, cos double")
     probe_rows: list[tuple[int, int, int]] = []
     for qid, qv in queries:
         for b, v in _query_buckets(store, list(qv)):

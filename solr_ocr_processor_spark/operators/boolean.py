@@ -32,7 +32,8 @@ complement of a posting list over a 10^12-doc corpus.
 Execution is ONE posting-table pass, however deep the expression:
 
 1. dictionary-filter the postings to ALL leaf terms (isin -> parquet
-   row-group pruning), broadcast-join the tiny per-term idf table;
+   row-group pruning), each row's idf from the query's one stats
+   read (operators/score.term_scores);
 2. one hash aggregation per doc_id produces (a) the BM25 sum over the
    POSITIVE leaf occurrences — folded in sorted-term order for the
    bit-deterministic score contract (operators/score.py) — and (b) the
@@ -57,13 +58,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT, IndexConfig
 from ..functions.tokenizer import query_terms
 from .build import Index
-from .score import _suppress
-from .score import (
-    _query_idf,
-    bm25_term_score,
-    resolve_conv_ids,
-    sorted_term_fold,
-)
+from .score import _suppress, query_stats, rank_topk, sorted_term_fold, term_scores
 
 
 # --- AST -------------------------------------------------------------------
@@ -236,34 +231,22 @@ def boolean_topk(
     node = parse_boolean(query, cfg)
     allt, post = leaf_terms(node)
     terms = sorted(allt)
-    qidf, _, avgdl = _query_idf(spark, index, terms)
-
-    k1, b = float(cfg.k1), float(cfg.b)
-    per_term = (
-        index.postings.where(F.col("term").isin(terms))
-        .join(F.broadcast(qidf), "term")
-        .withColumn(
-            # Shared score contract (bm25_term_score / sorted_term_fold
-            # live in operators/score.py — ONE home for the
-            # associativity + fold-order bit-identity rules). Only
-            # POSITIVE leaves contribute score; negative-only leaves
-            # still count for presence.
-            "term_score",
-            F.when(
-                F.col("term").isin(sorted(post)), bm25_term_score(k1, b, avgdl)
-            ).otherwise(F.lit(0.0)),
-        )
-        .select("doc_id", "term", "term_score")
+    # Shared score contract (term_scores / sorted_term_fold live in
+    # operators/score.py — ONE home for the idf, associativity and
+    # fold-order bit-identity rules). Only POSITIVE leaves contribute
+    # score; negative-only leaves still count for presence.
+    per_term = term_scores(index, query_stats(index, terms), terms, cfg).select(
+        "doc_id",
+        "term",
+        F.when(F.col("term").isin(sorted(post)), F.col("term_score"))
+        .otherwise(F.lit(0.0))
+        .alias("term_score"),
     )
     scored = per_term.groupBy("doc_id").agg(
         sorted_term_fold().alias("score"),
         F.collect_set("term").alias("terms_present"),
     )
     scored = _suppress(scored, exclude_docs)
-    top = (
-        scored.where(_predicate(node, F.col("terms_present")))
-        .select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+    return rank_topk(
+        index, scored.where(_predicate(node, F.col("terms_present"))), k
     )
-    return resolve_conv_ids(index, top)

@@ -25,7 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.bm25 import idf_column
 from .build import Index
+from .score import query_stats
 
 
 def result_clusters(
@@ -44,13 +46,10 @@ def result_clusters(
     Per-doc label selection = argmax over (tf·idf, term ASC) — the
     raw-order float discipline the MLT family already proves
     engine-portable; the integer tie-break is the term string."""
-    n_docs = index.corpus.first()["n_docs"]
+    idf = idf_column(query_stats(index, []).n_docs)
     page = top.select("doc_id")
     slice_ = index.postings.join(F.broadcast(page), "doc_id").select(
         "doc_id", "term", "tf"
-    )
-    idf = F.log1p(
-        (F.lit(n_docs) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
     )
     scored = slice_.join(
         F.broadcast(index.term_stats.select("term", "df")), "term"

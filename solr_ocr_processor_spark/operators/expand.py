@@ -36,14 +36,24 @@ covers the pattern-term surface. Same model, Spark-first:
 from __future__ import annotations
 
 import re
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, IndexConfig
+from ..functions.bm25 import idf_column, idf_scalar
 from ..functions.tokenizer import query_terms
 from .build import Index
-from .score import _suppress, bm25_scores_terms, resolve_conv_ids
+from .score import (
+    _suppress,
+    bm25_scores_terms,
+    bm25_term_score,
+    query_stats,
+    rank_topk,
+    sorted_term_fold,
+    term_lookup,
+)
 
 MAX_EXPANSIONS = 50  # Lucene BooleanQuery rewrite default
 
@@ -347,12 +357,9 @@ def _mlt_term_frame(
     ``min_wl``/``max_wl`` are Solr's mlt.minwl/mlt.maxwl word-length
     noise gates (too-short terms are stopword-ish, too-long ones are
     artifacts)."""
-    n_docs = index.corpus.first()["n_docs"]
+    idf = idf_column(query_stats(index, []).n_docs)
     doc_terms = (
         index.postings.where(F.col("doc_id") == int(doc_id)).select("term", "tf")
-    )
-    idf_col = F.log1p(
-        (F.lit(n_docs) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
     )
     wl = F.length("term")
     gate = (F.col("tf") >= min_tf) & (F.col("df") >= min_df) & (wl >= min_wl)
@@ -362,7 +369,7 @@ def _mlt_term_frame(
         index.term_stats.select("term", "df")
         .join(F.broadcast(doc_terms), "term")
         .where(gate)
-        .withColumn("w", F.col("tf") * idf_col)
+        .withColumn("w", F.col("tf") * idf)
         .orderBy(F.desc("w"), F.asc("term"))
         .limit(max_query_terms)
     )
@@ -418,12 +425,7 @@ def mlt_topk(
     if not terms:
         return spark.createDataFrame([], "doc_id long, conv_id string, score double")
     scored = _suppress(bm25_scores_terms(spark, index, terms, cfg), exclude_docs)
-    top = (
-        scored.where(F.col("doc_id") != int(doc_id))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    return resolve_conv_ids(index, top)
+    return rank_topk(index, scored.where(F.col("doc_id") != int(doc_id)), k)
 
 
 def _expansion_topk(
@@ -437,8 +439,7 @@ def _expansion_topk(
     if not terms:
         return spark.createDataFrame([], "doc_id long, conv_id string, score double")
     scored = _suppress(bm25_scores_terms(spark, index, terms, cfg), exclude_docs)
-    top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return resolve_conv_ids(index, top)
+    return rank_topk(index, scored, k)
 
 
 def prefix_topk(
@@ -573,14 +574,9 @@ def spellcheck_collate(
             collated.append(row["term"])
     if not collated:
         return spark.createDataFrame([], "doc_id long, conv_id string, score double")
-    from .score import bm25_scores_terms, resolve_conv_ids
-
-    top = (
-        bm25_scores_terms(spark, index, sorted(set(collated)), cfg)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+    return rank_topk(
+        index, bm25_scores_terms(spark, index, sorted(set(collated)), cfg), k
     )
-    return resolve_conv_ids(index, top)
 
 
 def synonym_topk(
@@ -607,9 +603,10 @@ def synonym_topk(
     Plan shape: the member->group map is request-sized and broadcasts;
     postings are dictionary-filtered to ALL member terms in one isin
     scan; ONE (doc, group) aggregation merges member postings (tf sum;
-    dl is per-doc constant so max is exact); group df comes from the
-    same broadcast idf frame (max over members, computed on the tiny
-    side); the per-doc fold and top-k are the standard scorer's.
+    dl is per-doc constant so max is exact); group df is the max over
+    members of the query's one stats read (plus one collected row per
+    phrase member) and its idf is the scorers' ``idf_scalar``; the
+    per-doc fold and top-k are the standard scorer's.
 
     MULTI-WORD members ("ml" -> "machine learning") take the
     SynonymGraphFilter path: a phrase member contributes its exact
@@ -634,8 +631,12 @@ def synonym_topk(
     gmap = F.broadcast(
         spark.createDataFrame(sorted(set(rows)), "grp string, term string")
     )
-    crow = index.corpus.first()
-    n_docs, avgdl = crow["n_docs"], float(crow["avgdl"])
+    stats = query_stats(index, [m for _, m in rows])
+    # group df = max member df (SynonymQuery's docFreq)
+    group_df: dict[str, int] = {}
+    for g, m in rows:
+        if m in stats.df:
+            group_df[g] = max(group_df.get(g, 0), stats.df[m])
     members = sorted({m for _, m in rows})
     # per-doc (grp, tf, dl) legs: single-word members merge postings...
     legs = (
@@ -648,13 +649,12 @@ def synonym_topk(
             F.col("dl").cast("long").alias("dl"),
         )
     )
-    # ...and each phrase member contributes its occurrence counts
-    df_legs = index.term_stats.join(gmap, "term").select(
-        "grp", F.col("df").cast("long").alias("df")
-    )
+    # ...and each phrase member contributes its occurrence counts, its
+    # df leg being the number of docs holding the phrase
     if phrase_members:
         from .query import _phrase_counts
 
+        phrase_dfs = []
         for anchor, mts in sorted(
             {(a, tuple(ts)) for a, ts in phrase_members}
         ):
@@ -668,37 +668,28 @@ def synonym_topk(
             # positional-intersection kernel runs once per phrase
             pc = pc.persist()
             legs = legs.unionByName(pc.select("grp", "doc_id", "tf", "dl"))
-            df_legs = df_legs.unionByName(
-                pc.groupBy("grp").agg(
-                    F.count(F.lit(1)).cast("long").alias("df")
-                )
+            phrase_dfs.append(
+                pc.groupBy("grp").agg(F.count(F.lit(1)).cast("long").alias("df"))
             )
-    # group df = max member df (SynonymQuery's docFreq), on the tiny side
-    gidf = (
-        df_legs.groupBy("grp")
-        .agg(F.max("df").alias("df"))
-        .withColumn(
-            "idf",
-            F.log1p(
-                (F.lit(n_docs) - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ),
-        )
-    )
-    k1, b = float(cfg.k1), float(cfg.b)
-    merged = (
+        for r in reduce(DataFrame.unionByName, phrase_dfs).collect():
+            group_df[r["grp"]] = max(group_df.get(r["grp"], 0), r["df"])
+    scored = (
         legs.groupBy("doc_id", "grp")
         .agg(F.sum("tf").alias("tf"), F.max("dl").alias("dl"))
-        .join(F.broadcast(gidf.select("grp", "idf")), "grp")
-    )
-    from .score import bm25_term_score, resolve_conv_ids, sorted_term_fold
-
-    scored = (
-        merged.withColumn("term_score", bm25_term_score(k1, b, avgdl))
         .withColumnRenamed("grp", "term")
+        .where(F.col("term").isin(sorted(group_df)))
+        .withColumn(
+            "term_score",
+            bm25_term_score(
+                F.col("tf"),
+                term_lookup(
+                    {g: idf_scalar(stats.n_docs, d) for g, d in group_df.items()}
+                ),
+                stats.avgdl,
+                cfg,
+            ),
+        )
         .groupBy("doc_id")
         .agg(sorted_term_fold().alias("score"))
     )
-    scored = _suppress(scored, exclude_docs)
-    top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return resolve_conv_ids(index, top)
+    return rank_topk(index, _suppress(scored, exclude_docs), k)

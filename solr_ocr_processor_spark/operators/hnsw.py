@@ -494,15 +494,19 @@ def merge_hnsw_tiered(
 
     Merged segments get the content-addressed id ``-(min id in the
     group) - 1``: deterministic across replays (re-running after a
-    crash re-plans the same groups and overwrites the same partition),
-    disjoint from the non-negative id-range namespace new flushes
-    mint, and stable under re-merging (the member holding the min id
-    is replaced in the same operation that reuses its key). Ordering
-    per group: write the merged partition (dynamic overwrite), THEN
-    delete member partitions — a crash in between leaves duplicate
-    candidates, which the query tail's per-id dedup tolerates and the
-    re-run heals. Partition deletes are driver-local filesystem ops
-    (same local/NFS constraint as :func:`merge_hnsw_segments`).
+    crash re-plans the same groups and overwrites the same partition)
+    and disjoint from the non-negative id-range namespace new flushes
+    mint. A re-merge whose group holds an earlier merged segment with
+    the min id reuses that member's id: the dynamic overwrite replaces
+    the partition in place (its rows are read by the same job, before
+    the commit) and the member clean-up skips it. Ordering per group:
+    write the merged partition, THEN delete the other member
+    partitions — a crash in between leaves duplicate candidates, which
+    the query tail's per-id dedup tolerates. A re-run heals them when
+    the members still form the same plan group; after an id-reusing
+    re-merge they may not, and the duplicates stay. Partition deletes
+    are driver-local filesystem ops (same local/NFS constraint as
+    :func:`merge_hnsw_segments`).
 
     Returns the number of merge groups executed (0 = nothing to do)."""
     import shutil
@@ -534,7 +538,9 @@ def merge_hnsw_tiered(
             .partitionBy("seg")
             .parquet(store.path("nodes"))
         )
-        for s in members:
+        # a re-merge can reuse a member's id (the member holding the
+        # min id): that partition now holds the merged segment
+        for s in (m for m in members if m != new_seg):
             for table in ("nodes", "edges"):
                 shutil.rmtree(
                     os.path.join(store.path(table), f"seg={s}"),

@@ -40,8 +40,15 @@ from .score import (
     _suppress,
     bm25_scores,
     bm25_scores_terms,
+    bm25_term_score,
     bm25_topk,
-    resolve_conv_ids,
+    doc_scores,
+    phrase_idf,
+    query_stats,
+    rank_topk,
+    sorted_term_fold,
+    term_lookup,
+    term_scores,
 )
 
 
@@ -67,13 +74,7 @@ def conjunctive_topk(
         return spark.createDataFrame([], "doc_id long, conv_id string, score double")
     scored = bm25_scores(spark, index, query, cfg=cfg, with_match_count=True)
     scored = _suppress(scored, exclude_docs)
-    top = (
-        scored.where(F.col("n_matched") == len(terms))
-        .select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    return resolve_conv_ids(index, top)
+    return rank_topk(index, scored.where(F.col("n_matched") == len(terms)), k)
 
 
 def mm_topk(
@@ -102,13 +103,7 @@ def mm_topk(
     m = min(max(1, int(mm)), len(terms))
     scored = bm25_scores_terms(spark, index, terms, cfg, with_match_count=True)
     scored = _suppress(scored, exclude_docs)
-    top = (
-        scored.where(F.col("n_matched") >= m)
-        .select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    return resolve_conv_ids(index, top)
+    return rank_topk(index, scored.where(F.col("n_matched") >= m), k)
 
 
 def boosted_topk(
@@ -235,9 +230,7 @@ def boolean_not_topk(
             .distinct()
         )
         scored = scored.join(neg_docs, "doc_id", "left_anti")
-    scored = _suppress(scored, exclude_docs)
-    top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return resolve_conv_ids(index, top)
+    return rank_topk(index, _suppress(scored, exclude_docs), k)
 
 
 _ANCHOR_SHIFT = 30  # doc-local positions < 2^30 (a 1B-token doc);
@@ -250,6 +243,34 @@ _ANCHOR_SHIFT = 30  # doc-local positions < 2^30 (a 1B-token doc);
 # prune is skipped — an all-stopword phrase has ~every range as a
 # candidate anyway, so the broadcast would cost more than it saves.
 _PRUNE_MAX_RANGES = 4_000_000
+
+
+def _block_range_prune(
+    index: Index, sub: DataFrame, terms: list[str], bidx, dfs=None
+) -> DataFrame:
+    """Keep only the posting rows whose doc's range holds a block of
+    EVERY term (see :func:`_phrase_counts`). ``dfs``: callers that
+    already read the query stats pass the terms' doc frequencies, so
+    the gate costs zero extra Spark jobs."""
+    if dfs is None:
+        dfs = query_stats(index, terms).df
+    if min((dfs.get(t, 0) for t in terms), default=0) > _PRUNE_MAX_RANGES:
+        return sub
+    cand = (
+        bidx.blocks.where(F.col("term").isin(terms))
+        .select("term", "range_id")
+        .distinct()
+        .groupBy("range_id")
+        .agg(F.count(F.lit(1)).alias("_nt"))
+        .where(F.col("_nt") == len(terms))
+        .select("range_id")
+    )
+    rs = int(bidx.cfg.range_size)
+    return (
+        sub.withColumn("range_id", (F.col("doc_id") / F.lit(rs)).cast("long"))
+        .join(F.broadcast(cand), "range_id")
+        .drop("range_id")
+    )
 
 
 def _phrase_counts(
@@ -299,32 +320,7 @@ def _phrase_counts(
         "term", "doc_id", "tf", "dl", "pos_bytes"
     )
     if bidx is not None:
-        # ``dfs``: callers that already collected the query terms' doc
-        # frequencies (phrase_topk does, for sum_idf) pass them in so
-        # the prune gate costs zero extra Spark jobs.
-        if dfs is None:
-            dfs = {
-                r["term"]: r["df"]
-                for r in index.term_stats.where(F.col("term").isin(terms)).collect()
-            }
-        if min((dfs.get(t, 0) for t in terms), default=0) <= _PRUNE_MAX_RANGES:
-            cand = (
-                bidx.blocks.where(F.col("term").isin(terms))
-                .select("term", "range_id")
-                .distinct()
-                .groupBy("range_id")
-                .agg(F.count(F.lit(1)).alias("_nt"))
-                .where(F.col("_nt") == len(terms))
-                .select("range_id")
-            )
-            rs = int(bidx.cfg.range_size)
-            sub = (
-                sub.withColumn(
-                    "range_id", (F.col("doc_id") / F.lit(rs)).cast("long")
-                )
-                .join(F.broadcast(cand), "range_id")
-                .drop("range_id")
-            )
+        sub = _block_range_prune(index, sub, terms, bidx, dfs)
     sub = sub.repartition(num_partitions, "doc_id")
 
     def _anchors(batches):
@@ -445,29 +441,7 @@ def _proximity_counts(
     elif bidx is not None:
         # positions don't matter for the range prune: every term must
         # still appear somewhere in the doc's 4096-doc range
-        if dfs is None:
-            dfs = {
-                r["term"]: r["df"]
-                for r in index.term_stats.where(F.col("term").isin(terms)).collect()
-            }
-        if min((dfs.get(t, 0) for t in terms), default=0) <= _PRUNE_MAX_RANGES:
-            cand = (
-                bidx.blocks.where(F.col("term").isin(terms))
-                .select("term", "range_id")
-                .distinct()
-                .groupBy("range_id")
-                .agg(F.count(F.lit(1)).alias("_nt"))
-                .where(F.col("_nt") == len(terms))
-                .select("range_id")
-            )
-            rs = int(bidx.cfg.range_size)
-            sub = (
-                sub.withColumn(
-                    "range_id", (F.col("doc_id") / F.lit(rs)).cast("long")
-                )
-                .join(F.broadcast(cand), "range_id")
-                .drop("range_id")
-            )
+        sub = _block_range_prune(index, sub, terms, bidx, dfs)
     sub = sub.repartition(num_partitions, "doc_id")
     max_slack = k - 1 + slop  # chain span bound: p_{k-1} - p0 <= this
 
@@ -558,41 +532,18 @@ def proximity_topk(
     empty = spark.createDataFrame([], "doc_id long, conv_id string, score double")
     if not terms:
         return empty
-    crow = index.corpus.first()
-    n_docs, avgdl = int(crow["n_docs"]), float(crow["avgdl"])
-    dfs = {
-        r["term"]: r["df"]
-        for r in index.term_stats.where(F.col("term").isin(list(set(terms)))).collect()
-    }
-    if any(t not in dfs for t in terms):
+    stats = query_stats(index, terms)
+    sum_idf = phrase_idf(stats, terms)
+    if sum_idf is None:
         return empty
-    import math
-
-    sum_idf = sum(
-        math.log1p((n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5)) for t in terms
-    )
-    k1, b = float(cfg.k1), float(cfg.b)
     counts = _suppress(
-        _proximity_counts(index, terms, slop, bidx, dfs=dfs), exclude_docs
+        _proximity_counts(index, terms, slop, bidx, dfs=stats.df), exclude_docs
     )
-    top = (
-        counts.withColumn(
-            "score",
-            F.lit(sum_idf)
-            * (
-                (F.col("prox_tf") * F.lit(k1 + 1.0))
-                / (
-                    F.col("prox_tf")
-                    + F.lit(k1)
-                    * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-                )
-            ),
-        )
-        .select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+    scored = counts.withColumn(
+        "score",
+        bm25_term_score(F.col("prox_tf"), F.lit(sum_idf), stats.avgdl, cfg),
     )
-    return resolve_conv_ids(index, top)
+    return rank_topk(index, scored, k)
 
 
 def rerank_topk(
@@ -631,53 +582,31 @@ def rerank_topk(
         raise ValueError(f"weight must be >= 0, got {weight}")
     if k > window:
         raise ValueError(f"k ({k}) must not exceed window ({window})")
-    cand = bm25_topk(spark, index, query, k=window, cfg=cfg,
-                     exclude_docs=exclude_docs)
+    qterms = query_terms(query, cfg)
     terms = [t for _, t, _, _ in tokenize_text(rerank_phrase, cfg)]
-    boosted = cand.withColumn("_boost", F.lit(0.0))
-    if terms:
-        dfs = {
-            r["term"]: r["df"]
-            for r in index.term_stats.where(
-                F.col("term").isin(list(set(terms)))
-            ).collect()
-        }
-        if all(t in dfs for t in terms):
-            import math
-
-            crow = index.corpus.first()
-            n_docs, avgdl = int(crow["n_docs"]), float(crow["avgdl"])
-            sum_idf = sum(
-                math.log1p((n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5))
-                for t in terms
-            )
-            k1, b = float(cfg.k1), float(cfg.b)
-            prox = _proximity_counts(
-                index, terms, slop, dfs=dfs, candidates=cand
-            ).withColumn(
-                "_boost",
-                F.lit(sum_idf)
-                * (F.col("prox_tf") * F.lit(k1 + 1.0))
-                / (
-                    F.col("prox_tf")
-                    + F.lit(k1)
-                    * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-                ),
-            )
-            boosted = cand.join(
-                prox.select("doc_id", "_boost"), "doc_id", "left"
-            ).withColumn("_boost", F.coalesce(F.col("_boost"), F.lit(0.0)))
-    return (
-        boosted.select(
-            "doc_id",
-            "conv_id",
-            (F.col("score") + F.lit(float(weight)) * F.col("_boost")).alias(
-                "score"
-            ),
-        )
+    stats = query_stats(index, qterms + terms)
+    cand = (
+        _suppress(doc_scores(index, stats, qterms, cfg), exclude_docs)
         .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+        .limit(window)
     )
+    boost = F.lit(0.0)
+    sum_idf = phrase_idf(stats, terms)
+    if sum_idf is not None:
+        prox = _proximity_counts(
+            index, terms, slop, dfs=stats.df, candidates=cand
+        ).select(
+            "doc_id",
+            bm25_term_score(
+                F.col("prox_tf"), F.lit(sum_idf), stats.avgdl, cfg
+            ).alias("_boost"),
+        )
+        cand = cand.join(prox, "doc_id", "left")
+        boost = F.coalesce(F.col("_boost"), F.lit(0.0))
+    scored = cand.select(
+        "doc_id", (F.col("score") + F.lit(float(weight)) * boost).alias("score")
+    )
+    return rank_topk(index, scored, k)
 
 
 def phrase_match(
@@ -720,43 +649,18 @@ def phrase_topk(
     empty = spark.createDataFrame([], "doc_id long, conv_id string, score double")
     if not terms:
         return empty
-    crow = index.corpus.first()
-    n_docs, avgdl = int(crow["n_docs"]), float(crow["avgdl"])
-    # Σ idf over the phrase's terms (duplicated terms count twice, as in
-    # Lucene) — tiny driver-side scalar from the dictionary.
-    dfs = {
-        r["term"]: r["df"]
-        for r in index.term_stats.where(F.col("term").isin(list(set(terms)))).collect()
-    }
-    if any(t not in dfs for t in terms):
+    stats = query_stats(index, terms)
+    sum_idf = phrase_idf(stats, terms)
+    if sum_idf is None:
         return empty  # a phrase containing an unseen term matches nothing
-    import math
-
-    sum_idf = sum(
-        math.log1p((n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5)) for t in terms
-    )
-    k1, b = float(cfg.k1), float(cfg.b)
     counts = _suppress(
-        _phrase_counts(index, terms, bidx, dfs=dfs), exclude_docs
+        _phrase_counts(index, terms, bidx, dfs=stats.df), exclude_docs
     )  # carries dl — no doc_meta join
-    top = (
-        counts.withColumn(
-            "score",
-            F.lit(sum_idf)
-            * (
-                (F.col("phrase_tf") * F.lit(k1 + 1.0))
-                / (
-                    F.col("phrase_tf")
-                    + F.lit(k1)
-                    * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-                )
-            ),
-        )
-        .select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+    scored = counts.withColumn(
+        "score",
+        bm25_term_score(F.col("phrase_tf"), F.lit(sum_idf), stats.avgdl, cfg),
     )
-    return resolve_conv_ids(index, top)
+    return rank_topk(index, scored, k)
 
 
 # --- filter queries (Solr fq=) ----------------------------------------------
@@ -838,12 +742,7 @@ def filtered_topk(
         cond = cond & (col <= F.lit(hi))
     allowed = index.doc_meta.where(cond).select("doc_id")
     scored = _suppress(bm25_scores(spark, index, query, cfg=cfg), exclude_docs)
-    top = (
-        scored.join(allowed, "doc_id", "left_semi")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    return resolve_conv_ids(index, top)
+    return rank_topk(index, scored.join(allowed, "doc_id", "left_semi"), k)
 
 
 def pf_topk(
@@ -864,9 +763,10 @@ def pf_topk(
     lever for multi-word queries and the reference hands such params
     straight to Solr (app/process/solr.go:48-49).
 
-    Plan: the disjunctive leg is the standard dictionary-broadcast
-    scoring; the phrase leg reuses the positional anchor intersection
-    (_phrase_counts, block-range pruned when a block index is passed);
+    Plan: one stats read serves both legs; the disjunctive leg is the
+    standard term-pruned scoring; the phrase leg reuses the positional
+    anchor intersection (_phrase_counts, block-range pruned when a
+    block index is passed);
     the two meet in a doc_id LEFT join where the phrase side holds
     only phrase-matching docs — far smaller than the match set, never
     corpus-wide.
@@ -874,44 +774,24 @@ def pf_topk(
     terms = [t for _, t, _, _ in tokenize_text(query, cfg)]
     if not terms:
         return spark.createDataFrame([], "doc_id long, conv_id string, score double")
-    base = _suppress(bm25_scores(spark, index, query, cfg=cfg), exclude_docs)
-    crow = index.corpus.first()
-    n_docs, avgdl = int(crow["n_docs"]), float(crow["avgdl"])
-    dfs = {
-        r["term"]: r["df"]
-        for r in index.term_stats.where(
-            F.col("term").isin(list(set(terms)))
-        ).collect()
-    }
-    scored = base
-    if all(t in dfs for t in terms):
-        import math
-
-        sum_idf = sum(
-            math.log1p((n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5)) for t in terms
-        )
-        k1, b = float(cfg.k1), float(cfg.b)
-        pscore = _phrase_counts(index, terms, bidx, dfs=dfs).select(
+    stats = query_stats(index, terms)
+    scored = _suppress(doc_scores(index, stats, terms, cfg), exclude_docs)
+    sum_idf = phrase_idf(stats, terms)
+    if sum_idf is not None:
+        pscore = _phrase_counts(index, terms, bidx, dfs=stats.df).select(
             "doc_id",
-            (
-                F.lit(sum_idf)
-                * (F.col("phrase_tf") * F.lit(k1 + 1.0))
-                / (
-                    F.col("phrase_tf")
-                    + F.lit(k1)
-                    * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-                )
+            bm25_term_score(
+                F.col("phrase_tf"), F.lit(sum_idf), stats.avgdl, cfg
             ).alias("pscore"),
         )
-        scored = base.join(pscore, "doc_id", "left").select(
+        scored = scored.join(pscore, "doc_id", "left").select(
             "doc_id",
             (
                 F.col("score")
                 + F.lit(float(pf_weight)) * F.coalesce(F.col("pscore"), F.lit(0.0))
             ).alias("score"),
         )
-    top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return resolve_conv_ids(index, top)
+    return rank_topk(index, scored, k)
 
 
 def pf2_topk(
@@ -939,46 +819,27 @@ def pf2_topk(
     :func:`pf_topk`; a bigram with an unindexed term contributes
     nothing (its phrase can match no doc).
 
-    Plan: the disjunctive leg is the standard dictionary-broadcast
-    scoring; each bigram leg is one positional anchor intersection
-    (:func:`_phrase_counts`, block-range pruned when ``bidx`` is
-    passed) whose output is only the bigram-matching docs; the legs
+    Plan: one stats read serves every leg; the disjunctive leg is the
+    standard term-pruned scoring; each bigram leg is one positional
+    anchor intersection (:func:`_phrase_counts`, block-range pruned
+    when ``bidx`` is passed) whose output is only the bigram-matching docs; the legs
     union (|bigrams| small frames) into ONE doc_id-keyed sum before a
     LEFT join to the base — never corpus-wide."""
     terms = [t for _, t, _, _ in tokenize_text(query, cfg)]
     if not terms:
         return spark.createDataFrame([], "doc_id long, conv_id string, score double")
-    base = _suppress(bm25_scores(spark, index, query, cfg=cfg), exclude_docs)
-    bigrams = list(zip(terms, terms[1:]))
-    crow = index.corpus.first()
-    n_docs, avgdl = int(crow["n_docs"]), float(crow["avgdl"])
-    dfs = {
-        r["term"]: r["df"]
-        for r in index.term_stats.where(
-            F.col("term").isin(list(set(terms)))
-        ).collect()
-    }
-    import math
-
-    k1, b = float(cfg.k1), float(cfg.b)
+    stats = query_stats(index, terms)
+    base = _suppress(doc_scores(index, stats, terms, cfg), exclude_docs)
     legs = []
-    for t0, t1 in bigrams:
-        if t0 not in dfs or t1 not in dfs:
+    for t0, t1 in zip(terms, terms[1:]):
+        sum_idf = phrase_idf(stats, [t0, t1])
+        if sum_idf is None:
             continue
-        sum_idf = sum(
-            math.log1p((n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5)) for t in (t0, t1)
-        )
         legs.append(
-            _phrase_counts(index, [t0, t1], bidx, dfs=dfs).select(
+            _phrase_counts(index, [t0, t1], bidx, dfs=stats.df).select(
                 "doc_id",
-                (
-                    F.lit(sum_idf)
-                    * (F.col("phrase_tf") * F.lit(k1 + 1.0))
-                    / (
-                        F.col("phrase_tf")
-                        + F.lit(k1)
-                        * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-                    )
+                bm25_term_score(
+                    F.col("phrase_tf"), F.lit(sum_idf), stats.avgdl, cfg
                 ).alias("p"),
             )
         )
@@ -1007,8 +868,7 @@ def pf2_topk(
                 + F.lit(float(pf2_weight)) * F.coalesce(F.col("p2"), F.lit(0.0))
             ).alias("score"),
         )
-    top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return resolve_conv_ids(index, top)
+    return rank_topk(index, scored, k)
 
 
 def term_boost_topk(
@@ -1027,9 +887,8 @@ def term_boost_topk(
 
     Duplicate normalized terms ADD their boosts (Lucene: duplicate
     SHOULD clauses each contribute, which for the same term equals one
-    clause at the summed weight). The weight rides the same broadcast
-    dictionary join as idf; the fold stays the sorted-term
-    deterministic sum, so scores are bit-stable across partitionings.
+    clause at the summed weight). Scored by :func:`_weighted_topk`, so
+    scores are bit-stable across partitionings.
     """
     weights: dict[str, float] = {}
     for tok in query.split():
@@ -1040,34 +899,30 @@ def term_boost_topk(
             raise ValueError(f"bad boost in {tok!r}") from e
         for t in query_terms(word, cfg):
             weights[t] = weights.get(t, 0.0) + wt
-    terms = sorted(weights)
-    if not terms:
+    if not weights:
         return spark.createDataFrame([], "doc_id long, conv_id string, score double")
-    from .score import _query_idf, bm25_term_score, sorted_term_fold
+    return _weighted_topk(index, weights, k, cfg, exclude_docs)
 
-    qidf, _, avgdl = _query_idf(spark, index, terms)
-    wdf = spark.createDataFrame(
-        [(t, float(weights[t])) for t in terms], "term string, w double"
-    )
-    per_term = (
-        index.postings.where(F.col("term").isin(terms))
-        .join(F.broadcast(qidf.join(wdf, "term")), "term")
-        .select("term", "doc_id", "tf", "dl", "idf", "w")
-    )
+
+def _weighted_topk(
+    index: Index,
+    weights: dict[str, float],
+    k: int,
+    cfg: IndexConfig,
+    exclude_docs: DataFrame | None,
+) -> DataFrame:
+    """BM25 top-k with each term's clause score multiplied by its query
+    weight — the per-term boost and RM3 rescore shape: the weight rides
+    the same literal lookup as idf, and the fold stays the sorted-term
+    deterministic sum."""
+    terms = sorted(weights)
+    per_term = term_scores(index, query_stats(index, terms), terms, cfg)
     scored = (
-        per_term.withColumn(
-            "term_score",
-            bm25_term_score(float(cfg.k1), float(cfg.b), avgdl) * F.col("w"),
-        )
+        per_term.withColumn("term_score", F.col("term_score") * term_lookup(weights))
         .groupBy("doc_id")
         .agg(sorted_term_fold().alias("score"))
     )
-    top = (
-        _suppress(scored, exclude_docs)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    return resolve_conv_ids(index, top)
+    return rank_topk(index, _suppress(scored, exclude_docs), k)
 
 
 def frange_topk(
@@ -1111,12 +966,7 @@ def frange_topk(
         cond = cond & (val <= F.lit(float(upper)))
     allowed = meta.where(cond).select("doc_id")
     scored = _suppress(bm25_scores(spark, index, query, cfg=cfg), exclude_docs)
-    top = (
-        scored.join(allowed, "doc_id", "left_semi")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    return resolve_conv_ids(index, top)
+    return rank_topk(index, scored.join(allowed, "doc_id", "left_semi"), k)
 
 
 class JoinSyntaxError(ValueError):
@@ -1190,12 +1040,7 @@ def join_topk(
         "doc_id"
     )
     scored = _suppress(bm25_scores(spark, index, query, cfg=cfg), exclude_docs)
-    top = (
-        scored.join(allowed, "doc_id", "left_semi")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    return resolve_conv_ids(index, top)
+    return rank_topk(index, scored.join(allowed, "doc_id", "left_semi"), k)
 
 
 def export_sorted(
@@ -1360,11 +1205,12 @@ def ltr_topk(
         return spark.createDataFrame(
             [], "doc_id long, conv_id string, bm25 double, ltr_score double"
         )
-    scored = bm25_scores_terms(
-        spark, index, terms, cfg, with_match_count=True, with_dl=True
+    stats = query_stats(index, terms)
+    scored = doc_scores(
+        index, stats, terms, cfg, with_match_count=True, with_dl=True
     )
     cands = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(rerank_docs)
-    avgdl = float(index.corpus.first()["avgdl"])
+    avgdl = stats.avgdl
     w1, w2, w3 = (float(w) for w in weights)
     model = (
         F.lit(w1) * F.col("score")
@@ -1417,11 +1263,12 @@ def ltr_features(
             "doc_id long, conv_id string, f_bm25 double, "
             "f_match_frac double, f_dl_ratio double",
         )
-    scored = bm25_scores_terms(
-        spark, index, terms, cfg, with_match_count=True, with_dl=True
+    stats = query_stats(index, terms)
+    scored = doc_scores(
+        index, stats, terms, cfg, with_match_count=True, with_dl=True
     )
     cands = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(rerank_docs)
-    avgdl = float(index.corpus.first()["avgdl"])
+    avgdl = stats.avgdl
     out = cands.select(
         "doc_id",
         F.round("score", 6).alias("f_bm25"),
@@ -1625,8 +1472,8 @@ def rm3_topk(
     driver); their postings are an isin-pruned point read (fb_docs
     doc_ids — row-group pruning); the weight census aggregates
     |fb vocabulary| rows and only fb_terms survive the
-    TakeOrderedAndProject; the rescore is ONE dictionary-broadcast
-    weighted pass over |q|+fb_terms terms with the engine's sorted
+    TakeOrderedAndProject; the rescore is ONE term-pruned weighted
+    pass over |q|+fb_terms terms with the engine's sorted
     deterministic fold. Driver traffic: fb_docs ids + fb_terms rows,
     corpus-independent."""
     if not 0.0 <= orig_weight <= 1.0:
@@ -1670,30 +1517,7 @@ def rm3_topk(
         weights[r["term"]] = (
             (1.0 - float(orig_weight)) * r["w_int"] / float(wsum)
         )
-    terms = sorted(weights)
-    from .score import _query_idf, bm25_term_score, sorted_term_fold
-
-    qidf, _, avgdl = _query_idf(spark, index, terms)
-    wdf = spark.createDataFrame(
-        [(t, weights[t]) for t in terms], "term string, w double"
-    )
-    scored = (
-        index.postings.where(F.col("term").isin(terms))
-        .join(F.broadcast(qidf.join(wdf, "term")), "term")
-        .select("term", "doc_id", "tf", "dl", "idf", "w")
-        .withColumn(
-            "term_score",
-            bm25_term_score(float(cfg.k1), float(cfg.b), avgdl) * F.col("w"),
-        )
-        .groupBy("doc_id")
-        .agg(sorted_term_fold().alias("score"))
-    )
-    top = (
-        _suppress(scored, exclude_docs)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    return resolve_conv_ids(index, top)
+    return _weighted_topk(index, weights, k, cfg, exclude_docs)
 
 
 def lmdir_topk(
@@ -1731,22 +1555,20 @@ def lmdir_topk(
         return spark.createDataFrame(
             [], "doc_id long, conv_id string, score double"
         )
-    crow = index.corpus.first()
-    T = float(crow["total_tokens"])
     cfs = F.broadcast(
-        index.term_stats.where(F.col("term").isin(terms)).select("term", "cf")
+        index.term_stats.where(F.col("term").isin(terms))
+        .select("term", "cf")
+        .crossJoin(index.corpus.select("total_tokens"))
     )
     s_t = F.greatest(
         F.lit(0.0),
         F.log(
             F.lit(1.0)
-            + (F.col("tf").cast("double") * F.lit(T))
+            + (F.col("tf").cast("double") * F.col("total_tokens").cast("double"))
             / (F.lit(float(mu)) * F.col("cf").cast("double"))
         )
         + F.log(F.lit(float(mu)) / (F.col("dl").cast("double") + F.lit(float(mu)))),
     )
-    from .score import sorted_term_fold
-
     scored = (
         index.postings.where(F.col("term").isin(terms))
         .join(cfs, "term")
@@ -1754,12 +1576,7 @@ def lmdir_topk(
         .groupBy("doc_id")
         .agg(sorted_term_fold().alias("score"))
     )
-    top = (
-        _suppress(scored, exclude_docs)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    return resolve_conv_ids(index, top)
+    return rank_topk(index, _suppress(scored, exclude_docs), k)
 
 
 def payload_score_topk(
@@ -1847,23 +1664,12 @@ def span_near_topk(
     empty = spark.createDataFrame([], "doc_id long, conv_id string, score double")
     if len(terms) != 2:
         raise ValueError(f"span_near_topk needs exactly 2 terms, got {terms!r}")
-    crow = index.corpus.first()
-    n_docs, avgdl = int(crow["n_docs"]), float(crow["avgdl"])
-    dfs = {
-        r["term"]: r["df"]
-        for r in index.term_stats.where(
-            F.col("term").isin(list(set(terms)))
-        ).collect()
-    }
-    if any(t not in dfs for t in terms):
+    stats = query_stats(index, terms)
+    sum_idf = phrase_idf(stats, terms)
+    if sum_idf is None:
         return empty
-    import math
-
     from ..functions.tokenizer import flat_tokens
 
-    sum_idf = sum(
-        math.log1p((n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5)) for t in terms
-    )
     win = int(slop) + 1
     p0 = flat_tokens(index.postings.where(F.col("term") == terms[0])).select(
         "doc_id", F.col("token_pos").alias("pos0"), "dl"
@@ -1880,26 +1686,11 @@ def span_near_topk(
     counts = matched.groupBy("doc_id", "dl").agg(
         F.countDistinct("pos0").alias("span_tf")
     )
-    k1, b = float(cfg.k1), float(cfg.b)
-    top = (
-        _suppress(counts, exclude_docs)
-        .withColumn(
-            "score",
-            F.lit(sum_idf)
-            * (
-                (F.col("span_tf") * F.lit(k1 + 1.0))
-                / (
-                    F.col("span_tf")
-                    + F.lit(k1)
-                    * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-                )
-            ),
-        )
-        .select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+    scored = _suppress(counts, exclude_docs).withColumn(
+        "score",
+        bm25_term_score(F.col("span_tf"), F.lit(sum_idf), stats.avgdl, cfg),
     )
-    return resolve_conv_ids(index, top)
+    return rank_topk(index, scored, k)
 
 
 def topic_pull(

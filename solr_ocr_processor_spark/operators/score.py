@@ -4,13 +4,14 @@ The capability Solr + solr-ocrhighlighting performed for the reference
 (README.md:3-8): rank documents for a query and return per-hit word
 coordinates. Here:
 
-- ``bm25_topk``      — DataFrame-native scorer: broadcast the (tiny)
-  query-term idf table against the postings, column-math the tf
-  normalization, hash-aggregate per doc, global top-k. Catalyst plan:
-  broadcast hash join (no shuffle of postings beyond the one it was
-  built with) -> partial+final agg -> TakeOrderedAndProject (Spark
-  lowers orderBy+limit to per-partition heaps + driver merge — the
-  top-k never materializes a global sort).
+- ``bm25_topk``      — DataFrame-native scorer: one stats read (the
+  corpus row and the query terms' dictionary rows in one job), the
+  query-term idfs folded into the plan as a literal map, column-math
+  the tf normalization, hash-aggregate per doc, global top-k. Catalyst
+  plan: term-pruned posting scan (no join, no shuffle of postings
+  beyond the one it was built with) -> partial+final agg ->
+  TakeOrderedAndProject (Spark lowers orderBy+limit to per-partition
+  heaps + driver merge — the top-k never materializes a global sort).
 
 - ``highlights``     — join the winners' matched-term positions back to
   turn char ranges: per-turn (turn_idx, char_start, char_end) spans,
@@ -18,43 +19,126 @@ coordinates. Here:
 
 Scores are float64; ties break by doc_id ASC (Lucene convention,
 BASELINE.md). ``round_to`` exists only for oracle comparison plumbing.
+
+The scoring core every float BM25 query scorer over an Index shares:
+:func:`query_stats` (the one stats read; idf via
+functions/bm25.idf_scalar), :func:`bm25_term_score` (the one clause
+score), :func:`term_scores` / :func:`sorted_term_fold` /
+:func:`doc_scores` (the per-posting scan and the deterministic per-doc
+fold) and :func:`rank_topk` (the one (score DESC, doc_id ASC) top-k
+with its conv_id resolution).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, IndexConfig
+from ..functions.bm25 import idf_scalar
 from ..functions.tokenizer import query_terms
 from .build import Index
 
 
-def _query_idf(spark: SparkSession, index: Index, terms: list[str]):
-    """Tiny (term, idf) frame for the query — computed from term_stats
-    with the corpus N folded in. Returns (df_terms, n_docs, avgdl)."""
-    crow = index.corpus.first()
-    n_docs, avgdl = crow["n_docs"], float(crow["avgdl"])
-    tdf = spark.createDataFrame([(t,) for t in terms], "term string")
-    stats = index.term_stats.join(F.broadcast(tdf), "term", "inner")
-    idf_col = F.log1p(
-        (F.lit(n_docs) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+class QueryStats(NamedTuple):
+    """What a query needs from the corpus: its size, its average doc
+    length and the doc frequency of each query term the dictionary
+    holds (absent terms have no entry)."""
+
+    n_docs: int
+    avgdl: float
+    df: dict
+
+    def idf(self, term: str) -> float:
+        return idf_scalar(self.n_docs, self.df[term])
+
+
+def query_stats(index: Index, terms) -> QueryStats:
+    """The ONE statistics read of a query: the corpus row and the query
+    terms' dictionary rows union into a single collect — one Spark job,
+    whatever the scorer. Every BM25 idf a scorer uses comes from
+    :meth:`QueryStats.idf` (functions/bm25.idf_scalar), the spelling
+    the oracle and WAND share."""
+    rows = index.corpus.select(
+        F.lit(None).cast("string").alias("term"),
+        F.lit(None).cast("long").alias("df"),
+        F.col("n_docs").cast("long").alias("n_docs"),
+        F.col("avgdl").cast("double").alias("avgdl"),
     )
-    return stats.withColumn("idf", idf_col).select("term", "df", "idf"), n_docs, avgdl
-
-
-def bm25_term_score(k1: float, b: float, avgdl: float) -> "Column":
-    """The per-posting BM25 term-score expression over (tf, dl, idf)
-    columns. THE single home of the score contract's associativity:
-    idf * (num / denom), never (idf * num) / denom — required for
-    bit-identity with the numpy oracle paths (functions/bm25.tf_norm).
-    Shared by bm25_scores and operators/boolean.boolean_topk."""
-    return F.col("idf") * (
-        (F.col("tf") * F.lit(k1 + 1.0))
-        / (
-            F.col("tf")
-            + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
+    terms = sorted(set(terms))
+    if terms:
+        rows = rows.unionByName(
+            index.term_stats.where(F.col("term").isin(terms)).select(
+                "term",
+                F.col("df").cast("long").alias("df"),
+                F.lit(None).cast("long").alias("n_docs"),
+                F.lit(None).cast("double").alias("avgdl"),
+            )
         )
+    out = rows.collect()
+    crow = next(r for r in out if r["term"] is None)
+    return QueryStats(
+        int(crow["n_docs"]),
+        float(crow["avgdl"]),
+        {r["term"]: int(r["df"]) for r in out if r["term"] is not None},
+    )
+
+
+def term_lookup(values: dict) -> Column:
+    """Per-row lookup of a request-sized per-term constant (idf,
+    weight) keyed on the ``term`` column: a literal map folded into the
+    plan, so no lookup table is built, broadcast or joined. Rows must
+    be pre-filtered to the map's keys."""
+    if not values:
+        return F.lit(None).cast("double")
+    return F.element_at(
+        F.create_map(*(F.lit(x) for kv in sorted(values.items()) for x in kv)),
+        F.col("term"),
+    )
+
+
+def bm25_term_score(tf: Column, idf: Column, avgdl: float, cfg: IndexConfig) -> Column:
+    """The BM25 clause score over a ``tf`` and an ``idf`` column and the
+    posting's ``dl`` column. THE single home of the score contract's
+    associativity: idf * (num / denom), never (idf * num) / denom —
+    required for bit-identity with the numpy oracle paths
+    (functions/bm25.tf_norm). Every float BM25 scorer calls it: term
+    clauses with a per-term idf, phrase-shaped clauses (phrase, sloppy
+    phrase, span) with their phrase tf and Σ idf."""
+    k1, b = float(cfg.k1), float(cfg.b)
+    return idf * (
+        (tf * F.lit(k1 + 1.0))
+        / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl)))
+    )
+
+
+def phrase_idf(stats: QueryStats, terms: list[str]) -> float | None:
+    """Σ idf over a phrase's terms, a repeated term counted each time
+    (Lucene PhraseQuery weight); None for an empty phrase or one with a
+    term the dictionary lacks — such a phrase matches nothing."""
+    if not terms or any(t not in stats.df for t in terms):
+        return None
+    return sum(stats.idf(t) for t in terms)
+
+
+def term_scores(
+    index: Index, stats: QueryStats, terms, cfg: IndexConfig
+) -> DataFrame:
+    """(term, doc_id, tf, dl, term_score) for every posting of a query
+    term the dictionary holds — the scan every term-at-a-time scorer
+    folds. The isin filter reaches the parquet scan (row-group pruning);
+    posting rows already carry tf and dl, so there is NO per-(term, doc)
+    aggregation at query time."""
+    present = sorted(t for t in set(terms) if t in stats.df)
+    idf = term_lookup({t: stats.idf(t) for t in present})
+    return index.postings.where(F.col("term").isin(present)).select(
+        "term",
+        "doc_id",
+        "tf",
+        "dl",
+        bm25_term_score(F.col("tf"), idf, stats.avgdl, cfg).alias("term_score"),
     )
 
 
@@ -65,11 +149,53 @@ def sorted_term_fold() -> "Column":
     term_score) pairs by term and fold in that fixed order ->
     identical scores on every rerun, resume, or cluster size (the
     rank-identity requirement). Aggregate over ("term", "term_score")
-    columns; shared by bm25_scores and boolean_topk."""
+    columns; shared by every term-at-a-time scorer."""
     return F.aggregate(
         F.array_sort(F.collect_list(F.struct("term", "term_score"))),
         F.lit(0.0),
         lambda acc, s: acc + s["term_score"],
+    )
+
+
+def doc_scores(
+    index: Index,
+    stats: QueryStats,
+    terms,
+    cfg: IndexConfig,
+    with_match_count: bool = False,
+    with_dl: bool = False,
+) -> DataFrame:
+    """Disjunctive BM25 per doc over ``terms`` with the given stats:
+    (doc_id, score[, n_matched][, dl]). :func:`bm25_scores_terms` is
+    this plus its own stats read; scorers that already hold the stats
+    of a wider term set call it directly."""
+    aggs = [sorted_term_fold().alias("score")]
+    if with_match_count:
+        aggs.append(F.count(F.lit(1)).cast("int").alias("n_matched"))
+    if with_dl:
+        aggs.append(F.max("dl").cast("long").alias("dl"))
+    return term_scores(index, stats, terms, cfg).groupBy("doc_id").agg(*aggs)
+
+
+def rank_topk(index, scored: DataFrame, k: int, start: int = 0) -> DataFrame:
+    """THE (score DESC, doc_id ASC) top-k with conv_id resolution:
+    rows [start, start+k) of ``scored`` (doc_id, score) as (doc_id,
+    conv_id, score). Spark lowers orderBy+offset+limit to
+    TakeOrderedAndProject (per-partition heaps + driver merge — the
+    global sort never materializes), and conv_id joins only the k
+    surviving rows (late materialization: never a corpus-wide doc_meta
+    shuffle). ``index`` is anything with a ``doc_meta`` frame (Index,
+    BlockIndex)."""
+    top = (
+        scored.select("doc_id", "score")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .offset(start)
+        .limit(k)
+    )
+    return (
+        top.join(index.doc_meta.select("doc_id", "conv_id"), "doc_id")
+        .select("doc_id", "conv_id", "score")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
     )
 
 
@@ -131,34 +257,9 @@ def bm25_scores_terms(
             + (", dl long" if with_dl else "")
         )
         return spark.createDataFrame([], schema)
-    qidf, _, avgdl = _query_idf(spark, index, terms)
-
-    k1, b = float(cfg.k1), float(cfg.b)
-    # Broadcast-join the tiny query-term table against the POSTING
-    # table (dictionary pre-filter: only matching term rows survive
-    # the scan — with an isin filter so parquet row groups prune too).
-    # Posting rows already carry tf and dl, so there is NO per-(term,
-    # doc) aggregation at query time at all.
-    per_term = (
-        index.postings.where(F.col("term").isin(terms))
-        .join(F.broadcast(qidf), "term")
-        .select("term", "doc_id", "tf", "dl", "idf")
+    return doc_scores(
+        index, query_stats(index, terms), terms, cfg, with_match_count, with_dl
     )
-    aggs = [
-        sorted_term_fold().alias("score"),
-        F.count(F.lit(1)).cast("int").alias("n_matched"),
-    ]
-    if with_dl:
-        aggs.append(F.max("dl").cast("long").alias("dl"))
-    scored = (
-        per_term
-        .withColumn("term_score", bm25_term_score(k1, b, avgdl))
-        .groupBy("doc_id")
-        .agg(*aggs)
-    )
-    if not with_match_count:
-        scored = scored.drop("n_matched")
-    return scored
 
 
 def _suppress(scored: DataFrame, exclude_docs: DataFrame | None) -> DataFrame:
@@ -171,17 +272,6 @@ def _suppress(scored: DataFrame, exclude_docs: DataFrame | None) -> DataFrame:
         return scored
     return scored.join(
         exclude_docs.select("doc_id").distinct(), "doc_id", "left_anti"
-    )
-
-
-def resolve_conv_ids(index: Index, topk: DataFrame) -> DataFrame:
-    """Join conv_id onto a K-ROW result — the small side broadcasts,
-    doc_meta is probed, nothing corpus-sized shuffles. Re-applies the
-    (score desc, doc_id asc) contract after the join."""
-    return (
-        topk.join(index.doc_meta.select("doc_id", "conv_id"), "doc_id")
-        .select("doc_id", "conv_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
     )
 
 
@@ -204,13 +294,8 @@ def bm25_topk(
     TakeOrderedAndProject (per-partition (start+k)-row heaps), and the
     (score DESC, doc_id ASC) total order makes pages stable across
     requests — no cursor state."""
-    top = (
-        _suppress(bm25_scores(spark, index, query, cfg), exclude_docs)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .offset(start)
-        .limit(k)
-    )
-    return resolve_conv_ids(index, top)
+    scored = _suppress(bm25_scores(spark, index, query, cfg), exclude_docs)
+    return rank_topk(index, scored, k, start)
 
 
 def bm25_cursor_page(
@@ -250,8 +335,7 @@ def bm25_cursor_page(
             (F.col("score") < F.lit(s))
             | ((F.col("score") == F.lit(s)) & (F.col("doc_id") > F.lit(d)))
         )
-    top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return resolve_conv_ids(index, top)
+    return rank_topk(index, scored, k)
 
 
 def highlights(
@@ -653,27 +737,23 @@ def explain_scores(
     )
     if not terms:
         return spark.createDataFrame([], empty_schema)
-    qidf, _, avgdl = _query_idf(spark, index, terms)
-    top = bm25_topk(spark, index, query, k=k, cfg=cfg)
-    k1, b = float(cfg.k1), float(cfg.b)
-    tf_norm = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf")
-        + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-    )
+    stats = query_stats(index, terms)
+    top = rank_topk(index, doc_scores(index, stats, terms, cfg), k)
     return (
-        index.postings.where(F.col("term").isin(terms))
+        term_scores(index, stats, terms, cfg)
         .join(F.broadcast(top), "doc_id")
-        .join(F.broadcast(qidf), "term")
         .select(
             "doc_id",
             "conv_id",
             "term",
             F.col("tf").cast("int").alias("tf"),
             F.col("dl").cast("long").alias("dl"),
-            F.col("df").cast("long").alias("df"),
-            "idf",
-            tf_norm.alias("tf_norm"),
-            (F.col("idf") * tf_norm).alias("term_score"),
+            term_lookup(stats.df).cast("long").alias("df"),
+            term_lookup({t: stats.idf(t) for t in stats.df}).alias("idf"),
+            bm25_term_score(F.col("tf"), F.lit(1.0), stats.avgdl, cfg).alias(
+                "tf_norm"
+            ),
+            "term_score",
             "score",
         )
         .orderBy(F.desc("score"), F.asc("doc_id"), F.asc("term"))
@@ -950,14 +1030,9 @@ def bm25_batch_topk(
         )
     union_terms = sorted({t for _, t in pairs})
     q2t = spark.createDataFrame(pairs, "query_id string, term string")
-    qidf, _, avgdl = _query_idf(spark, index, union_terms)
-    k1, b = float(cfg.k1), float(cfg.b)
-    per_term = (
-        index.postings.where(F.col("term").isin(union_terms))
-        .join(F.broadcast(qidf), "term")
-        .join(F.broadcast(q2t), "term")
-        .select("query_id", "term", "doc_id", "tf", "dl", "idf")
-        .withColumn("term_score", bm25_term_score(k1, b, avgdl))
+    stats = query_stats(index, union_terms)
+    per_term = term_scores(index, stats, union_terms, cfg).join(
+        F.broadcast(q2t), "term"
     )
     scored = _suppress(
         per_term.groupBy("query_id", "doc_id").agg(

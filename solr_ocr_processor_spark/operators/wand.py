@@ -53,6 +53,7 @@ from ..functions.bm25 import idf_scalar, tf_norm
 from ..functions.codec import delta_decode, varint_decode
 from ..functions.tokenizer import query_terms
 from .blocks import BlockIndex
+from .score import rank_topk
 
 _TOPK_SCHEMA = "range_id long, doc_id long, score double"
 
@@ -248,66 +249,55 @@ def wand_topk(
                 .limit(k)
                 .collect()
             )
-            if not top:
-                return empty
-            out = spark.createDataFrame(
-                [(r["doc_id"], r["score"]) for r in top],
-                "doc_id long, score double",
+        else:
+            seed, docs_cov = [], 0
+            for r in head:
+                seed.append(int(r["range_id"]))
+                docs_cov += r["npost"]
+                if docs_cov >= max(4 * k, 256) and len(seed) >= 2:
+                    break
+
+            # --- phase 2a: score seed ranges; theta = k-th best (k rows
+            # collected — the only score rows the driver ever holds) ---
+            seed_scored = (
+                qb.where(F.col("range_id").isin(seed))
+                .groupBy("range_id")
+                .applyInPandas(scorer, _TOPK_SCHEMA)
+                .persist()
             )
-            return (
-                out.join(bidx.doc_meta.select("doc_id", "conv_id"), "doc_id")
-                .select("doc_id", "conv_id", "score")
+            top_seed = (
+                seed_scored.orderBy(F.desc("score"), F.asc("doc_id"))
+                .limit(k)
+                .collect()
+            )
+            theta = (
+                top_seed[k - 1]["score"] if len(top_seed) >= k else float("-inf")
+            )
+
+            # --- phase 2b: prune ub < theta IN SPARK, score survivors,
+            # and merge via a distributed top-k (per-partition heaps +
+            # k-row driver merge) instead of a driver-side Python sort ---
+            surv_ranges = bounds_df.where(
+                (F.col("ub") >= theta) & (~F.col("range_id").isin(seed))
+            ).select("range_id")
+            survivor_scored = (
+                qb.join(F.broadcast(surv_ranges), "range_id")
+                .groupBy("range_id")
+                .applyInPandas(scorer, _TOPK_SCHEMA)
+            )
+            top = (
+                seed_scored.select("doc_id", "score")
+                .unionByName(survivor_scored.select("doc_id", "score"))
                 .orderBy(F.desc("score"), F.asc("doc_id"))
+                .limit(k)
+                .collect()
             )
-
-        seed, docs_cov = [], 0
-        for r in head:
-            seed.append(int(r["range_id"]))
-            docs_cov += r["npost"]
-            if docs_cov >= max(4 * k, 256) and len(seed) >= 2:
-                break
-
-        # --- phase 2a: score seed ranges; theta = k-th best (k rows
-        # collected — the only score rows the driver ever holds) ---
-        seed_scored = (
-            qb.where(F.col("range_id").isin(seed))
-            .groupBy("range_id")
-            .applyInPandas(scorer, _TOPK_SCHEMA)
-            .persist()
-        )
-        top_seed = (
-            seed_scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-        )
-        theta = top_seed[k - 1]["score"] if len(top_seed) >= k else float("-inf")
-
-        # --- phase 2b: prune ub < theta IN SPARK, score survivors, and
-        # merge via a distributed top-k (per-partition heaps + k-row
-        # driver merge) instead of a driver-side Python sort ---
-        surv_ranges = bounds_df.where(
-            (F.col("ub") >= theta) & (~F.col("range_id").isin(seed))
-        ).select("range_id")
-        survivor_scored = (
-            qb.join(F.broadcast(surv_ranges), "range_id")
-            .groupBy("range_id")
-            .applyInPandas(scorer, _TOPK_SCHEMA)
-        )
-        top = (
-            seed_scored.select("doc_id", "score")
-            .unionByName(survivor_scored.select("doc_id", "score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .collect()
-        )
-        if not top:
-            return empty
+        # k rows reach the driver before the finally block drops the
+        # persisted frames; conv_id resolves on them
         out = spark.createDataFrame(
             [(r["doc_id"], r["score"]) for r in top], "doc_id long, score double"
         )
-        return (
-            out.join(bidx.doc_meta.select("doc_id", "conv_id"), "doc_id")
-            .select("doc_id", "conv_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-        )
+        return rank_topk(bidx, out, k)
     finally:
         qb.unpersist()
         bounds_df.unpersist()

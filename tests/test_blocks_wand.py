@@ -137,6 +137,51 @@ def test_wand_rank_identity(spark, corpus, query):
     assert all(abs(a[1] - b[1]) < 1e-9 for a, b in zip(w, o))
 
 
+def test_engine_paths_bit_identical_where_spark_log1p_differs(spark):
+    """30 docs, 'zebra' in 4 of them: Spark's log1p (StrictMath) and
+    Python's math.log1p round ln(1 + 26.5/4.5) to different last bits,
+    so an idf computed as a Spark column splits the exhaustive and
+    batch scorers from WAND and the oracle. Every path must take its
+    idf from functions/bm25.idf_scalar and agree bit for bit."""
+    import datetime
+
+    from solr_ocr_processor_spark.operators.score import bm25_batch_topk
+    from solr_ocr_processor_spark.sources.transcripts import TRANSCRIPT_SCHEMA
+
+    ts = datetime.datetime(2026, 1, 1)
+    fill = "alpha beta gamma delta epsilon eta theta iota kappa".split()
+    rows = []
+    for i in range(30):
+        words = [fill[(i + j) % len(fill)] for j in range(3 + i % 7)]
+        words += ["zebra"] * (1 + i % 3 if i < 4 else 0)
+        rows.append((f"z{i:02d}", 0, "user", " ".join(words), None, ts))
+    t = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
+    idx = build_postings(t, CFG)
+    bidx = build_block_index(idx, CFG)
+    docs_pd = oracle_materialize(t.toPandas())
+
+    q, k = "zebra", 10
+    paths = {
+        "bm25_topk": bm25_topk(spark, idx, q, k=k, cfg=CFG).collect(),
+        "bm25_batch_topk": bm25_batch_topk(
+            spark, idx, {"q": q}, k=k, cfg=CFG
+        ).orderBy("rank").collect(),
+        "wand_topk": wand_topk(spark, bidx, q, k=k, cfg=CFG).collect(),
+    }
+    got = {
+        name: [(r["doc_id"], r["score"].hex()) for r in res]
+        for name, res in paths.items()
+    }
+    oracle = oracle_bm25_topk(docs_pd, q, k=k, cfg=CFG)
+    got["oracle_bm25_topk"] = [
+        (int(d), float(s).hex()) for d, s in zip(oracle["doc_id"], oracle["score"])
+    ]
+    assert len(got["oracle_bm25_topk"]) == 4
+    assert got["bm25_topk"] == got["bm25_batch_topk"] == got["wand_topk"] == (
+        got["oracle_bm25_topk"]
+    ), got
+
+
 def test_wand_stopword_covers_all_docs(spark, corpus):
     """'the' appears in most docs — pruning must still return the exact
     global top-k, not just the seed ranges' docs."""

@@ -203,3 +203,31 @@ def test_diversity_heuristic_improves_clustered_recall(spark, tmp_path):
         assert {r["id"] for r in full} == exact  # exactness regardless
     assert recalls[True] >= recalls[False]
     assert recalls[True] >= 7
+
+
+def test_tiered_merge_twice_keeps_every_node(spark, tmp_path):
+    """16 equal segments merge into 4, then the 4 merge into 1. The
+    second merge's content-addressed id -(min id)-1 equals the id of
+    the merged segment that holds the min id, so the member clean-up
+    must not delete the partition the merge has just written."""
+    embs = _clustered_embs(spark, n=128, dim=8)
+    qv = [float(x) for x in embs.where("vec_id = 5").first()["embedding"]]
+    s = build_hnsw_store(spark, embs, str(tmp_path / "tm2"), dim=8, seg_size=8)
+    before = hnsw_topk_stored(spark, s, qv, k=10, ef=4096).collect()
+
+    def segs():
+        nodes = spark.read.parquet(s.path("nodes"))
+        return sorted(r["seg"] for r in nodes.select("seg").distinct().collect())
+
+    assert len(segs()) == 16
+    assert merge_hnsw_tiered(spark, s, merge_factor=4) == 4
+    assert segs() == [-97, -65, -33, -1]
+    assert merge_hnsw_tiered(spark, s, merge_factor=4) == 1
+    assert segs() == [-1]
+    nodes = spark.read.parquet(s.path("nodes"))
+    assert nodes.count() == 128
+    assert nodes.select("id").distinct().count() == 128
+    after = hnsw_topk_stored(spark, s, qv, k=10, ef=4096).collect()
+    assert [(r["id"], r["cos"]) for r in after] == [
+        (r["id"], r["cos"]) for r in before
+    ]

@@ -115,3 +115,14 @@ def test_lsh_batch_one_scan(spark, embs, store):
     plan = buf.getvalue()
     assert plan.count("ReadSchema:") == 1  # ONE scan of the lsh table
     assert "PartitionFilters" in plan
+
+
+def test_batch_probes_of_no_queries_are_typed_empty(spark, store):
+    from solr_ocr_processor_spark.operators.ann_store import (
+        lsh_batch_topk_stored,
+    )
+
+    for probe in (ivf_batch_topk_stored, lsh_batch_topk_stored):
+        df = probe(spark, store, [], k=5)
+        assert df.dtypes == [("qid", "bigint"), ("id", "bigint"), ("cos", "double")]
+        assert df.collect() == []

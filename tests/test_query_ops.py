@@ -71,6 +71,25 @@ def test_phrase_topk_ranks_by_tfnorm(spark, tiny):
     assert top[0]["score"] > top[1]["score"] > 0
 
 
+def test_pf_boost_is_bm25_plus_phrase_score_bit_for_bit(spark, tiny):
+    """pf_topk(pf_weight=1) adds the phrase clause score to the
+    disjunctive BM25 score, so for every phrase-matching doc it equals
+    bm25_topk + phrase_topk exactly. c1 (tf 1, dl 5) is a doc where
+    (Σidf·num)/denom and Σidf·(num/denom) round differently; only the
+    latter is the shared clause-score contract."""
+    from solr_ocr_processor_spark.operators.query import pf_topk
+    from solr_ocr_processor_spark.operators.score import bm25_topk
+
+    q = "big data"
+    base = {r["conv_id"]: r["score"] for r in bm25_topk(spark, tiny, q).collect()}
+    phrase = {r["conv_id"]: r["score"] for r in phrase_topk(spark, tiny, q).collect()}
+    pf = {r["conv_id"]: r["score"] for r in pf_topk(spark, tiny, q).collect()}
+    assert set(phrase) == {"c0", "c1"}
+    for c, p in phrase.items():
+        assert pf[c].hex() == (base[c] + p).hex(), c
+    assert pf["c2"] == base["c2"]
+
+
 # --- sloppy phrase (proximity) ----------------------------------------------
 
 
