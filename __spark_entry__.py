@@ -8139,8 +8139,8 @@ tot AS (SELECT sum(c_a) AS n_a, sum(c_b) AS n_b,
                CAST(count(*) AS BIGINT) AS v
         FROM counts)
 SELECT term, c_a, c_b,
-       ((c_a + 1) * (t.n_b + t.v) * 1000000) // ((c_b + 1) * (t.n_a + t.v))
-         AS drift_scaled
+       CAST(((c_a + 1) * (t.n_b + t.v) * 1000000) // ((c_b + 1) * (t.n_a + t.v))
+            AS BIGINT) AS drift_scaled
 FROM counts CROSS JOIN tot t
 ORDER BY drift_scaled DESC, term ASC
 LIMIT 15
@@ -8426,7 +8426,7 @@ SELECT role,
        CAST(count(*) AS BIGINT) AS n_turns,
        CAST(count(DISTINCT conv_id) AS BIGINT) AS n_convs,
        CAST(sum(n_toks) AS BIGINT) AS n_tokens,
-       (sum(n_toks) * 1000000) // count(*) AS avg_tokens_scaled
+       CAST((sum(n_toks) * 1000000) // count(*) AS BIGINT) AS avg_tokens_scaled
 FROM per GROUP BY role ORDER BY role
 """,
         "length_buckets": """

@@ -95,6 +95,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .lifecycle import commit_swap, heal, swap_stage, tiered_merge_plan
+
 
 @dataclass
 class HnswStore:
@@ -320,6 +322,7 @@ def build_hnsw_store(
     One ``applyInPandas`` group per segment (the segment's rows are
     sorted by id inside the kernel, so the build is independent of the
     input's partitioning), one shuffle total."""
+    heal(root)
     base = embs.select(
         F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
     ).withColumn("seg", F.floor(F.col("id") / F.lit(int(seg_size))).cast("long"))
@@ -370,8 +373,8 @@ def append_hnsw_store(
     same ``seg`` breaks the exhaustive-equals-brute contract) trigger
     a REBUILD of exactly those segments over old ∪ new rows — the
     content-addressed build makes the rebuilt graph byte-identical to
-    a fresh build's, and the write replaces only the affected
-    partitions (dynamic partition overwrite).
+    a fresh build's, and only the affected partitions are replaced
+    (:func:`_rebuild_segments`).
 
     Idempotent: ids already present in the node table are dropped
     first (the GET-before-POST re-add discipline of the text index's
@@ -379,6 +382,7 @@ def append_hnsw_store(
     Append-then-query therefore equals a fresh build's result for ANY
     id layout (asserted in tests). Returns the number of vectors
     appended."""
+    heal(store.root)
     nodes = spark.read.parquet(store.path("nodes"))
     base = embs.select(
         F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
@@ -404,25 +408,41 @@ def append_hnsw_store(
                 "id", "vec", "seg"
             )
         )
+    _rebuild_segments(spark, store, rows, {int(s): [] for s in touched})
+    return n
 
+
+def _rebuild_segments(
+    spark: SparkSession, store: HnswStore, rows: DataFrame, segs: dict[int, list[int]]
+) -> None:
+    """The write path shared by append and tiered merge: build the
+    graph of every segment in ``rows`` (id, vec, seg — each segment's
+    FULL row set), stage its nodes and edges partitions, and swap them
+    in through lifecycle's journal (stage → journal → swap → heal),
+    dropping the member partitions ``segs[seg]`` it replaces. One
+    kernel pass and two writes, however many segments. A one-node
+    segment has no edges, so its edges step finds nothing to move."""
+    stage = swap_stage(store.root, "hnsw")
     kernel = _edges_kernel(store.m, store.ef_construction, store.seed, store.diversify)
     (
         rows.groupBy("seg")
         .applyInPandas(kernel, _EDGE_SCHEMA)
         .repartition("seg")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("seg")
-        .parquet(store.path("edges"))
+        .write.partitionBy("seg")
+        .parquet(os.path.join(stage, "edges"))
     )
-    (
-        rows.repartition("seg")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("seg")
-        .parquet(store.path("nodes"))
+    rows.repartition("seg").write.partitionBy("seg").parquet(
+        os.path.join(stage, "nodes")
     )
-    return n
+    commit_swap(
+        store.root,
+        "hnsw",
+        [
+            (f"{t}/seg={s}", f"{t}/seg={s}", [f"{t}/seg={m}" for m in segs[s]])
+            for s in sorted(segs)
+            for t in ("nodes", "edges")
+        ],
+    )
 
 
 def merge_hnsw_segments(
@@ -434,21 +454,17 @@ def merge_hnsw_segments(
     cost of one full rebuild pass). For the incremental policy-driven
     variant see :func:`merge_hnsw_tiered`.
 
-    Crash safety (rename-swap-delete): the new store is built beside
-    the old, the OLD root is renamed aside, the new one renamed in,
-    and only then is the old copy deleted — a crash at any point
-    leaves at least one complete store on disk (``{root}`` or
-    ``{root}_old``). The swap uses driver-local ``os.rename`` /
-    ``shutil.rmtree``, so ``store.root`` must be on a filesystem the
-    driver can address directly (local/NFS; on object stores swap via
-    the catalog instead). Returns the updated store."""
-    import shutil
-
+    The new nodes, edges and meta.json are built in a stage under the
+    root and swapped in through lifecycle's journal, so a crash at any
+    point is healed by the next mutating call (same local/NFS
+    constraint as every journaled swap). Returns the updated store."""
+    heal(store.root)
+    stage = swap_stage(store.root, "hnsw")
     nodes = spark.read.parquet(store.path("nodes")).select("id", "vec")
-    new = build_hnsw_store(
+    build_hnsw_store(
         spark,
         nodes,
-        store.root + "_merged",
+        stage,
         dim=store.dim,
         m=store.m,
         ef_construction=store.ef_construction,
@@ -458,12 +474,7 @@ def merge_hnsw_segments(
         vec_col="vec",
         diversify=store.diversify,
     )
-    old = store.root + "_old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(store.root, old)
-    os.rename(new.root, store.root)
-    shutil.rmtree(old)
+    commit_swap(store.root, "hnsw", [(t, t, []) for t in ("nodes", "edges", "meta.json")])
     return load_hnsw_store(store.root)
 
 
@@ -473,8 +484,6 @@ def hnsw_merge_plan(spark: SparkSession, store: HnswStore, merge_factor: int = 4
     :func:`lifecycle.tiered_merge_plan` policy that drives the text
     index's segment merges — one planner, two stores. Returns the
     planner's (tier, merge_ord, n_segs, seg_ids, total_docs) rows."""
-    from solr_ocr_processor_spark.operators.lifecycle import tiered_merge_plan
-
     manifest = (
         spark.read.parquet(store.path("nodes"))
         .groupBy("seg")
@@ -493,59 +502,33 @@ def merge_hnsw_tiered(
     TieredMergePolicy applied to the vector store.
 
     Merged segments get the content-addressed id ``-(min id in the
-    group) - 1``: deterministic across replays (re-running after a
-    crash re-plans the same groups and overwrites the same partition)
-    and disjoint from the non-negative id-range namespace new flushes
-    mint. A re-merge whose group holds an earlier merged segment with
-    the min id reuses that member's id: the dynamic overwrite replaces
-    the partition in place (its rows are read by the same job, before
-    the commit) and the member clean-up skips it. Ordering per group:
-    write the merged partition, THEN delete the other member
-    partitions — a crash in between leaves duplicate candidates, which
-    the query tail's per-id dedup tolerates. A re-run heals them when
-    the members still form the same plan group; after an id-reusing
-    re-merge they may not, and the duplicates stay. Partition deletes
-    are driver-local filesystem ops (same local/NFS constraint as
-    :func:`merge_hnsw_segments`).
+    group) - 1``: deterministic, and disjoint from the non-negative
+    id-range namespace new flushes mint. A re-merge whose group holds
+    an earlier merged segment with the min id reuses that member's id.
+    Every group rebuilds in ONE pass (one min-id read, one kernel pass,
+    two writes — the same Spark jobs for one group or many), and the
+    merged partitions swap in through lifecycle's journal, each
+    replacing its members: after a crash anywhere, the next mutating
+    call heals the store to the uninterrupted merge's.
 
     Returns the number of merge groups executed (0 = nothing to do)."""
-    import shutil
-
+    heal(store.root)
     plan = hnsw_merge_plan(spark, store, merge_factor).collect()
     if not plan:
         return 0
-    nodes = spark.read.parquet(store.path("nodes"))
-    kernel = _edges_kernel(store.m, store.ef_construction, store.seed, store.diversify)
-    for row in plan:
-        members = [int(s) for s in row["seg_ids"].split(",")]
-        part = nodes.where(F.col("seg").isin(members)).select("id", "vec")
-        min_id = part.agg(F.min("id")).first()[0]
-        new_seg = -(int(min_id)) - 1
-        merged = part.withColumn("seg", F.lit(new_seg).cast("long"))
-        (
-            merged.groupBy("seg")
-            .applyInPandas(kernel, _EDGE_SCHEMA)
-            .repartition("seg")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("seg")
-            .parquet(store.path("edges"))
-        )
-        (
-            merged.repartition("seg")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("seg")
-            .parquet(store.path("nodes"))
-        )
-        # a re-merge can reuse a member's id (the member holding the
-        # min id): that partition now holds the merged segment
-        for s in (m for m in members if m != new_seg):
-            for table in ("nodes", "edges"):
-                shutil.rmtree(
-                    os.path.join(store.path(table), f"seg={s}"),
-                    ignore_errors=True,
-                )
+    groups = [[int(s) for s in row["seg_ids"].split(",")] for row in plan]
+    members = [m for g in groups for m in g]
+    nodes = spark.read.parquet(store.path("nodes")).where(F.col("seg").isin(members))
+    min_id = {
+        r["seg"]: r["min_id"]
+        for r in nodes.groupBy("seg").agg(F.min("id").alias("min_id")).collect()
+    }
+    segs = {-min(min_id[m] for m in g) - 1: g for g in groups}
+    merged_seg = F.create_map(
+        *[F.lit(x).cast("long") for new, g in segs.items() for m in g for x in (m, new)]
+    )
+    rows = nodes.select("id", "vec", merged_seg[F.col("seg")].alias("seg"))
+    _rebuild_segments(spark, store, rows, segs)
     return len(plan)
 
 
@@ -665,8 +648,7 @@ def _topk_over(
         _probe_kernel(store, queries, k, ef), _CAND_SCHEMA
     )
     # per-id dedup: identical vectors yield identical cos, so an id
-    # seen from two segments (the tiered-merge crash window) collapses
-    # to one deterministic row
+    # seen from two segments collapses to one deterministic row
     cand = cand.dropDuplicates(["qid", "id"])
     ranked = cand.withColumn(
         "rn",

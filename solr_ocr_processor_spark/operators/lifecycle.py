@@ -24,8 +24,11 @@ relational shape, swap the writer):
     {root}/doc_meta/shard=K/
     {root}/term_stats/              global dictionary (finalize step)
     {root}/corpus/                  n_docs / avgdl / total_tokens
+    {root}/corpus_prior/            global stats the next shard encodes with
+    {root}/conv_hashes/             per-conv content fingerprints (sync)
     {root}/manifest/                per-shard build lineage + metrics
     {root}/tombstones/              deleted conv_ids (append-only)
+    {root}/_swap_<name>/            staged rewrite + journal.json (transient)
 
 Sharding is by doc-id range (``shard = doc_id // shard_width``), which
 keeps shards aligned with the block index's range structure and makes
@@ -34,12 +37,39 @@ computed once from the sorted distinct conv_id set and *checkpointed*
 to ``doc_map`` before any shard builds — reruns and resumes read the
 checkpoint instead of recomputing, so doc ids are stable across
 failures (SURVEY §4.2-5; monotonically_increasing_id is banned).
+
+Every IN-PLACE rewrite — :func:`compact`, the fingerprint refresh of
+:func:`sync_store`, :func:`merge_shards_tiered`, and the HNSW store's
+append, tiered merge and force merge — goes through one protocol:
+
+1. stage: the replacement tables are written under
+   ``{root}/_swap_<name>/`` (Spark's listing hides ``_``-prefixed
+   paths); the live tables are not touched;
+2. commit: ``journal.json`` is written atomically (tmp file +
+   ``os.replace``). It lists steps ``(src in stage, dst, paths to drop
+   first)``;
+3. swap: replay runs the steps in order — drop, then rename ``src`` to
+   ``dst`` — and skips a step whose ``src`` is already gone, so a
+   replay can restart from any crash point;
+4. heal: :func:`heal` finishes every journaled stage and discards every
+   stage without a journal (the crash came before the commit, so the
+   live tables are intact).
+
+Contract: one writer per store. Every mutating entry point heals
+first; readers do not heal, so after a crash inside a swap the store
+reads correctly again once the next mutating call (or :func:`heal`)
+has run. The append-only, commit-ordered writes (build resume, stream
+fold-in) need no stage. Renames are driver-local filesystem ops, so
+the root must be on a filesystem the driver addresses directly
+(local/NFS; on object stores swap via the catalog instead).
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
@@ -76,6 +106,65 @@ def _exists(spark: SparkSession, path: str) -> bool:
         return False
 
 
+def swap_stage(root: str, name: str) -> str:
+    """The stage directory of the rewrite called ``name``."""
+    return os.path.join(root, f"_swap_{name}")
+
+
+def commit_swap(root: str, name: str, steps: list[tuple[str, str, list[str]]]) -> None:
+    """Commit the rewrite staged under ``swap_stage(root, name)`` and swap
+    it in. ``steps`` are ``(src, dst, drops)``: ``src`` relative to the
+    stage, ``dst`` and ``drops`` relative to ``root``."""
+    stage = swap_stage(root, name)
+    _write_journal(stage, steps)
+    _replay(root, stage)
+
+
+def _write_journal(stage: str, steps) -> None:
+    tmp = os.path.join(stage, "journal.json.tmp")
+    with open(tmp, "w") as f:
+        json.dump(steps, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, os.path.join(stage, "journal.json"))
+
+
+def _replay(root: str, stage: str) -> None:
+    with open(os.path.join(stage, "journal.json")) as f:
+        steps = json.load(f)
+    for src, dst, drops in steps:
+        _swap_step(root, stage, src, dst, drops)
+    shutil.rmtree(stage)
+
+
+def _swap_step(root: str, stage: str, src: str, dst: str, drops: list[str]) -> None:
+    staged = os.path.join(stage, src)
+    if not os.path.exists(staged):
+        return  # swapped in by an earlier attempt
+    for rel in (*drops, dst):
+        path = os.path.join(root, rel)
+        if os.path.isdir(path):
+            shutil.rmtree(path)
+        elif os.path.exists(path):
+            os.remove(path)
+    target = os.path.join(root, dst)
+    os.makedirs(os.path.dirname(target), exist_ok=True)
+    os.rename(staged, target)
+
+
+def heal(root: str) -> int:
+    """Finish every journaled swap under ``root`` and discard every
+    stage without a journal. Returns the number of swaps finished."""
+    healed = 0
+    for stage in sorted(glob.glob(os.path.join(glob.escape(root), "_swap_*"))):
+        if os.path.exists(os.path.join(stage, "journal.json")):
+            _replay(root, stage)
+            healed += 1
+        else:
+            shutil.rmtree(stage)
+    return healed
+
+
 def _manifest_done_shards(spark: SparkSession, store: IndexStore) -> set[int]:
     p = store.path("manifest")
     if not _exists(spark, p):
@@ -107,6 +196,7 @@ def build_store(
     ``fail_after_shard`` injects a crash after N shards (tests only).
     """
     store = IndexStore(root=root, cfg=cfg)
+    heal(root)
     build_id = uuid.uuid4().hex[:12]
 
     # --- step 0: checkpointed doc-id assignment + GLOBAL corpus stats ---
@@ -172,15 +262,7 @@ def build_store(
         idx.postings.write.mode("overwrite").parquet(
             store.path(f"postings/shard={shard}")
         )
-        # Cluster + sort by term so query-time `term IN (...)` filters
-        # prune parquet row groups via min/max stats (the file-level
-        # analog of Iceberg bucket(term) partitioning).
-        (
-            bidx.blocks.repartition(F.col("term"))
-            .sortWithinPartitions("term", "range_id", "block_id")
-            .write.mode("overwrite")
-            .parquet(store.path(f"blocks/shard={shard}"))
-        )
+        write_blocks(bidx.blocks, store.path(f"blocks/shard={shard}"))
         idx.doc_meta.write.mode("overwrite").parquet(
             store.path(f"doc_meta/shard={shard}")
         )
@@ -239,19 +321,36 @@ def finalize_store(spark: SparkSession, store: IndexStore) -> None:
     from every shard's persisted tables. Shared by the initial sharded
     build and by streaming fold-in (merge_stream), which appends a new
     shard and must refresh the globals the query side scores with."""
-    postings = spark.read.parquet(store.path("postings"))
-    doc_meta = spark.read.parquet(store.path("doc_meta"))
+    term_stats, corpus = global_stats(
+        spark.read.parquet(store.path("postings")),
+        spark.read.parquet(store.path("doc_meta")),
+    )
+    term_stats.write.mode("overwrite").parquet(store.path("term_stats"))
+    corpus.write.mode("overwrite").parquet(store.path("corpus"))
+
+
+def global_stats(postings: DataFrame, doc_meta: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The dictionary (term, df, cf) and the one-row corpus (n_docs,
+    total_tokens, avgdl) of a posting table and its doc_meta."""
     term_stats = postings.groupBy("term").agg(
         F.count(F.lit(1)).cast("long").alias("df"),
         F.sum("tf").cast("long").alias("cf"),
     )
-    term_stats.write.mode("overwrite").parquet(store.path("term_stats"))
     corpus = doc_meta.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("dl").cast("long").alias("total_tokens"),
         (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
     )
-    corpus.write.mode("overwrite").parquet(store.path("corpus"))
+    return term_stats, corpus
+
+
+def write_blocks(blocks: DataFrame, path: str) -> None:
+    """Write encoded blocks clustered + sorted by term, so query-time
+    `term IN (...)` filters prune parquet row groups via min/max stats
+    (the file-level analog of Iceberg bucket(term) partitioning)."""
+    blocks.repartition(F.col("term")).sortWithinPartitions(
+        "term", "range_id", "block_id"
+    ).write.mode("overwrite").parquet(path)
 
 
 def load_index(spark: SparkSession, store: IndexStore) -> Index:
@@ -374,6 +473,7 @@ def delete_conv(spark: SparkSession, store: IndexStore, conv_id: str) -> None:
     """DELETE: record a tombstone. Like the reference we capture the
     doc ids BEFORE logically removing them (app/process/solr.go:25-34 —
     the index is the only place they're recorded)."""
+    heal(store.root)
     dm = spark.read.parquet(store.path("doc_map"))
     victims = dm.where(F.col("conv_id") == conv_id).withColumn(
         "deleted_at", F.lit(time.time())
@@ -395,7 +495,9 @@ def conv_content_hashes(transcripts: DataFrame) -> DataFrame:
         F.col("role"),
         F.coalesce(F.col("tool"), F.lit("")),
         F.col("text"),
-        F.col("ts").cast("long").cast("string"),
+        # via TIMESTAMP: a tz-naive input reads as TIMESTAMP_NTZ, which
+        # has no BIGINT cast (the session zone is UTC, so both agree)
+        F.col("ts").cast("timestamp").cast("long").cast("string"),
     )
     h = F.conv(F.substring(F.md5(canon), 1, 10), 16, 10).cast("long")
     return transcripts.groupBy("conv_id").agg(
@@ -410,6 +512,7 @@ def delete_convs(spark: SparkSession, store: IndexStore, convs: DataFrame) -> in
     HTTP call, app/handler/indexer.go:155-163; a sync deletes many).
     Already-tombstoned doc ids are skipped so repeated syncs don't
     grow the tombstone table. Returns the number of docs tombstoned."""
+    heal(store.root)
     dm = spark.read.parquet(store.path("doc_map"))
     victims = (
         dm.join(convs.select("conv_id").distinct(), "conv_id", "left_semi")
@@ -467,6 +570,7 @@ def sync_store(
     """
     from ..streaming.ingest import _resume_unfinalized, fold_turns
 
+    heal(store.root)
     _resume_unfinalized(spark, store)
 
     new_h = conv_content_hashes(new_transcripts).persist()
@@ -512,12 +616,8 @@ def sync_store(
     n_added = n_folded - n_changed
 
     # refresh the fingerprints to exactly the new corpus
-    tmp = store.path("_conv_hashes_sync")
-    new_h.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(hashes_path)
-    import shutil
-
-    shutil.rmtree(tmp, ignore_errors=True)
+    new_h.write.parquet(os.path.join(swap_stage(store.root, "sync"), "conv_hashes"))
+    commit_swap(store.root, "sync", [("conv_hashes", "conv_hashes", [])])
 
     n_unchanged = n_live - n_changed - n_removed
     for df in (new_h, live, changed, victims):
@@ -546,60 +646,45 @@ def tombstoned_doc_ids(spark: SparkSession, store: IndexStore) -> list[int]:
 def compact(spark: SparkSession, store: IndexStore) -> None:
     """Physically drop tombstoned docs (segment-merge analog).
 
-    Rewrites postings/blocks/doc_meta without the tombstoned doc ids,
-    clears tombstones, and refreshes global stats. On Iceberg this is
-    a row-level DELETE + expire_snapshots; on parquet we rewrite the
+    Rewrites postings/blocks/doc_meta/doc_map without the tombstoned
+    doc ids, refreshes term_stats/corpus/corpus_prior and clears
+    tombstones: each table is staged once and all of them swap in
+    under one journal (module docstring). On Iceberg this is a
+    row-level DELETE + expire_snapshots; on parquet we rewrite the
     anti-joined tables. Note df/avgdl change on compaction — scores
     after compact equal a fresh build without the deleted convs
     (verified in tests).
     """
+    heal(store.root)
     dead = tombstoned_convs(spark, store).select("doc_id").distinct()
     if not dead.count():
         return
-    import shutil
+    stage = swap_stage(store.root, "compact")
+
+    def staged(name: str) -> str:
+        return os.path.join(stage, name)
 
     # Rewrites keep the shard=K partition layout (everything folds into
     # shard=0): writing FLAT files under the root would leave any LATER
     # merge_stream shard=N directory in a mixed flat+partitioned layout
     # that Spark's partition discovery rejects.
     for name in ("postings", "doc_meta"):
-        df = spark.read.parquet(store.path(name)).join(dead, "doc_id", "left_anti")
-        tmp = store.path(f"_{name}_compact")
-        df.drop("shard").write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(store.path(name), ignore_errors=True)
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(
-            store.path(f"{name}/shard=0")
-        )
+        kept = spark.read.parquet(store.path(name)).join(dead, "doc_id", "left_anti")
+        kept.drop("shard").write.parquet(staged(f"{name}/shard=0"))
     # doc_map must drop the victims too: membership (check) and the
     # merge re-POST filter read it, and a conv whose postings were
     # physically removed must read as NOT indexed (re-streaming it
     # later re-indexes under a fresh doc id).
     dm = spark.read.parquet(store.path("doc_map")).join(dead, "doc_id", "left_anti")
-    tmp_dm = store.path("_doc_map_compact")
-    dm.write.mode("overwrite").parquet(tmp_dm)
-    spark.read.parquet(tmp_dm).write.mode("overwrite").parquet(
-        store.path("doc_map")
-    )
-    # blocks must be re-encoded (a dead doc may sit mid-block): rebuild
-    # from the compacted posting table via the same block builder.
-    postings = spark.read.parquet(store.path("postings"))
-    doc_meta = spark.read.parquet(store.path("doc_meta"))
-    term_stats = postings.groupBy("term").agg(
-        F.count(F.lit(1)).cast("long").alias("df"),
-        F.sum("tf").cast("long").alias("cf"),
-    )
-    corpus = doc_meta.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_tokens"),
-        (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
-    )
-    corpus.write.mode("overwrite").parquet(store.path("corpus"))
+    dm.write.parquet(staged("doc_map"))
+    postings = spark.read.parquet(staged("postings"))
+    doc_meta = spark.read.parquet(staged("doc_meta"))
+    term_stats, corpus = global_stats(postings, doc_meta)
+    term_stats.write.parquet(staged("term_stats"))
+    corpus.write.parquet(staged("corpus"))
     # keep the sharded-build prior in sync so later appends encode
-    # bounds against the post-compaction avgdl
-    spark.read.parquet(store.path("corpus")).write.mode("overwrite").parquet(
-        store.path("corpus_prior")
-    )
-    term_stats.write.mode("overwrite").parquet(store.path("term_stats"))
+    # bounds against the post-compaction avgdl (the same one-row table)
+    shutil.copytree(staged("corpus"), staged("corpus_prior"))
 
     from ..plans.materialize import Materialized
 
@@ -610,73 +695,16 @@ def compact(spark: SparkSession, store: IndexStore) -> None:
         corpus=corpus,
         mat=Materialized(turns=None, docs=None),
     )
-    blocks = build_block_index(pseudo, store.cfg).blocks
-    tmpb = store.path("_blocks_compact")
-    (
-        blocks.repartition(F.col("term"))
-        .sortWithinPartitions("term", "range_id", "block_id")
-        .write.mode("overwrite")
-        .parquet(tmpb)
+    # blocks must be re-encoded (a dead doc may sit mid-block): rebuild
+    # from the compacted posting table via the same block builder.
+    write_blocks(build_block_index(pseudo, store.cfg).blocks, staged("blocks/shard=0"))
+    tables = ("postings", "doc_meta", "blocks", "term_stats", "corpus", "corpus_prior")
+    # tombstones served their purpose: they go with the doc_map swap
+    commit_swap(
+        store.root,
+        "compact",
+        [(t, t, []) for t in tables] + [("doc_map", "doc_map", ["tombstones"])],
     )
-    shutil.rmtree(store.path("blocks"), ignore_errors=True)
-    spark.read.parquet(tmpb).write.mode("overwrite").parquet(
-        store.path("blocks/shard=0")
-    )
-
-    # tombstones served their purpose
-    shutil.rmtree(store.path("tombstones"), ignore_errors=True)
-    for t in (
-        "_postings_compact", "_doc_meta_compact", "_blocks_compact",
-        "_doc_map_compact",
-    ):
-        shutil.rmtree(store.path(t), ignore_errors=True)
-
-
-def _swap_merged_shard(
-    store: IndexStore, stage: str, members: list[int], target: int
-) -> None:
-    """Journal replay half of the shard merge: delete member shard
-    partitions and move the staged tables in as ``shard=target``.
-    Idempotent — a staged table already moved is skipped, deletes
-    ignore missing dirs — so :func:`heal_shard_merges` can re-run it
-    from any crash point. Driver-local fs ops (local/NFS roots; on
-    object stores swap via the catalog)."""
-    import shutil
-
-    for name in ("postings", "doc_meta", "blocks"):
-        src = os.path.join(stage, name)
-        if not os.path.exists(src):
-            continue  # already swapped in a previous attempt
-        for m in members:
-            shutil.rmtree(store.path(f"{name}/shard={m}"), ignore_errors=True)
-        dst = store.path(f"{name}/shard={target}")
-        shutil.rmtree(dst, ignore_errors=True)
-        os.rename(src, dst)
-    shutil.rmtree(stage, ignore_errors=True)
-
-
-def heal_shard_merges(spark: SparkSession, store: IndexStore) -> int:
-    """Complete any shard merge interrupted between its journal write
-    and the final swap (the merge_stream staged/done discipline applied
-    to merges): a stage dir WITH a journal finishes its swap; one
-    without (crash mid-stage) is discarded — the member shards are
-    still intact, so the merge simply re-plans next call. Returns the
-    number of healed merges."""
-    import glob
-    import json as _json
-    import shutil
-
-    healed = 0
-    for stage in glob.glob(store.path("_shard_merge_stage_*")):
-        j = os.path.join(stage, "journal.json")
-        if os.path.exists(j):
-            with open(j) as f:
-                info = _json.load(f)
-            _swap_merged_shard(store, stage, info["members"], info["target"])
-            healed += 1
-        else:
-            shutil.rmtree(stage, ignore_errors=True)
-    return healed
 
 
 def merge_shards_tiered(
@@ -696,17 +724,15 @@ def merge_shards_tiered(
     unchanged (doc ids are global — a shard is just a storage
     partition), the group's blocks RE-ENCODE from the union postings
     against the store's GLOBAL corpus stats (same rule as the sharded
-    build, so WAND bounds stay exact), everything stages beside the
-    store, a journal commits the intent, and the swap (delete members,
-    rename stage in as ``shard=min(members)``) is replay-idempotent —
-    :func:`heal_shard_merges` (called first) completes any interrupted
-    swap. df/avgdl are untouched (no docs added or removed), so query
-    results are rank-identical before and after (asserted in tests).
+    build, so WAND bounds stay exact), and the three tables swap in as
+    ``shard=min(members)`` through the journaled stage (module
+    docstring), replacing the members. df/avgdl are untouched (no docs
+    added or removed), so query results are rank-identical before and
+    after (asserted in tests). A lineage row per group follows its
+    swap; a merge finished by :func:`heal` records none.
 
     Returns the number of merge groups executed (0 = nothing to do)."""
-    import json as _json
-
-    heal_shard_merges(spark, store)
+    heal(store.root)
     census = (
         spark.read.parquet(store.path("doc_meta"))
         .groupBy(F.col("shard").cast("long").alias("seg"))
@@ -719,22 +745,15 @@ def merge_shards_tiered(
     gstats = (int(crow["n_docs"]), float(crow["avgdl"]))
     from ..plans.materialize import Materialized
 
+    stage = swap_stage(store.root, "merge")
+    tables = ("postings", "doc_meta", "blocks")
     for row in plan:
         members = sorted(int(s) for s in row["seg_ids"].split(","))
         target = members[0]
-        stage = store.path(f"_shard_merge_stage_{target}")
-        postings = (
-            spark.read.parquet(store.path("postings"))
-            .where(F.col("shard").isin(members))
-            .drop("shard")
-        )
-        doc_meta = (
-            spark.read.parquet(store.path("doc_meta"))
-            .where(F.col("shard").isin(members))
-            .drop("shard")
-        )
-        postings.write.mode("overwrite").parquet(os.path.join(stage, "postings"))
-        doc_meta.write.mode("overwrite").parquet(os.path.join(stage, "doc_meta"))
+        for name in ("postings", "doc_meta"):
+            spark.read.parquet(store.path(name)).where(
+                F.col("shard").isin(members)
+            ).drop("shard").write.parquet(os.path.join(stage, name))
         pseudo = Index(
             postings=spark.read.parquet(os.path.join(stage, "postings")),
             doc_meta=spark.read.parquet(os.path.join(stage, "doc_meta")),
@@ -743,24 +762,21 @@ def merge_shards_tiered(
             mat=Materialized(turns=None, docs=None),
         )
         bidx = build_block_index(pseudo, store.cfg, corpus_stats=gstats)
-        (
-            bidx.blocks.repartition(F.col("term"))
-            .sortWithinPartitions("term", "range_id", "block_id")
-            .write.mode("overwrite")
-            .parquet(os.path.join(stage, "blocks"))
+        write_blocks(bidx.blocks, os.path.join(stage, "blocks"))
+        commit_swap(
+            store.root,
+            "merge",
+            [
+                (t, f"{t}/shard={target}", [f"{t}/shard={m}" for m in members])
+                for t in tables
+            ],
         )
-        with open(os.path.join(stage, "journal.json"), "w") as f:
-            _json.dump({"members": members, "target": target}, f)
-        _swap_merged_shard(store, stage, members, target)
-        # lineage: one manifest row per executed merge
-        n_convs = (
-            spark.read.parquet(store.path(f"doc_meta/shard={target}"))
-            .count()
-        )
+        # lineage: one manifest row per executed merge (the census
+        # counted the members' doc_meta rows)
         spark.createDataFrame(
             [(
-                "tiered-merge", int(target), "done", int(n_convs), 0, 0, 0,
-                0.0, 0.0,
+                "tiered-merge", int(target), "done", int(row["total_docs"]), 0, 0,
+                0, 0.0, 0.0,
             )],
             MANIFEST_SCHEMA,
         ).write.mode("append").parquet(store.path("manifest"))

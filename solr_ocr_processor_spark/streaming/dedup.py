@@ -122,9 +122,10 @@ def near_dedup_doc_stream(
       store-as-of-batch-start by anti-joining the batch's own doc_ids
       out of the store read (a crashed attempt may have folded them in
       already) — so a replay computes bit-identical dup pairs;
-    - the report is written ``partitionBy(batch_id)`` with DYNAMIC
-      partition overwrite, so a replay overwrites exactly its own
-      partition instead of appending duplicate rows;
+    - each batch overwrites its own ``batch_id=N`` report partition
+      (typed and empty when it found no duplicates, so the report
+      table exists from the first batch on), so a replay overwrites
+      exactly its own partition instead of appending duplicate rows;
     - fold-in appends only survivors NOT already present in the store
       (anti-join on doc_id), so a replay after a completed fold
       appends nothing.
@@ -172,14 +173,7 @@ def near_dedup_doc_stream(
                 .where(SF.col("doc_id") != SF.col("dup_of"))
                 .persist()
             )
-            if not dups.isEmpty():
-                (
-                    dups.withColumn("batch_id", SF.lit(int(batch_id)))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(out_dir)
-                )
+            dups.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
             survivors = batch_df.join(
                 dups.select("doc_id").distinct(), "doc_id", "left_anti"
             ).join(  # replay guard: never re-admit an already-stored id

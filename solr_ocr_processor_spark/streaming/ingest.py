@@ -209,8 +209,9 @@ def merge_stream(spark: SparkSession, store) -> int:
 
     The fold is an APPEND-ONLY shard build, not a full rebuild:
 
-    0. a previously crashed merge (shard tables written, publication
-       unfinished) is healed first — see crash protocol below;
+    0. an interrupted in-place swap (``lifecycle.heal``) and a
+       previously crashed merge (shard tables written, publication
+       unfinished) are healed first — see crash protocol below;
     1. staged convs already present in doc_map are dropped (re-POST
        idempotency, the reference's GET-before-POST analog);
     2. new convs get doc ids AFTER the existing max (checkpointed ids
@@ -248,8 +249,9 @@ def merge_stream(spark: SparkSession, store) -> int:
     """
     import shutil
 
-    from ..operators.lifecycle import _exists
+    from ..operators.lifecycle import _exists, heal
 
+    heal(store.root)
     recovered = _resume_unfinalized(spark, store)
 
     staged_path = store.path("stream_turns")
@@ -283,6 +285,7 @@ def fold_turns(spark: SparkSession, store, fresh: DataFrame) -> int:
     """
     from ..operators.blocks import build_block_index
     from ..operators.build import build_postings
+    from ..operators.lifecycle import write_blocks
     from ..plans.materialize import assign_doc_ids, ordered_turns
 
     doc_map = spark.read.parquet(store.path("doc_map"))
@@ -329,12 +332,7 @@ def fold_turns(spark: SparkSession, store, fresh: DataFrame) -> int:
         n_docs = int(old["n_docs"]) + int(add["n"])
         avgdl = (int(old["total_tokens"]) + int(add["toks"] or 0)) / n_docs
         bidx = build_block_index(idx, store.cfg, corpus_stats=(n_docs, avgdl))
-        (
-            bidx.blocks.repartition(F.col("term"))
-            .sortWithinPartitions("term", "range_id", "block_id")
-            .write.mode("overwrite")
-            .parquet(store.path(f"blocks/shard={shard}"))
-        )
+        write_blocks(bidx.blocks, store.path(f"blocks/shard={shard}"))
         # COMMIT POINT: every shard table is on disk; record it.
         _merge_manifest_row(spark, store, shard, "staged", n_new)
         _finalize_merge(spark, store, shard)

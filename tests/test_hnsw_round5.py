@@ -231,3 +231,26 @@ def test_tiered_merge_twice_keeps_every_node(spark, tmp_path):
     assert [(r["id"], r["cos"]) for r in after] == [
         (r["id"], r["cos"]) for r in before
     ]
+
+
+def test_tiered_merge_jobs_do_not_grow_with_groups(spark, tmp_path):
+    """Every planned group rebuilds in one pass: a 4-group merge runs as
+    many Spark jobs as a 1-group merge (counted by job group)."""
+    sc = spark.sparkContext
+
+    def merge_jobs(n_groups):
+        embs = _clustered_embs(spark, n=32 * n_groups, dim=8)
+        s = build_hnsw_store(
+            spark, embs, str(tmp_path / f"g{n_groups}"), dim=8, seg_size=8
+        )
+        group = f"tiered-merge-{n_groups}"
+        sc.setJobGroup(group, group)
+        try:
+            assert merge_hnsw_tiered(spark, s, merge_factor=4) == n_groups
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one = merge_jobs(1)
+    assert one > 0
+    assert merge_jobs(4) == one

@@ -139,3 +139,46 @@ def test_delete_then_query_excludes(spark, store, corpus):
     want = oracle_bm25_topk(fresh_pd, QUERY, k=5, cfg=CFG)
     assert [r["conv_id"] for r in got] == list(want["conv_id"])
     assert all(abs(r["score"] - s) < 1e-9 for r, s in zip(got, want["score"]))
+
+
+def test_tz_naive_ts_fingerprints_like_utc_timestamps(spark, tmp_path_factory):
+    """A tz-naive pandas ``ts`` reads back as TIMESTAMP_NTZ; build_store
+    and sync_store over it must write the same conv_hashes as the same
+    rows with UTC TIMESTAMPs."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    from solr_ocr_processor_spark.operators.lifecycle import sync_store
+
+    tmp = tmp_path_factory.mktemp("tz_naive")
+    pdf = pd.DataFrame(
+        {
+            "conv_id": ["c1", "c1", "c2", "c3"],
+            "turn_idx": [0, 1, 0, 0],
+            "role": ["user", "assistant", "user", "user"],
+            "text": ["spark window", "merge spark", "window merge", "zebra"],
+            "tool": [None, "search", None, None],
+            "ts": pd.to_datetime(
+                ["2026-01-01 10:00", "2026-01-01 10:01", "2026-02-03 04:05", "2026-03-01 00:00"]
+            ),
+        }
+    ).astype({"turn_idx": "int32"})
+    frames = {
+        "naive": pdf,
+        "utc": pdf.assign(ts=pdf["ts"].dt.tz_localize("UTC")),
+    }
+    hashes = {}
+    for name, frame in frames.items():
+        path = str(tmp / f"{name}.parquet")
+        frame.to_parquet(path, coerce_timestamps="us")
+        df = spark.read.parquet(path)
+        want_type = T.TimestampNTZType if name == "naive" else T.TimestampType
+        assert isinstance(df.schema["ts"].dataType, want_type)
+        store = build_store(spark, df, str(tmp / f"store_{name}"), CFG, n_shards=1)
+        res = sync_store(spark, store, df.where("conv_id != 'c3'"))
+        assert res == {"added": 0, "changed": 0, "removed": 1, "unchanged": 2}
+        hashes[name] = sorted(
+            tuple(r) for r in spark.read.parquet(store.path("conv_hashes")).collect()
+        )
+    assert hashes["naive"] == hashes["utc"]
+    assert [h[0] for h in hashes["utc"]] == ["c1", "c2"]

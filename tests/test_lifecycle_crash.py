@@ -1,0 +1,331 @@
+"""Crash at every step of every in-place store rewrite.
+
+Each rewrite — compact, sync_store's fingerprint refresh, the text
+shard merge, and the HNSW store's tiered merge, force merge and append
+— goes through lifecycle's one stage → journal → swap → heal protocol.
+The harness injects a failure at each protocol boundary of an op:
+
+- staged, journal not yet written;
+- journal written, no swap step run;
+- after each swap step.
+
+It then heals. A crash before the commit leaves the live tables as
+they were, so the op is simply run again. The healed store must equal
+an uninterrupted run's store table by table (as sorted rows, read with
+pyarrow), and its query results must be identical: WAND and
+``bm25_topk`` for the text index, exhaustive ``hnsw_topk_stored`` for
+the vector store.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import shutil
+
+import numpy as np
+import pyarrow.dataset as pads
+import pytest
+from pyspark.sql import functions as F
+
+from solr_ocr_processor_spark.config import IndexConfig
+from solr_ocr_processor_spark.operators import lifecycle
+from solr_ocr_processor_spark.operators.hnsw import (
+    append_hnsw_store,
+    build_hnsw_store,
+    hnsw_topk_stored,
+    load_hnsw_store,
+    merge_hnsw_segments,
+    merge_hnsw_tiered,
+)
+from solr_ocr_processor_spark.operators.lifecycle import (
+    IndexStore,
+    build_store,
+    compact,
+    delete_conv,
+    heal,
+    load_block_index,
+    load_index,
+    merge_shards_tiered,
+    sync_store,
+    tombstoned_convs,
+)
+from solr_ocr_processor_spark.operators.score import bm25_topk
+from solr_ocr_processor_spark.operators.wand import wand_topk
+from solr_ocr_processor_spark.sources.transcripts import synth_transcripts
+
+CFG = IndexConfig(block_size=4, range_size=8)
+QUERY = "spark window merge"
+TEXT_TABLES = (
+    "postings", "doc_meta", "blocks", "doc_map", "term_stats", "corpus",
+    "corpus_prior", "conv_hashes", "tombstones",
+)
+# wall-clock and random lineage fields differ between any two runs
+VOLATILE = {"deleted_at", "build_id", "wall_sec", "finished_at"}
+
+
+class Crash(RuntimeError):
+    pass
+
+
+def _run(op, at):
+    """Run ``op`` with a crash at protocol boundary ``at`` (None: no
+    crash). Returns the number of boundaries the op passed."""
+    passed = 0
+
+    def boundary():
+        nonlocal passed
+        if passed == at:
+            raise Crash(f"injected crash at boundary {at}")
+        passed += 1
+
+    write_journal, swap_step = lifecycle._write_journal, lifecycle._swap_step
+
+    def journal(*args):
+        boundary()  # staged, no journal
+        write_journal(*args)
+        boundary()  # journal written, no step run
+
+    def step(*args):
+        swap_step(*args)
+        boundary()  # after this step
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(lifecycle, "_write_journal", journal)
+        m.setattr(lifecycle, "_swap_step", step)
+        if at is None:
+            op()
+        else:
+            with pytest.raises(Crash):
+                op()
+    return passed
+
+
+def _rows(path):
+    """A parquet table as (columns, sorted rows), volatile columns
+    dropped; None when the table does not exist."""
+    if not os.path.exists(path):
+        return None
+    t = pads.dataset(path, format="parquet", partitioning="hive").to_table()
+    cols = sorted(c for c in t.column_names if c not in VOLATILE)
+    return cols, sorted(repr(r) for r in t.select(cols).to_pylist())
+
+
+def _partitions(path):
+    """The partition values under a table directory (``key=value``)."""
+    return sorted(int(d.split("=")[1]) for d in os.listdir(path) if "=" in d)
+
+
+def _crash_every_boundary(base, op, snapshot, tmp_path):
+    """Copy the store at ``base`` for an uninterrupted run and for a
+    crash at every boundary; each crashed copy, healed (and re-run when
+    the crash came before the commit), must snapshot like the
+    uninterrupted one. ``op(root)`` runs the rewrite on a copy."""
+    want_root = str(tmp_path / "uninterrupted")
+    shutil.copytree(base, want_root)
+    n = _run(lambda: op(want_root), None)
+    want = snapshot(want_root)
+    assert n >= 3
+    assert not [d for d in os.listdir(want_root) if d.startswith("_swap_")]
+    for at in range(n):
+        root = str(tmp_path / f"crash_{at}")
+        shutil.copytree(base, root)
+        _run(lambda: op(root), at)
+        if heal(root) == 0:  # crashed before the commit: nothing swapped
+            op(root)
+        assert not [d for d in os.listdir(root) if d.startswith("_swap_")], at
+        assert snapshot(root) == want, f"crash at boundary {at} of {n}"
+    return n
+
+
+# --- text index ------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def corpus(spark):
+    return synth_transcripts(spark, n_convs=16, max_turns=6, seed=7)
+
+
+def _text_results(spark, root):
+    store = IndexStore(root, CFG)
+    dead = tombstoned_convs(spark, store).select("doc_id")
+    wand = wand_topk(
+        spark, load_block_index(spark, store), QUERY, k=10, cfg=CFG, exclude_docs=dead
+    )
+    exh = bm25_topk(spark, load_index(spark, store), QUERY, k=10, cfg=CFG, exclude_docs=dead)
+    return [
+        [(r["doc_id"], r["conv_id"], r["score"].hex()) for r in df.collect()]
+        for df in (wand, exh)
+    ]
+
+
+def _text_snapshot(spark, tables=TEXT_TABLES):
+    def snap(root):
+        rows = {t: _rows(os.path.join(root, t)) for t in tables}
+        return rows, _text_results(spark, root)
+
+    return snap
+
+
+def test_compact_heals_from_every_crash_point(spark, corpus, tmp_path):
+    base = str(tmp_path / "base")
+    store = build_store(spark, corpus, base, CFG, n_shards=2)
+    for conv in ("s000003", "s000010"):
+        delete_conv(spark, store, conv)
+
+    n = _crash_every_boundary(
+        base,
+        lambda root: compact(spark, IndexStore(root, CFG)),
+        _text_snapshot(spark),
+        tmp_path,
+    )
+    assert n == 2 + 7  # one journal, seven tables swapped
+    rows, _ = _text_snapshot(spark)(str(tmp_path / "uninterrupted"))
+    assert rows["tombstones"] is None
+
+
+def test_sync_fingerprints_heal_from_every_crash_point(spark, corpus, tmp_path):
+    """The fingerprint refresh is the sync's last write. A crash before
+    its journal leaves the pre-sync fingerprints live (the tombstones
+    and the fold are already committed), so that point is checked
+    against the uninterrupted run with the old conv_hashes; a re-run
+    would re-fold the changed conversations."""
+    base = str(tmp_path / "base")
+    build_store(spark, corpus, base, CFG, n_shards=2)
+    old_hashes = _rows(os.path.join(base, "conv_hashes"))
+    new = corpus.where(F.col("conv_id") != "s000000").withColumn(
+        "text",
+        F.when(
+            F.col("conv_id") == "s000001", F.concat(F.col("text"), F.lit(" zebra"))
+        ).otherwise(F.col("text")),
+    )
+
+    def op(root):
+        res = sync_store(spark, IndexStore(root, CFG), new, compact_after=False)
+        assert res == {"added": 0, "changed": 1, "removed": 1, "unchanged": 14}
+
+    want_root = str(tmp_path / "uninterrupted")
+    shutil.copytree(base, want_root)
+    assert _run(lambda: op(want_root), None) == 3
+    snap = _text_snapshot(spark)
+    want_rows, want_results = snap(want_root)
+    assert want_rows["conv_hashes"] != old_hashes
+    for at in range(3):
+        root = str(tmp_path / f"crash_{at}")
+        shutil.copytree(base, root)
+        _run(lambda: op(root), at)
+        assert heal(root) == (0 if at == 0 else 1)
+        rows, results = snap(root)
+        if at == 0:
+            assert rows.pop("conv_hashes") == old_hashes
+            assert rows == {t: r for t, r in want_rows.items() if t != "conv_hashes"}
+        else:
+            assert rows == want_rows, at
+        assert results == want_results, at
+
+
+def test_shard_merge_heals_from_every_crash_point(spark, corpus, tmp_path):
+    base = str(tmp_path / "base")
+    build_store(spark, corpus, base, CFG, n_shards=4)
+    # the manifest's lineage row follows the swap, so it is not compared
+    n = _crash_every_boundary(
+        base,
+        lambda root: merge_shards_tiered(spark, IndexStore(root, CFG), merge_factor=4),
+        _text_snapshot(spark),
+        tmp_path,
+    )
+    assert n == 2 + 3  # one group: postings, doc_meta, blocks
+    merged = str(tmp_path / "uninterrupted")
+    for t in ("postings", "doc_meta", "blocks"):
+        assert _partitions(os.path.join(merged, t)) == [0]
+
+
+# --- HNSW store ------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def vectors(spark):
+    """40 random 8-d vectors and the query vector (id 5)."""
+    rng = np.random.default_rng(3)
+    rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(40)]
+    embs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return embs, rows[5][1]
+
+
+def _hnsw_build(spark, embs, root):
+    build_hnsw_store(spark, embs, root, dim=8, seg_size=8)
+    return root
+
+
+def _hnsw_snapshot(spark, qv):
+    def snap(root):
+        store = load_hnsw_store(root)
+        with open(os.path.join(root, "meta.json")) as f:
+            meta = json.load(f)
+        top = hnsw_topk_stored(spark, store, qv, k=10, ef=4096).collect()
+        return (
+            _rows(store.path("nodes")),
+            _rows(store.path("edges")),
+            meta,
+            [(r["id"], r["cos"]) for r in top],
+        )
+
+    return snap
+
+
+def test_hnsw_tiered_merges_heal_from_every_crash_point(spark, vectors, tmp_path):
+    """First merge: 4 segments in 2 groups; second merge: the two merged
+    segments into one that reuses the id of the member holding id 0."""
+    embs, qv = vectors
+    base = _hnsw_build(spark, embs.where("vec_id < 32"), str(tmp_path / "base"))
+    snap = _hnsw_snapshot(spark, qv)
+
+    def op(root):
+        merge_hnsw_tiered(spark, load_hnsw_store(root), merge_factor=2)
+
+    n = _crash_every_boundary(base, op, snap, tmp_path / "first")
+    assert n == 2 + 4  # two groups, nodes + edges each
+    once = str(tmp_path / "first" / "uninterrupted")
+    assert _partitions(os.path.join(once, "nodes")) == [-17, -1]
+    n = _crash_every_boundary(once, op, snap, tmp_path / "second")
+    assert n == 2 + 2
+    twice = str(tmp_path / "second" / "uninterrupted")
+    assert _partitions(os.path.join(twice, "nodes")) == [-1]
+    nodes, _, _, top = snap(twice)
+    assert len(nodes[1]) == 32
+    assert top == snap(base)[3]
+
+
+def test_hnsw_force_merge_heals_from_every_crash_point(spark, vectors, tmp_path):
+    embs, qv = vectors
+    base = _hnsw_build(spark, embs.where("vec_id < 32"), str(tmp_path / "base"))
+    n = _crash_every_boundary(
+        base,
+        lambda root: merge_hnsw_segments(spark, load_hnsw_store(root), factor=4),
+        _hnsw_snapshot(spark, qv),
+        tmp_path,
+    )
+    assert n == 2 + 3  # nodes, edges, meta.json
+    assert load_hnsw_store(str(tmp_path / "uninterrupted")).seg_size == 32
+
+
+def test_hnsw_append_heals_from_every_crash_point(spark, vectors, tmp_path):
+    """Appended ids 32..39 open a new segment; the store is built from
+    even ids below 16 only, so the odd ones land inside segments 0 and
+    1 and rebuild them."""
+    embs, qv = vectors
+    base = _hnsw_build(
+        spark,
+        embs.where("vec_id < 32 AND (vec_id >= 16 OR vec_id % 2 = 0)"),
+        str(tmp_path / "base"),
+    )
+    new = embs.where("vec_id >= 32 OR (vec_id < 16 AND vec_id % 2 = 1)")
+
+    def op(root):
+        append_hnsw_store(spark, load_hnsw_store(root), new)
+
+    n = _crash_every_boundary(base, op, _hnsw_snapshot(spark, qv), tmp_path)
+    assert n == 2 + 6  # segments 0, 1, 4: nodes + edges each
+    fresh = _hnsw_build(spark, embs, str(tmp_path / "fresh"))
+    snap = _hnsw_snapshot(spark, qv)
+    assert snap(str(tmp_path / "uninterrupted")) == snap(fresh)

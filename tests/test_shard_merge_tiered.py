@@ -13,7 +13,7 @@ from solr_ocr_processor_spark.config import IndexConfig
 from solr_ocr_processor_spark.operators.lifecycle import (
     IndexStore,
     build_store,
-    heal_shard_merges,
+    heal,
     load_block_index,
     merge_shards_tiered,
 )
@@ -86,11 +86,11 @@ def test_tiered_shard_merge_rank_identical(spark, corpus, tmp_path_factory):
     assert mrows >= n
 
 
-def test_heal_completes_interrupted_swap(spark, corpus, tmp_path_factory):
-    """Crash between journal write and swap: heal_shard_merges must
-    finish the swap and queries must come back rank-identical."""
-    import json
-    import shutil
+def test_heal_completes_interrupted_swap(spark, corpus, tmp_path_factory, monkeypatch):
+    """A real merge crashed after its journal, before its first swap
+    step: heal must finish the swap and queries must come back
+    rank-identical."""
+    from solr_ocr_processor_spark.operators import lifecycle
 
     root = str(tmp_path_factory.mktemp("tm_heal"))
     store = build_store(spark, corpus, root, CFG, n_shards=4)
@@ -99,43 +99,19 @@ def test_heal_completes_interrupted_swap(spark, corpus, tmp_path_factory):
         (r["doc_id"], round(r["score"], 9))
         for r in wand_topk(spark, bidx, QUERY, k=10, cfg=CFG).collect()
     ]
-    members = [0, 1, 2, 3]
-    stage = store.path("_shard_merge_stage_0")
-    # stage the merge by hand (what the merge does before its journal)
-    from pyspark.sql import functions as F
+    stage = store.path("_swap_merge")
 
-    from solr_ocr_processor_spark.operators.blocks import build_block_index
-    from solr_ocr_processor_spark.operators.build import Index
-    from solr_ocr_processor_spark.plans.materialize import Materialized
+    def crash(*args):
+        raise RuntimeError("injected crash before the first swap step")
 
-    postings = (
-        spark.read.parquet(store.path("postings"))
-        .where(F.col("shard").isin(members))
-        .drop("shard")
-    )
-    doc_meta = (
-        spark.read.parquet(store.path("doc_meta"))
-        .where(F.col("shard").isin(members))
-        .drop("shard")
-    )
-    postings.write.parquet(os.path.join(stage, "postings"))
-    doc_meta.write.parquet(os.path.join(stage, "doc_meta"))
-    crow = spark.read.parquet(store.path("corpus")).first()
-    pseudo = Index(
-        postings=spark.read.parquet(os.path.join(stage, "postings")),
-        doc_meta=spark.read.parquet(os.path.join(stage, "doc_meta")),
-        term_stats=spark.read.parquet(store.path("term_stats")),
-        corpus=spark.read.parquet(store.path("corpus")),
-        mat=Materialized(turns=None, docs=None),
-    )
-    bb = build_block_index(
-        pseudo, CFG, corpus_stats=(int(crow["n_docs"]), float(crow["avgdl"]))
-    )
-    bb.blocks.write.parquet(os.path.join(stage, "blocks"))
-    with open(os.path.join(stage, "journal.json"), "w") as f:
-        json.dump({"members": members, "target": 0}, f)
-    # simulated crash: journal written, swap never ran. Heal finishes it.
-    assert heal_shard_merges(spark, store) == 1
+    with monkeypatch.context() as m:
+        m.setattr(lifecycle, "_swap_step", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            merge_shards_tiered(spark, store, merge_factor=4)
+    assert os.path.exists(os.path.join(stage, "journal.json"))
+    assert _shards(spark, store) == {0, 1, 2, 3}
+    # journal written, swap never ran. Heal finishes it.
+    assert heal(store.root) == 1
     assert _shards(spark, store) == {0}
     bidx2 = load_block_index(spark, store)
     after = [
@@ -144,7 +120,6 @@ def test_heal_completes_interrupted_swap(spark, corpus, tmp_path_factory):
     ]
     assert after == before
     assert not os.path.exists(stage)
-    del shutil
 
 
 def test_cli_merge_subcommand(spark, corpus, tmp_path, capsys):

@@ -1,10 +1,16 @@
 """Local stand-in for the driver's correctness gate: run each
 queries() entry on Spark and its oracle_sql() twin on DuckDB at the
-given sf dir, compare row count, column names, and sorted values."""
+given sf dir, compare row count, column names, integer-vs-float
+column types, and values — in result order when the twin has a
+top-level ORDER BY, sorted otherwise.
+
+    python tools/check_oracle.py SF_DIR [QUERY ...]
+"""
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -18,6 +24,31 @@ from solr_ocr_processor_spark.session import get_spark
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
+
+
+def ordered(sql: str) -> bool:
+    """True when ``sql`` has an ORDER BY outside every parenthesis (so
+    not one in a CTE, subquery or window), i.e. its row order is part
+    of the result."""
+    sql = re.sub(r"--[^\n]*", "", re.sub(r"'(?:[^']|'')*'", "''", sql))
+    depth, top = 0, []
+    for ch in sql:
+        if ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        elif depth == 0:
+            top.append(ch)
+    return re.search(r"\bORDER\s+BY\b", "".join(top), re.I) is not None
+
+
+def kind_mismatch(got: pd.DataFrame, want: pd.DataFrame) -> list[str]:
+    """Columns that are integer on one side and float on the other."""
+    return [
+        f"{c} ({got[c].dtype} vs {want[c].dtype})"
+        for c in sorted(got.columns)
+        if {got[c].dtype.kind, want[c].dtype.kind} in ({"i", "f"}, {"u", "f"})
+    ]
 
 
 def main(sf_dir: str) -> int:
@@ -56,10 +87,16 @@ def main(sf_dir: str) -> int:
         elif len(got) != len(want):
             print(f"FAIL {name}: rows {len(got)} != {len(want)}")
             ok = False
+        elif kind_mismatch(got, want):
+            print(f"FAIL {name}: int vs float columns (spark vs duck): "
+                  + ", ".join(kind_mismatch(got, want)))
+            ok = False
         else:
             cols = sorted(got.columns)
-            g = got[cols].sort_values(cols).reset_index(drop=True)
-            w = want[cols].sort_values(cols).reset_index(drop=True)
+            g, w = got[cols], want[cols]
+            if not ordered(sql):
+                g, w = g.sort_values(cols), w.sort_values(cols)
+            g, w = g.reset_index(drop=True), w.reset_index(drop=True)
             for c in cols:
                 if g[c].dtype.kind == "f" or w[c].dtype.kind == "f":
                     g[c] = g[c].astype(float).round(6)
