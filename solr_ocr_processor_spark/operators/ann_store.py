@@ -38,7 +38,9 @@ probe-many layout:
   meta), push them as predicates on the partition columns (Catalyst
   prunes to the probed directories — PartitionFilters in the plan) and
   on the bucket data column (row-group pruning), then exact cosine
-  re-rank via whole-stage-codegen column math (ann.cosine_topk).
+  re-rank in one Arrow kernel. A point probe is the batch probe
+  (:func:`lsh_batch_topk_stored` / :func:`ivf_batch_topk_stored`) at
+  one query.
 
 Results are identical to the in-memory ann.lsh_topk / ann.ivf_topk
 (same md5-derived planes / centroid ranks, same re-rank), so the same
@@ -56,7 +58,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ann import _planes, cosine_topk, ivf_assign, ivf_centroids, lsh_assign
+from .ann import _planes, ivf_assign, ivf_centroids, lsh_assign
 
 
 @dataclass
@@ -259,25 +261,12 @@ def lsh_topk_stored(
     turns 8 probes into 8*(1+bits) = 72 — still a partition-pruned
     point read per probe, vs re-hashing the corpus. The probe set is a
     pure function of (query, md5 planes), so the DuckDB oracle replays
-    it as ``bit_count(xor(bucket, q_bucket)) <= radius``."""
-    probes = _query_buckets(store, query_vec)
-    pred = None
-    for b, v in probes:
-        vals = _expand_bucket(v, store.bits_per_band, radius)
-        dirs = sorted({x >> store.bucket_shift for x in vals})
-        clause = (
-            (F.col("band") == b)
-            & (F.col("bdir").isin(dirs))
-            & (F.col("bucket").isin(vals))
-        )
-        pred = clause if pred is None else (pred | clause)
-    cand = (
-        spark.read.parquet(store.path("lsh"))
-        .where(pred)
-        .select("id", "vec")
-        .dropDuplicates(["id"])
+    it as ``bit_count(xor(bucket, q_bucket)) <= radius``.
+
+    Returns (id, cos): :func:`lsh_batch_topk_stored` at one query."""
+    return lsh_batch_topk_stored(spark, store, [(0, query_vec)], k, radius).select(
+        "id", "cos"
     )
-    return cosine_topk(cand, query_vec, k, id_col="id", vec_col="vec")
 
 
 def ivf_topk_stored(
@@ -290,16 +279,21 @@ def ivf_topk_stored(
     """Probe the ``nprobe`` nearest stored centroid lists (partition
     pruning on list_id), exact re-rank. Centroid ranking is driver-side
     over the (tiny) persisted centroid matrix — stable sort, ties by
-    list_id asc, same contract as ann.ivf_topk and the SQL oracle."""
+    list_id asc, same contract as ann.ivf_topk and the SQL oracle.
+
+    Returns (id, cos): :func:`ivf_batch_topk_stored` at one query."""
+    return ivf_batch_topk_stored(spark, store, [(0, query_vec)], k, nprobe).select(
+        "id", "cos"
+    )
+
+
+def _probe_lists(store: AnnStore, query_vec, nprobe: int) -> list[int]:
+    """The ``nprobe`` stored lists nearest the query: a stable rank of
+    the (L2-normalized) centroid panel by dot product, ties to the
+    lower list_id — the contract of ann.ivf_topk and the SQL oracle."""
     q = np.asarray(query_vec, dtype=np.float64)
     qn = q / np.linalg.norm(q)
-    probe = np.argsort(-(store.centroids @ qn), kind="stable")[:nprobe].tolist()
-    cand = (
-        spark.read.parquet(store.path("ivf"))
-        .where(F.col("list_id").isin([int(x) for x in probe]))
-        .select("id", "vec")
-    )
-    return cosine_topk(cand, query_vec, k, id_col="id", vec_col="vec")
+    return [int(x) for x in np.argsort(-(store.centroids @ qn), kind="stable")[: int(nprobe)]]
 
 
 def mutual_knn_stored(
@@ -389,33 +383,11 @@ def mutual_knn_stored(
     # candidate scoring is the wide leg (k·n·|list| rows x dim): Spark's
     # array higher-order functions run INTERPRETED per element, so the
     # zip_with fold costs ~dim·4 lambda evals per row (measured ~4.5 s
-    # of the operator's wall at 250k rows); one Arrow batch kernel does
-    # the same float64 row-wise dot vectorized. The probe leg above
-    # stays HOF — it is |panel|·n_centroids rows, never wide.
-    import pandas as pd  # noqa: PLC0415
-
-    joined = cand.join(panel, "qid").select("qid", "id", "qv", "vec")
-
-    def _score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.vstack(pdf["qv"].values).astype(np.float64)
-            V = np.vstack(pdf["vec"].values).astype(np.float64)
-            qn = np.linalg.norm(Q, axis=1)
-            vn = np.linalg.norm(V, axis=1)
-            d = qn * vn
-            dot = np.einsum("ij,ij->i", Q, V)
-            c = np.where(d > 0, dot / np.where(d > 0, d, 1.0), 0.0)
-            yield pd.DataFrame(
-                {
-                    "qid": pdf["qid"].values.astype(np.int64),
-                    "id": pdf["id"].values.astype(np.int64),
-                    "c": c,
-                }
-            )
-
-    scored = joined.mapInPandas(_score, "qid long, id long, c double")
+    # of the operator's wall at 250k rows); the batch probes' Arrow
+    # kernel does the same float64 row-wise dot vectorized. The probe
+    # leg above stays HOF — it is |panel|·n_centroids rows, never wide.
+    joined = cand.join(panel, "qid").select("qid", "id", "vec", "qv")
+    scored = joined.mapInPandas(_cosine_kernel, "qid long, id long, c double")
     knn = scored.withColumn(
         "rn",
         F.row_number().over(
@@ -471,18 +443,9 @@ def ivf_batch_topk_stored(
     full corpus and the per-qid result equals the brute scan
     (asserted in tests — the same full-probe == brute discipline as
     every stored family's oracle)."""
-    import pandas as pd  # noqa: PLC0415
-
-    from pyspark.sql.window import Window
-
-    qmat = [
-        (int(qid), np.asarray(qv, dtype=np.float64)) for qid, qv in queries
+    probe_rows = [
+        (int(qid), x) for qid, qv in queries for x in _probe_lists(store, qv, nprobe)
     ]
-    probe_rows = []
-    for qid, q in qmat:
-        qn = q / np.linalg.norm(q)
-        pr = np.argsort(-(store.centroids @ qn), kind="stable")[: int(nprobe)]
-        probe_rows += [(qid, int(x)) for x in pr]
     probe_map = spark.createDataFrame(probe_rows, "qid long, list_id int")
     lists = sorted({x for _, x in probe_rows})
     cand = (
@@ -492,10 +455,32 @@ def ivf_batch_topk_stored(
         .select("qid", "id", "vec")
     )
     qdf = spark.createDataFrame(
-        [(qid, [float(x) for x in q]) for qid, q in qmat],
+        [(int(qid), [float(x) for x in qv]) for qid, qv in queries],
         "qid long, qv array<double>",
     )
     return _batch_cosine_rank(cand.join(F.broadcast(qdf), "qid"), k)
+
+
+def _cosine_kernel(batches):
+    """Exact cosine of each (qid, id, vec, qv) row, vectorized per Arrow
+    batch; yields (qid, id, c) with c = 0 where a norm is 0."""
+    import pandas as pd  # noqa: PLC0415
+
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        Q = np.vstack(pdf["qv"].values).astype(np.float64)
+        V = np.vstack(pdf["vec"].values).astype(np.float64)
+        d = np.linalg.norm(Q, axis=1) * np.linalg.norm(V, axis=1)
+        dot = np.einsum("ij,ij->i", Q, V)
+        c = np.where(d > 0, dot / np.where(d > 0, d, 1.0), 0.0)
+        yield pd.DataFrame(
+            {
+                "qid": pdf["qid"].values.astype(np.int64),
+                "id": pdf["id"].values.astype(np.int64),
+                "c": c,
+            }
+        )
 
 
 def _batch_cosine_rank(joined: DataFrame, k: int) -> DataFrame:
@@ -503,29 +488,10 @@ def _batch_cosine_rank(joined: DataFrame, k: int) -> DataFrame:
     flat (qid, id, vec, qv) candidate rows in ONE Arrow kernel, then a
     per-qid rank window. Returns (qid, id, cos) rounded 6dp, ordered
     (qid ASC, cos DESC, id ASC)."""
-    import pandas as pd  # noqa: PLC0415
-
     from pyspark.sql.window import Window
 
-    def _score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.vstack(pdf["qv"].values).astype(np.float64)
-            V = np.vstack(pdf["vec"].values).astype(np.float64)
-            d = np.linalg.norm(Q, axis=1) * np.linalg.norm(V, axis=1)
-            dot = np.einsum("ij,ij->i", Q, V)
-            c = np.where(d > 0, dot / np.where(d > 0, d, 1.0), 0.0)
-            yield pd.DataFrame(
-                {
-                    "qid": pdf["qid"].values.astype(np.int64),
-                    "id": pdf["id"].values.astype(np.int64),
-                    "c": c,
-                }
-            )
-
     scored = joined.select("qid", "id", "vec", "qv").mapInPandas(
-        _score, "qid long, id long, c double"
+        _cosine_kernel, "qid long, id long, c double"
     )
     ranked = scored.withColumn(
         "rn",
@@ -747,8 +713,7 @@ def ivfpq_topk_stored(
     C = np.asarray(pm["codebooks"], dtype=np.float64)
     m, sd = C.shape[0], C.shape[2]
     q = np.asarray(query_vec, dtype=np.float64)
-    qn = q / np.linalg.norm(q)
-    probe = np.argsort(-(store.centroids @ qn), kind="stable")[:nprobe].tolist()
+    probe = _probe_lists(store, q, nprobe)
     dt = np.stack(
         [
             ((q[j * sd : (j + 1) * sd][None, :] - C[j]) ** 2).sum(axis=1)
@@ -757,7 +722,7 @@ def ivfpq_topk_stored(
     )
     cand = (
         spark.read.parquet(store.path("pq"))
-        .where(F.col("list_id").isin([int(x) for x in probe]))
+        .where(F.col("list_id").isin(probe))
         .select("id", adc_dist_expr(dt).alias("adist"))
         .orderBy(F.asc("adist"), F.asc("id"))
         .limit(k * refine)

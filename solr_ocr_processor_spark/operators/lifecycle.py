@@ -38,30 +38,42 @@ to ``doc_map`` before any shard builds — reruns and resumes read the
 checkpoint instead of recomputing, so doc ids are stable across
 failures (SURVEY §4.2-5; monotonically_increasing_id is banned).
 
-Every IN-PLACE rewrite — :func:`compact`, the fingerprint refresh of
-:func:`sync_store`, :func:`merge_shards_tiered`, and the HNSW store's
-append, tiered merge and force merge — goes through one protocol:
+Every mutation after the build — :func:`compact`, :func:`sync_store`,
+:func:`merge_shards_tiered`, the stream fold-in
+(``streaming.ingest.merge_stream``), and the HNSW store's append,
+tiered merge and force merge — is one transaction under one protocol:
 
-1. stage: the replacement tables are written under
+1. stage: the replacement tables, and the part files an append adds
+   (doc_map, manifest and tombstone rows), are written under
    ``{root}/_swap_<name>/`` (Spark's listing hides ``_``-prefixed
    paths); the live tables are not touched;
 2. commit: ``journal.json`` is written atomically (tmp file +
    ``os.replace``). It lists steps ``(src in stage, dst, paths to drop
-   first)``;
+   first)``; an append moves each staged part file (Spark part names
+   are unique) into the live table's directory, and a step without a
+   ``src`` only drops ``dst``;
 3. swap: replay runs the steps in order — drop, then rename ``src`` to
    ``dst`` — and skips a step whose ``src`` is already gone, so a
    replay can restart from any crash point;
 4. heal: :func:`heal` finishes every journaled stage and discards every
    stage without a journal (the crash came before the commit, so the
-   live tables are intact).
+   live tables are intact and a re-run repeats the op with the same
+   doc ids and shard number).
+
+The fold (:func:`_stage_fold`, shared by ``sync_store`` and
+``merge_stream``) stages a new ``shard=N`` plus its doc_map rows,
+term_stats, corpus, corpus_prior and lineage row; the sync adds its
+tombstone rows and ``conv_hashes`` to the same journal.
 
 Contract: one writer per store. Every mutating entry point heals
 first; readers do not heal, so after a crash inside a swap the store
 reads correctly again once the next mutating call (or :func:`heal`)
-has run. The append-only, commit-ordered writes (build resume, stream
-fold-in) need no stage. Renames are driver-local filesystem ops, so
-the root must be on a filesystem the driver addresses directly
-(local/NFS; on object stores swap via the catalog instead).
+has run. Only :func:`build_store` (resumed per shard from the
+manifest) and the standalone tombstone appends of :func:`delete_conv`
+and :func:`delete_convs` write live tables directly. Renames are
+driver-local filesystem ops, so the root must be on a filesystem the
+driver addresses directly (local/NFS; on object stores swap via the
+catalog instead).
 """
 
 from __future__ import annotations
@@ -78,7 +90,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, IndexConfig
-from ..plans.materialize import materialize_docs
 from .blocks import BlockIndex, build_block_index
 from .build import Index, build_postings
 
@@ -116,6 +127,7 @@ def commit_swap(root: str, name: str, steps: list[tuple[str, str, list[str]]]) -
     it in. ``steps`` are ``(src, dst, drops)``: ``src`` relative to the
     stage, ``dst`` and ``drops`` relative to ``root``."""
     stage = swap_stage(root, name)
+    os.makedirs(stage, exist_ok=True)
     _write_journal(stage, steps)
     _replay(root, stage)
 
@@ -137,9 +149,11 @@ def _replay(root: str, stage: str) -> None:
     shutil.rmtree(stage)
 
 
-def _swap_step(root: str, stage: str, src: str, dst: str, drops: list[str]) -> None:
-    staged = os.path.join(stage, src)
-    if not os.path.exists(staged):
+def _swap_step(
+    root: str, stage: str, src: str | None, dst: str, drops: list[str]
+) -> None:
+    staged = src and os.path.join(stage, src)
+    if staged and not os.path.exists(staged):
         return  # swapped in by an earlier attempt
     for rel in (*drops, dst):
         path = os.path.join(root, rel)
@@ -147,6 +161,8 @@ def _swap_step(root: str, stage: str, src: str, dst: str, drops: list[str]) -> N
             shutil.rmtree(path)
         elif os.path.exists(path):
             os.remove(path)
+    if not staged:
+        return  # a drop-only step
     target = os.path.join(root, dst)
     os.makedirs(os.path.dirname(target), exist_ok=True)
     os.rename(staged, target)
@@ -232,7 +248,7 @@ def build_store(
             .parquet(corpus_prior_path)
         )
     prior = spark.read.parquet(corpus_prior_path).first()
-    global_stats = (int(prior["n_docs"]), float(prior["avgdl"]))
+    gstats = (int(prior["n_docs"]), float(prior["avgdl"]))
     shard_width = max(1, -(-n_docs_total // n_shards))
 
     done = _manifest_done_shards(spark, store)
@@ -257,49 +273,13 @@ def build_store(
             doc_map=convs,
             n_docs_hint=max(0, min(hi, n_docs_total) - lo),
         )
-        bidx = build_block_index(idx, cfg, corpus_stats=global_stats)
-
-        idx.postings.write.mode("overwrite").parquet(
-            store.path(f"postings/shard={shard}")
-        )
-        write_blocks(bidx.blocks, store.path(f"blocks/shard={shard}"))
-        idx.doc_meta.write.mode("overwrite").parquet(
-            store.path(f"doc_meta/shard={shard}")
-        )
-        # Manifest stats come from the tables just WRITTEN (two tiny
-        # aggregations over parquet), not from re-running the build DAG:
-        # the old distinct().count() / blocks.count() calls re-executed
-        # the tokenize+encode pipeline twice more per shard — pure
-        # serial-fraction waste at scale.
-        meta_row = (
-            spark.read.parquet(store.path(f"doc_meta/shard={shard}"))
-            .agg(
-                F.count(F.lit(1)).alias("n_convs"),
-                F.sum("n_turns").alias("n_turns"),
-            )
-            .first()
-        )
-        blk_row = (
-            spark.read.parquet(store.path(f"blocks/shard={shard}"))
-            .agg(
-                F.count(F.lit(1)).alias("n_blocks"),
-                F.sum("n_docs").alias("n_postings"),
-            )
-            .first()
-        )
-        n_convs, n_turns = int(meta_row["n_convs"]), int(meta_row["n_turns"] or 0)
-        n_blocks = int(blk_row["n_blocks"])
-        n_postings = int(blk_row["n_postings"] or 0)
+        _write_shard(idx.postings, idx.doc_meta, store.root, shard, cfg, gstats)
+        counts = _shard_counts(spark, store.root, shard)
         idx.postings.unpersist()
         idx.mat.unpersist()  # releases docs + the persisted turns base
-        wall = time.perf_counter() - t0
-        row = [
-            (build_id, shard, "done", n_convs, n_turns, n_postings, n_blocks,
-             wall, time.time())
-        ]
-        spark.createDataFrame(row, MANIFEST_SCHEMA).write.mode("append").parquet(
-            store.path("manifest")
-        )
+        _lineage(spark, build_id, shard, counts, time.perf_counter() - t0).write.mode(
+            "append"
+        ).parquet(store.path("manifest"))
         built += 1
         if fail_after_shard is not None and built >= fail_after_shard:
             raise RuntimeError(f"injected failure after shard {shard}")
@@ -318,9 +298,8 @@ def build_store(
 
 def finalize_store(spark: SparkSession, store: IndexStore) -> None:
     """Recompute the global dictionary (term_stats) and corpus stats
-    from every shard's persisted tables. Shared by the initial sharded
-    build and by streaming fold-in (merge_stream), which appends a new
-    shard and must refresh the globals the query side scores with."""
+    from every shard's persisted tables — the last step of the sharded
+    build."""
     term_stats, corpus = global_stats(
         spark.read.parquet(store.path("postings")),
         spark.read.parquet(store.path("doc_meta")),
@@ -336,10 +315,11 @@ def global_stats(postings: DataFrame, doc_meta: DataFrame) -> tuple[DataFrame, D
         F.count(F.lit(1)).cast("long").alias("df"),
         F.sum("tf").cast("long").alias("cf"),
     )
+    # an empty table (every doc compacted away) is (0, 0, 0.0), not NULLs
     corpus = doc_meta.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_tokens"),
-        (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
+        F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("total_tokens"),
+        F.coalesce(F.sum("dl") / F.count(F.lit(1)), F.lit(0.0)).alias("avgdl"),
     )
     return term_stats, corpus
 
@@ -351,6 +331,159 @@ def write_blocks(blocks: DataFrame, path: str) -> None:
     blocks.repartition(F.col("term")).sortWithinPartitions(
         "term", "range_id", "block_id"
     ).write.mode("overwrite").parquet(path)
+
+
+_SHARD_TABLES = ("postings", "doc_meta", "blocks")
+_GLOBAL_TABLES = ("term_stats", "corpus", "corpus_prior")
+
+
+def _write_shard(
+    postings: DataFrame,
+    doc_meta: DataFrame,
+    dest: str,
+    shard: int,
+    cfg: IndexConfig,
+    stats,
+) -> None:
+    """Write one shard's postings, doc_meta and blocks under
+    ``{dest}/<table>/shard=N`` — ``dest`` is the store root (the build)
+    or a swap stage. Blocks encode against the GLOBAL ``stats`` =
+    (n_docs, avgdl), or against what ``stats()`` returns once postings
+    and doc_meta are written (globals that count this shard). They
+    encode from ``postings`` when it is cached (a fresh build), else
+    from the table just written instead of re-running its plan."""
+
+    def path(table: str) -> str:
+        return os.path.join(dest, table, f"shard={shard}")
+
+    postings.write.mode("overwrite").parquet(path("postings"))
+    doc_meta.write.mode("overwrite").parquet(path("doc_meta"))
+    if callable(stats):
+        stats = stats()
+    if not postings.is_cached:  # the schema is known: no inference job
+        postings = postings.sparkSession.read.schema(postings.schema).parquet(
+            path("postings")
+        )
+    blocks = build_block_index(
+        Index(postings, doc_meta, term_stats=None, corpus=None, mat=None),
+        cfg,
+        corpus_stats=stats,
+    ).blocks
+    write_blocks(blocks, path("blocks"))
+
+
+def _shard_counts(spark: SparkSession, dest: str, shard: int) -> tuple[int, int, int, int]:
+    """(n_convs, n_turns, n_postings, n_blocks) of a shard written by
+    :func:`_write_shard`: two tiny aggregates over its parquet, not a
+    re-run of the tokenize+encode DAG."""
+
+    def read(table: str) -> DataFrame:
+        return spark.read.parquet(os.path.join(dest, table, f"shard={shard}"))
+
+    meta = read("doc_meta").agg(F.count(F.lit(1)), F.sum("n_turns")).first()
+    blk = read("blocks").agg(F.count(F.lit(1)), F.sum("n_docs")).first()
+    return int(meta[0]), int(meta[1] or 0), int(blk[1] or 0), int(blk[0])
+
+
+def _lineage(
+    spark: SparkSession, build_id: str, shard: int, counts: tuple, wall: float
+) -> DataFrame:
+    """One ``done`` manifest row (build_id, shard, counts, wall)."""
+    return spark.createDataFrame(
+        [(build_id, int(shard), "done", *counts, float(wall), time.time())],
+        MANIFEST_SCHEMA,
+    )
+
+
+def _stage_append(df: DataFrame, stage: str, table: str) -> list:
+    """Stage ``df`` as a new part file of ``table``; returns the journal
+    steps that move it into the live table. The appended rows are
+    narrow (ids, names, lineage), so one file per append keeps both
+    the journal and the table's file count short; ``repartition``, not
+    ``coalesce``, so the plan that computes the rows stays parallel."""
+    df.repartition(1).write.parquet(os.path.join(stage, table))
+    parts = sorted(
+        f for f in os.listdir(os.path.join(stage, table)) if not f.startswith(("_", "."))
+    )
+    return [(f"{table}/{f}", f"{table}/{f}", []) for f in parts]
+
+
+def _stage_globals(stage: str, postings: DataFrame, doc_meta: DataFrame) -> tuple[int, float]:
+    """Stage term_stats and corpus of ``postings``/``doc_meta``, and
+    corpus_prior as a file copy of that corpus (the stats a later
+    appended shard encodes with). Returns the corpus (n_docs, avgdl)."""
+    term_stats, corpus = global_stats(postings, doc_meta)
+    term_stats.write.parquet(os.path.join(stage, "term_stats"))
+    corpus.write.parquet(os.path.join(stage, "corpus"))
+    shutil.copytree(os.path.join(stage, "corpus"), os.path.join(stage, "corpus_prior"))
+    row = corpus.first()
+    return int(row["n_docs"]), float(row["avgdl"])
+
+
+def _stage_fold(
+    spark: SparkSession, store: IndexStore, fresh: DataFrame, stage: str
+) -> tuple[int, list]:
+    """The fold shared by :func:`sync_store` and
+    ``streaming.ingest.merge_stream``: stage the build of the ``fresh``
+    turns as ONE new shard, writing nothing live.
+
+    Doc ids follow the live doc_map's max and the shard number is the
+    manifest's max + 1 — both read from live tables, so a re-run after
+    a crash before the commit repeats them. Staged: the shard's
+    postings, doc_meta and blocks (encoded against the post-fold global
+    stats, as a batch build of the union would), its doc_map rows,
+    term_stats/corpus over the live plus the staged tables,
+    corpus_prior, and one lineage row. Older shards' blocks keep their
+    build avgdl — the WAND bound scales by max(1, avgdl_now /
+    avgdl_built) at query time, so pruning stays exact.
+
+    Returns the number of conversations folded (0: nothing staged) and
+    the journal steps that publish the fold."""
+    from ..plans.materialize import assign_doc_ids, ordered_turns
+
+    turns = ordered_turns(fresh)
+    n_new = turns.select("conv_id").distinct().count()
+    if n_new == 0:
+        return 0, []
+    top = spark.read.parquet(store.path("doc_map")).agg(F.max("doc_id")).first()[0]
+    base = 0 if top is None else top + 1  # None: every doc compacted away
+    shard = 1 + max(
+        (r["shard"] for r in spark.read.parquet(store.path("manifest"))
+         .select("shard").collect()),
+        default=-1,
+    )
+    ids0 = assign_doc_ids(turns)
+    new_map = ids0.withColumn("doc_id", (F.col("doc_id") + F.lit(base)).cast("long"))
+    new_map.persist()
+    idx = build_postings(fresh, store.cfg, doc_map=new_map, n_docs_hint=n_new)
+
+    def union(table: str, *cols: str) -> DataFrame:
+        return spark.read.parquet(store.path(table)).select(*cols).unionByName(
+            spark.read.parquet(os.path.join(stage, table)).select(*cols)
+        )
+
+    # Unpersist in a FINALLY: a crash that leaves these frames cached
+    # poisons a same-session retry — Spark's plan cache matches the
+    # retry's identical logical plan and serves stale rows.
+    try:
+        _write_shard(
+            idx.postings, idx.doc_meta, stage, shard, store.cfg,
+            lambda: _stage_globals(
+                stage, union("postings", "term", "tf"), union("doc_meta", "dl")
+            ),
+        )
+        steps = [(f"{t}/shard={shard}", f"{t}/shard={shard}", []) for t in _SHARD_TABLES]
+        steps += _stage_append(new_map, stage, "doc_map")
+        steps += [(t, t, []) for t in _GLOBAL_TABLES]
+        counts = _shard_counts(spark, stage, shard)
+        lineage = _lineage(spark, "stream-merge", shard, counts, 0.0)
+        steps += _stage_append(lineage, stage, "manifest")
+    finally:
+        new_map.unpersist()
+        ids0.unpersist()
+        idx.postings.unpersist()
+        idx.mat.unpersist()  # docs + the persisted turns base
+    return n_new, steps
 
 
 def load_index(spark: SparkSession, store: IndexStore) -> Index:
@@ -545,8 +678,8 @@ def sync_store(
         AND re-folded under fresh doc ids — the reference's re-POST =
         DELETE + add lifecycle (app/handler/indexer.go:46-163) as one
         batch plan;
-      - added convs fold in as one new shard
-        (streaming.ingest.fold_turns — the merge_stream core);
+      - added convs fold in as one new shard (:func:`_stage_fold`,
+        the merge_stream core);
       - unchanged convs are untouched: no tokenize, no re-encode.
 
     ``compact_after=True`` (default) physically drops the tombstoned
@@ -567,11 +700,16 @@ def sync_store(
     content_hash — narrow rows, ~1e9 convs is tens of GB shuffled,
     not the corpus); only added+changed conversations' turns are
     scanned/tokenized; the fold is one appended shard.
-    """
-    from ..streaming.ingest import _resume_unfinalized, fold_turns
 
+    One transaction: the tombstone rows, the fold
+    (:func:`_stage_fold`) and the new ``conv_hashes`` are staged and
+    committed under one journal (module docstring). A crash before the
+    commit leaves the store as it was, and a re-run repeats the sync
+    with the same doc ids; after it, :func:`heal` finishes the sync and
+    a re-run finds nothing to do.
+    """
     heal(store.root)
-    _resume_unfinalized(spark, store)
+    stage = swap_stage(store.root, "sync")
 
     new_h = conv_content_hashes(new_transcripts).persist()
     dm = spark.read.parquet(store.path("doc_map"))
@@ -579,56 +717,63 @@ def sync_store(
     live = (
         dm.join(dead, "doc_id", "left_anti").select("conv_id").distinct().persist()
     )
-    # counted EAGERLY: every count below must see the PRE-sync state,
-    # and the fold's doc_map append invalidates the file listing under
-    # the cached plan (a lazy re-count would include the new convs).
-    n_live = live.count()
+    cached = [new_h, live]
+    try:
+        n_live = live.count()
+        new_convs = new_h.select("conv_id")
+        removed = live.join(new_convs, "conv_id", "left_anti")
 
-    new_convs = new_h.select("conv_id")
-    removed = live.join(new_convs, "conv_id", "left_anti")
+        hashes_path = store.path("conv_hashes")
+        if _exists(spark, hashes_path):
+            old_h = spark.read.parquet(hashes_path)
+            changed = (
+                live.join(old_h, "conv_id")
+                .join(new_h.withColumnRenamed("content_hash", "_new"), "conv_id")
+                .where(F.col("content_hash") != F.col("_new"))
+                .select("conv_id")
+                .distinct()
+            )
+        else:
+            changed = spark.createDataFrame([], "conv_id string")
+        cached.append(changed.persist())
+        n_changed = changed.count()
+        victims = removed.unionByName(changed).persist()
+        cached.append(victims)
+        n_victims_convs = victims.count()
+        n_removed = n_victims_convs - n_changed
 
-    hashes_path = store.path("conv_hashes")
-    if _exists(spark, hashes_path):
-        old_h = spark.read.parquet(hashes_path)
-        changed = (
-            live.join(old_h, "conv_id")
-            .join(new_h.withColumnRenamed("content_hash", "_new"), "conv_id")
-            .where(F.col("content_hash") != F.col("_new"))
-            .select("conv_id")
-            .distinct()
+        steps = []
+        if n_victims_convs:
+            # the set form of delete_convs: every live doc id of a victim
+            tombs = (
+                dm.join(victims, "conv_id", "left_semi")
+                .join(dead, "doc_id", "left_anti")
+                .withColumn("deleted_at", F.lit(time.time()))
+                .select("doc_id", "conv_id", "deleted_at")
+            )
+            steps += _stage_append(tombs, stage, "tombstones")
+
+        # added + changed = new convs minus the live-and-unchanged set
+        keep = live.join(changed, "conv_id", "left_anti")
+        to_add = new_convs.join(keep, "conv_id", "left_anti")
+        fresh = new_transcripts.join(to_add, "conv_id", "left_semi")
+        n_folded, fold_steps = _stage_fold(spark, store, fresh, stage)
+
+        # the fingerprints become exactly the new corpus's
+        new_h.write.parquet(os.path.join(stage, "conv_hashes"))
+        commit_swap(
+            store.root, "sync", steps + fold_steps + [("conv_hashes", "conv_hashes", [])]
         )
-    else:
-        changed = spark.createDataFrame([], "conv_id string")
-    changed = changed.persist()
-    n_changed = changed.count()
-
-    victims = removed.unionByName(changed).persist()
-    n_victims_convs = victims.count()
-    n_removed = n_victims_convs - n_changed
-    if n_victims_convs:
-        delete_convs(spark, store, victims)
-
-    # added + changed = new convs minus the live-and-unchanged set
-    keep = live.join(changed, "conv_id", "left_anti")
-    to_add = new_convs.join(keep, "conv_id", "left_anti")
-    fresh = new_transcripts.join(to_add, "conv_id", "left_semi")
-    n_folded = fold_turns(spark, store, fresh)
-    n_added = n_folded - n_changed
-
-    # refresh the fingerprints to exactly the new corpus
-    new_h.write.parquet(os.path.join(swap_stage(store.root, "sync"), "conv_hashes"))
-    commit_swap(store.root, "sync", [("conv_hashes", "conv_hashes", [])])
-
-    n_unchanged = n_live - n_changed - n_removed
-    for df in (new_h, live, changed, victims):
-        df.unpersist()
+    finally:
+        for df in cached:
+            df.unpersist()
     if compact_after and n_victims_convs:
         compact(spark, store)
     return {
-        "added": n_added,
+        "added": n_folded - n_changed,
         "changed": n_changed,
         "removed": n_removed,
-        "unchanged": n_unchanged,
+        "unchanged": n_live - n_changed - n_removed,
     }
 
 
@@ -661,49 +806,34 @@ def compact(spark: SparkSession, store: IndexStore) -> None:
         return
     stage = swap_stage(store.root, "compact")
 
-    def staged(name: str) -> str:
-        return os.path.join(stage, name)
+    def kept(name: str) -> DataFrame:
+        return spark.read.parquet(store.path(name)).join(dead, "doc_id", "left_anti")
+
+    def staged(name: str) -> DataFrame:
+        return spark.read.parquet(os.path.join(stage, name))
 
     # Rewrites keep the shard=K partition layout (everything folds into
     # shard=0): writing FLAT files under the root would leave any LATER
     # merge_stream shard=N directory in a mixed flat+partitioned layout
-    # that Spark's partition discovery rejects.
-    for name in ("postings", "doc_meta"):
-        kept = spark.read.parquet(store.path(name)).join(dead, "doc_id", "left_anti")
-        kept.drop("shard").write.parquet(staged(f"{name}/shard=0"))
+    # that Spark's partition discovery rejects. Blocks are re-encoded
+    # (a dead doc may sit mid-block) against the compacted corpus, and
+    # corpus_prior follows it so later appends encode against the
+    # post-compaction avgdl.
+    _write_shard(
+        kept("postings").drop("shard"), kept("doc_meta").drop("shard"), stage, 0,
+        store.cfg, lambda: _stage_globals(stage, staged("postings"), staged("doc_meta")),
+    )
     # doc_map must drop the victims too: membership (check) and the
     # merge re-POST filter read it, and a conv whose postings were
     # physically removed must read as NOT indexed (re-streaming it
     # later re-indexes under a fresh doc id).
-    dm = spark.read.parquet(store.path("doc_map")).join(dead, "doc_id", "left_anti")
-    dm.write.parquet(staged("doc_map"))
-    postings = spark.read.parquet(staged("postings"))
-    doc_meta = spark.read.parquet(staged("doc_meta"))
-    term_stats, corpus = global_stats(postings, doc_meta)
-    term_stats.write.parquet(staged("term_stats"))
-    corpus.write.parquet(staged("corpus"))
-    # keep the sharded-build prior in sync so later appends encode
-    # bounds against the post-compaction avgdl (the same one-row table)
-    shutil.copytree(staged("corpus"), staged("corpus_prior"))
-
-    from ..plans.materialize import Materialized
-
-    pseudo = Index(
-        postings=postings,
-        doc_meta=doc_meta,
-        term_stats=term_stats,
-        corpus=corpus,
-        mat=Materialized(turns=None, docs=None),
-    )
-    # blocks must be re-encoded (a dead doc may sit mid-block): rebuild
-    # from the compacted posting table via the same block builder.
-    write_blocks(build_block_index(pseudo, store.cfg).blocks, staged("blocks/shard=0"))
-    tables = ("postings", "doc_meta", "blocks", "term_stats", "corpus", "corpus_prior")
+    kept("doc_map").write.parquet(os.path.join(stage, "doc_map"))
     # tombstones served their purpose: they go with the doc_map swap
     commit_swap(
         store.root,
         "compact",
-        [(t, t, []) for t in tables] + [("doc_map", "doc_map", ["tombstones"])],
+        [(t, t, []) for t in _SHARD_TABLES + _GLOBAL_TABLES]
+        + [("doc_map", "doc_map", ["tombstones"])],
     )
 
 
@@ -726,10 +856,10 @@ def merge_shards_tiered(
     against the store's GLOBAL corpus stats (same rule as the sharded
     build, so WAND bounds stay exact), and the three tables swap in as
     ``shard=min(members)`` through the journaled stage (module
-    docstring), replacing the members. df/avgdl are untouched (no docs
-    added or removed), so query results are rank-identical before and
-    after (asserted in tests). A lineage row per group follows its
-    swap; a merge finished by :func:`heal` records none.
+    docstring), replacing the members, together with the group's
+    lineage row. df/avgdl are untouched (no docs added or removed), so
+    query results are rank-identical before and after (asserted in
+    tests).
 
     Returns the number of merge groups executed (0 = nothing to do)."""
     heal(store.root)
@@ -743,43 +873,28 @@ def merge_shards_tiered(
         return 0
     crow = spark.read.parquet(store.path("corpus")).first()
     gstats = (int(crow["n_docs"]), float(crow["avgdl"]))
-    from ..plans.materialize import Materialized
-
     stage = swap_stage(store.root, "merge")
-    tables = ("postings", "doc_meta", "blocks")
     for row in plan:
         members = sorted(int(s) for s in row["seg_ids"].split(","))
         target = members[0]
-        for name in ("postings", "doc_meta"):
-            spark.read.parquet(store.path(name)).where(
+
+        def group(name: str) -> DataFrame:
+            return spark.read.parquet(store.path(name)).where(
                 F.col("shard").isin(members)
-            ).drop("shard").write.parquet(os.path.join(stage, name))
-        pseudo = Index(
-            postings=spark.read.parquet(os.path.join(stage, "postings")),
-            doc_meta=spark.read.parquet(os.path.join(stage, "doc_meta")),
-            term_stats=spark.read.parquet(store.path("term_stats")),
-            corpus=spark.read.parquet(store.path("corpus")),
-            mat=Materialized(turns=None, docs=None),
-        )
-        bidx = build_block_index(pseudo, store.cfg, corpus_stats=gstats)
-        write_blocks(bidx.blocks, os.path.join(stage, "blocks"))
+            ).drop("shard")
+
+        _write_shard(group("postings"), group("doc_meta"), stage, target, store.cfg, gstats)
+        # lineage: the census counted the members' doc_meta rows
+        lineage = _lineage(spark, "tiered-merge", target, (int(row["total_docs"]), 0, 0, 0), 0.0)
         commit_swap(
             store.root,
             "merge",
             [
-                (t, f"{t}/shard={target}", [f"{t}/shard={m}" for m in members])
-                for t in tables
-            ],
+                (f"{t}/shard={target}", f"{t}/shard={target}", [f"{t}/shard={m}" for m in members])
+                for t in _SHARD_TABLES
+            ]
+            + _stage_append(lineage, stage, "manifest"),
         )
-        # lineage: one manifest row per executed merge (the census
-        # counted the members' doc_meta rows)
-        spark.createDataFrame(
-            [(
-                "tiered-merge", int(target), "done", int(row["total_docs"]), 0, 0,
-                0, 0.0, 0.0,
-            )],
-            MANIFEST_SCHEMA,
-        ).write.mode("append").parquet(store.path("manifest"))
     return len(plan)
 
 

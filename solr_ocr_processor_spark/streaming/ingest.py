@@ -25,11 +25,13 @@ lacks:
 - :func:`merge_stream`          — fold staged turns into the queryable
   store as a NEW shard: assign fresh doc ids after the existing max,
   run the normal build path (materialize -> tokenize -> blocks with
-  the refreshed global avgdl), refresh term_stats/corpus, clear the
-  staging table. After the merge, queries see streamed conversations
-  with scores identical to a batch build of the union (per-block
-  stored avgdl + query-time bound scaling keeps older shards' WAND
-  pruning exact under the avgdl drift the merge causes).
+  the refreshed global avgdl), refresh term_stats/corpus, consume the
+  staging table — all staged and published as one journaled
+  transaction, so a crash at any point heals or re-runs to the same
+  store. After the merge, queries see streamed conversations with
+  scores identical to a batch build of the union (per-block stored
+  avgdl + query-time bound scaling keeps older shards' WAND pruning
+  exact under the avgdl drift the merge causes).
 - :func:`turns_per_window`      — event-time windowed counts per role
   with a watermark: the standard late-data-tolerant monitoring agg
   over the ingest stream (build-metrics analog of S11).
@@ -127,91 +129,13 @@ def append_turns(stream: DataFrame, store_root: str, checkpoint_dir: str):
     )
 
 
-def _merge_manifest_row(
-    spark: SparkSession, store, shard: int, status: str, n_convs: int
-) -> None:
-    """Append one stream-merge lineage row. Stats come from the WRITTEN
-    shard tables (cheap parquet aggs, no re-run of the tokenize/encode
-    DAG — same rule as build_store)."""
-    import time as _time
-
-    from ..operators.lifecycle import MANIFEST_SCHEMA
-
-    meta_row = (
-        spark.read.parquet(store.path(f"doc_meta/shard={shard}"))
-        .agg(F.sum("n_turns").alias("nt"))
-        .first()
-    )
-    blk_row = (
-        spark.read.parquet(store.path(f"blocks/shard={shard}"))
-        .agg(F.count(F.lit(1)).alias("nb"), F.sum("n_docs").alias("np"))
-        .first()
-    )
-    row = [("stream-merge", shard, status, n_convs, int(meta_row["nt"] or 0),
-            int(blk_row["np"] or 0), int(blk_row["nb"]), 0.0, _time.time())]
-    spark.createDataFrame(row, MANIFEST_SCHEMA).write.mode("append").parquet(
-        store.path("manifest")
-    )
-
-
-def _finalize_merge(spark: SparkSession, store, shard: int) -> int:
-    """Publish a written stream-merge shard: append its doc_map rows
-    (anti-joined — idempotent under replay), refresh the global
-    term_stats/corpus/corpus_prior, and append the 'done' manifest row.
-    Every step is safe to re-run, so a crash anywhere inside is healed
-    by calling it again. Returns the number of doc_map rows appended."""
-    from ..operators.lifecycle import finalize_store
-
-    shard_map = spark.read.parquet(store.path(f"doc_meta/shard={shard}")).select(
-        "doc_id", "conv_id"
-    )
-    doc_map = spark.read.parquet(store.path("doc_map"))
-    missing = shard_map.join(doc_map.select("doc_id"), "doc_id", "left_anti")
-    n_appended = missing.count()
-    if n_appended:
-        missing.write.mode("append").parquet(store.path("doc_map"))
-    finalize_store(spark, store)
-    spark.read.parquet(store.path("corpus")).write.mode("overwrite").parquet(
-        store.path("corpus_prior")
-    )
-    n_convs = spark.read.parquet(store.path(f"doc_meta/shard={shard}")).count()
-    _merge_manifest_row(spark, store, shard, "done", n_convs)
-    return n_appended
-
-
-def _resume_unfinalized(spark: SparkSession, store) -> int:
-    """Heal stream-merge shards whose tables were committed (a 'staged'
-    manifest row exists) but whose publication never finished (no
-    'done' row): re-run the idempotent finalize for each. Returns the
-    number of doc_map rows recovered."""
-    from ..operators.lifecycle import _exists
-
-    if not _exists(spark, store.path("manifest")):
-        return 0
-    rows = (
-        spark.read.parquet(store.path("manifest"))
-        .select("shard", "status")
-        .collect()
-    )
-    staged = {r["shard"] for r in rows if r["status"] == "staged"}
-    done = {r["shard"] for r in rows if r["status"] == "done"}
-    recovered = 0
-    for shard in sorted(staged - done):
-        recovered += _finalize_merge(spark, store, shard)
-    return recovered
-
-
 def merge_stream(spark: SparkSession, store) -> int:
     """Fold staged stream_turns into the persisted index store.
 
-    Returns the number of conversations merged (0 = nothing staged),
-    including any recovered from a previously crashed merge.
+    Returns the number of conversations merged (0 = nothing staged).
 
     The fold is an APPEND-ONLY shard build, not a full rebuild:
 
-    0. an interrupted in-place swap (``lifecycle.heal``) and a
-       previously crashed merge (shard tables written, publication
-       unfinished) are healed first — see crash protocol below;
     1. staged convs already present in doc_map are dropped (re-POST
        idempotency, the reference's GET-before-POST analog);
     2. new convs get doc ids AFTER the existing max (checkpointed ids
@@ -219,128 +143,38 @@ def merge_stream(spark: SparkSession, store) -> int:
     3. the new shard's tokens/blocks/doc_meta are built by the SAME
        code path as the batch build, with blocks encoded against the
        post-merge global avgdl;
-    4. term_stats/corpus are re-finalized over all shards, and
-       corpus_prior is refreshed so later appends see current stats.
-       Older shards' blocks keep their stored build avgdl — the WAND
-       bound scales by max(1, avgdl_now/avgdl_built) at query time, so
-       pruning stays exact without re-encoding them;
-    5. the staging table is cleared (consumed).
+    4. term_stats/corpus are recomputed over all shards, and
+       corpus_prior follows them so later appends see current stats;
+    5. the staging table is consumed.
 
-    Crash protocol (commit-ordered like build_store): the shard tables
-    are written FIRST (idempotent overwrites keyed by a shard number
-    derived from the manifest, which a pre-commit rerun recomputes
-    identically), then a 'staged' manifest row is appended — the commit
-    point — and only then doc_map appends, globals refresh, the 'done'
-    row lands, and staging clears. A crash before the commit point
-    reruns the identical build into the same shard; a crash after it is
-    detected on the next call (staged-without-done) and healed by the
-    idempotent :func:`_finalize_merge` — the doc_map append anti-joins
-    existing ids so a replay never duplicates rows, and the staging
-    table is only consumed after the convs are visible in doc_map.
-    Without this ordering a crash between the doc_map append and
-    finalize left term_stats stale AND let a later merge reuse the same
-    shard number, overwriting postings whose doc_map entries survived
-    (check() said indexed, queries found nothing).
+    Crash protocol: the merge is ONE journaled transaction (the
+    lifecycle module's stage → journal → swap → heal). Steps 2-4 are
+    staged by ``lifecycle._stage_fold`` and the journal publishes them,
+    its last step dropping ``stream_turns``. A crash before the journal
+    leaves the store untouched: the next call discards the stage and
+    repeats the merge with the same doc ids and shard number. A crash
+    after it is finished by ``lifecycle.heal``, which every mutating
+    call runs first, so the staged convs are then indexed exactly once
+    and the staging table is gone.
 
     After the merge, a query over the store is rank- and
     score-identical to a batch build over the union of the original
     and streamed transcripts (asserted in tests), because BM25 depends
     only on the global stats and per-doc tf/dl — all refreshed.
     """
-    import shutil
-
-    from ..operators.lifecycle import _exists, heal
+    from ..operators.lifecycle import _exists, _stage_fold, commit_swap, heal, swap_stage
 
     heal(store.root)
-    recovered = _resume_unfinalized(spark, store)
-
     staged_path = store.path("stream_turns")
     if not _exists(spark, staged_path):
-        return recovered
+        return 0
     staged = spark.read.parquet(staged_path).select(
         "conv_id", "turn_idx", "role", "text", "tool", "ts"
     )
     doc_map = spark.read.parquet(store.path("doc_map"))
     fresh = staged.join(doc_map.select("conv_id"), "conv_id", "left_anti")
-    n_new = fold_turns(spark, store, fresh)
-    shutil.rmtree(staged_path, ignore_errors=True)
-    return recovered + n_new
-
-
-def fold_turns(spark: SparkSession, store, fresh: DataFrame) -> int:
-    """The fold core shared by :func:`merge_stream` (staged stream
-    turns) and the batch corpus synchroniser
-    (``operators/lifecycle.sync_store``): build the given fresh turns
-    into ONE new queryable shard with doc ids after the current max,
-    commit-ordered exactly as documented on merge_stream (shard tables
-    -> 'staged' manifest row -> idempotent finalize). Returns the
-    number of conversations folded (0 = empty input, nothing written).
-
-    The caller owns idempotency/diff policy: merge_stream anti-joins
-    staged convs against doc_map (re-POST = no-op); sync_store passes
-    added + changed convs (the changed conv's OLD doc ids must already
-    be tombstoned — its new rows get fresh ids, and the doc_id-keyed
-    anti-join in _finalize_merge appends them cleanly next to the dead
-    ones).
-    """
-    from ..operators.blocks import build_block_index
-    from ..operators.build import build_postings
-    from ..operators.lifecycle import write_blocks
-    from ..plans.materialize import assign_doc_ids, ordered_turns
-
-    doc_map = spark.read.parquet(store.path("doc_map"))
-    turns = ordered_turns(fresh)
-    n_new = turns.select("conv_id").distinct().count()
-    if n_new == 0:
-        return 0
-
-    base = doc_map.agg(F.max("doc_id").alias("m")).first()["m"] + 1
-    ids0 = assign_doc_ids(turns)
-    new_map = ids0.withColumn(
-        "doc_id", (F.col("doc_id") + F.lit(int(base))).cast("long")
-    )
-    new_map.persist()
-
-    idx = build_postings(fresh, store.cfg, doc_map=new_map, n_docs_hint=n_new)
-    # Unpersist in a FINALLY: the cached frames are keyed on the
-    # staging path, so a crash that leaves them cached poisons a
-    # same-session retry — Spark's plan-cache matches the retry's
-    # identical logical plan and serves rows whose backing files the
-    # retry already replaced (observed as a silently empty re-merge).
-    try:
-        # shard number: manifest max + 1 over ALL rows (staged
-        # included) — stable across pre-commit reruns, never reused
-        # after the commit
-        shard = 1 + max(
-            (r["shard"] for r in spark.read.parquet(store.path("manifest"))
-             .select("shard").collect()),
-            default=-1,
-        )
-        idx.postings.write.mode("overwrite").parquet(
-            store.path(f"postings/shard={shard}")
-        )
-        idx.doc_meta.write.mode("overwrite").parquet(
-            store.path(f"doc_meta/shard={shard}")
-        )
-        # post-merge global stats: existing corpus + the new shard's
-        old = spark.read.parquet(store.path("corpus")).first()
-        add = (
-            spark.read.parquet(store.path(f"doc_meta/shard={shard}"))
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("toks"))
-            .first()
-        )
-        n_docs = int(old["n_docs"]) + int(add["n"])
-        avgdl = (int(old["total_tokens"]) + int(add["toks"] or 0)) / n_docs
-        bidx = build_block_index(idx, store.cfg, corpus_stats=(n_docs, avgdl))
-        write_blocks(bidx.blocks, store.path(f"blocks/shard={shard}"))
-        # COMMIT POINT: every shard table is on disk; record it.
-        _merge_manifest_row(spark, store, shard, "staged", n_new)
-        _finalize_merge(spark, store, shard)
-    finally:
-        new_map.unpersist()
-        ids0.unpersist()
-        idx.postings.unpersist()
-        idx.mat.unpersist()  # docs + the persisted turns base
+    n_new, steps = _stage_fold(spark, store, fresh, swap_stage(store.root, "stream"))
+    commit_swap(store.root, "stream", steps + [(None, "stream_turns", [])])
     return n_new
 
 

@@ -182,3 +182,57 @@ def test_tz_naive_ts_fingerprints_like_utc_timestamps(spark, tmp_path_factory):
         )
     assert hashes["naive"] == hashes["utc"]
     assert [h[0] for h in hashes["utc"]] == ["c1", "c2"]
+
+
+def test_empty_store_after_compact_loads_and_syncs_back(spark, tmp_path_factory):
+    """Removing every conversation leaves an empty store whose corpus row
+    is (0, 0, 0.0), not NULLs: it loads, WAND and bm25_topk return typed
+    empty frames, and a later sync back to the corpus answers exactly
+    like a fresh build. Reached both ways: a sync to an empty corpus
+    (compact_after), and delete_convs of everything + compact."""
+    from solr_ocr_processor_spark.operators.lifecycle import (
+        delete_convs,
+        load_index,
+        sync_store,
+    )
+    from solr_ocr_processor_spark.operators.score import bm25_topk
+
+    small = synth_transcripts(spark, n_convs=6, max_turns=5, seed=13)
+    tmp = tmp_path_factory.mktemp("empty_store")
+    store = build_store(spark, small, str(tmp / "store"), CFG, n_shards=2)
+    fresh = build_store(spark, small, str(tmp / "fresh"), CFG, n_shards=2)
+
+    def results(st):
+        bidx, idx = load_block_index(spark, st), load_index(spark, st)
+        return [
+            [(r["doc_id"], r["conv_id"], r["score"]) for r in df.collect()]
+            for df in (
+                wand_topk(spark, bidx, QUERY, k=5, cfg=CFG),
+                bm25_topk(spark, idx, QUERY, k=5, cfg=CFG),
+            )
+        ]
+
+    def assert_empty(st):
+        crow = spark.read.parquet(st.path("corpus")).first()
+        assert (crow["n_docs"], crow["total_tokens"], crow["avgdl"]) == (0, 0, 0.0)
+        bidx, idx = load_block_index(spark, st), load_index(spark, st)
+        for df in (
+            wand_topk(spark, bidx, QUERY, k=5, cfg=CFG),
+            bm25_topk(spark, idx, QUERY, k=5, cfg=CFG),
+        ):
+            assert {"doc_id", "conv_id", "score"} <= set(df.columns)
+            assert df.collect() == []
+
+    want = results(fresh)
+    assert sync_store(spark, store, small.limit(0)) == {
+        "added": 0, "changed": 0, "removed": 6, "unchanged": 0,
+    }
+    assert_empty(store)
+    assert sync_store(spark, store, small) == {
+        "added": 6, "changed": 0, "removed": 0, "unchanged": 0,
+    }
+    assert results(store) == want
+
+    delete_convs(spark, store, small.select("conv_id"))
+    compact(spark, store)
+    assert_empty(store)

@@ -1,8 +1,9 @@
 """Crash at every step of every in-place store rewrite.
 
-Each rewrite — compact, sync_store's fingerprint refresh, the text
-shard merge, and the HNSW store's tiered merge, force merge and append
-— goes through lifecycle's one stage → journal → swap → heal protocol.
+Each rewrite — compact, sync_store, the stream fold-in (merge_stream),
+the text shard merge, and the HNSW store's tiered merge, force merge
+and append — goes through lifecycle's one stage → journal → swap →
+heal protocol.
 The harness injects a failure at each protocol boundary of an op:
 
 - staged, journal not yet written;
@@ -53,12 +54,13 @@ from solr_ocr_processor_spark.operators.lifecycle import (
 from solr_ocr_processor_spark.operators.score import bm25_topk
 from solr_ocr_processor_spark.operators.wand import wand_topk
 from solr_ocr_processor_spark.sources.transcripts import synth_transcripts
+from solr_ocr_processor_spark.streaming.ingest import merge_stream
 
 CFG = IndexConfig(block_size=4, range_size=8)
 QUERY = "spark window merge"
 TEXT_TABLES = (
     "postings", "doc_meta", "blocks", "doc_map", "term_stats", "corpus",
-    "corpus_prior", "conv_hashes", "tombstones",
+    "corpus_prior", "conv_hashes", "tombstones", "manifest", "stream_turns",
 )
 # wall-clock and random lineage fields differ between any two runs
 VOLATILE = {"deleted_at", "build_id", "wall_sec", "finished_at"}
@@ -184,57 +186,78 @@ def test_compact_heals_from_every_crash_point(spark, corpus, tmp_path):
     assert rows["tombstones"] is None
 
 
-def test_sync_fingerprints_heal_from_every_crash_point(spark, corpus, tmp_path):
-    """The fingerprint refresh is the sync's last write. A crash before
-    its journal leaves the pre-sync fingerprints live (the tombstones
-    and the fold are already committed), so that point is checked
-    against the uninterrupted run with the old conv_hashes; a re-run
-    would re-fold the changed conversations."""
+def test_sync_heals_from_every_crash_point(spark, corpus, tmp_path):
+    """The whole sync is one journal: the tombstones of the removed and
+    the changed conversation, the fold of the changed and the added
+    one, and the new fingerprints. A crash before the journal leaves
+    the store as it was, and the re-run folds under the same doc ids
+    and shard number; a crash after it is finished by heal."""
     base = str(tmp_path / "base")
     build_store(spark, corpus, base, CFG, n_shards=2)
     old_hashes = _rows(os.path.join(base, "conv_hashes"))
-    new = corpus.where(F.col("conv_id") != "s000000").withColumn(
-        "text",
-        F.when(
-            F.col("conv_id") == "s000001", F.concat(F.col("text"), F.lit(" zebra"))
-        ).otherwise(F.col("text")),
+    new = (
+        corpus.where(F.col("conv_id") != "s000000")
+        .withColumn(
+            "text",
+            F.when(
+                F.col("conv_id") == "s000001", F.concat(F.col("text"), F.lit(" zebra"))
+            ).otherwise(F.col("text")),
+        )
+        .unionByName(
+            corpus.where(F.col("conv_id") == "s000002").withColumn(
+                "conv_id", F.lit("zz0001")
+            )
+        )
     )
 
     def op(root):
         res = sync_store(spark, IndexStore(root, CFG), new, compact_after=False)
-        assert res == {"added": 0, "changed": 1, "removed": 1, "unchanged": 14}
+        assert res == {"added": 1, "changed": 1, "removed": 1, "unchanged": 14}
 
-    want_root = str(tmp_path / "uninterrupted")
-    shutil.copytree(base, want_root)
-    assert _run(lambda: op(want_root), None) == 3
-    snap = _text_snapshot(spark)
-    want_rows, want_results = snap(want_root)
-    assert want_rows["conv_hashes"] != old_hashes
-    for at in range(3):
-        root = str(tmp_path / f"crash_{at}")
-        shutil.copytree(base, root)
-        _run(lambda: op(root), at)
-        assert heal(root) == (0 if at == 0 else 1)
-        rows, results = snap(root)
-        if at == 0:
-            assert rows.pop("conv_hashes") == old_hashes
-            assert rows == {t: r for t, r in want_rows.items() if t != "conv_hashes"}
-        else:
-            assert rows == want_rows, at
-        assert results == want_results, at
+    n = _crash_every_boundary(base, op, _text_snapshot(spark), tmp_path)
+    # tombstones, 3 shard tables, doc_map, 3 globals, lineage, conv_hashes
+    assert n == 2 + 10
+    rows, _ = _text_snapshot(spark)(str(tmp_path / "uninterrupted"))
+    assert rows["conv_hashes"] != old_hashes
+    assert len(rows["tombstones"][1]) == 2  # the old docs of s000000, s000001
+    assert _partitions(os.path.join(tmp_path / "uninterrupted", "postings")) == [0, 1, 2]
+
+
+def test_merge_stream_heals_from_every_crash_point(spark, corpus, tmp_path):
+    """The stream fold-in is one journal whose last step drops the
+    staged stream_turns; at every crash point the store heals (or
+    re-runs) to the uninterrupted merge, and the staging table is
+    consumed exactly once."""
+    base = str(tmp_path / "base")
+    build_store(spark, corpus.where("conv_id < 's000012'"), base, CFG, n_shards=2)
+    corpus.where("conv_id >= 's000012'").write.parquet(
+        os.path.join(base, "stream_turns", "batch_id=0")
+    )
+
+    def op(root):
+        assert merge_stream(spark, IndexStore(root, CFG)) == 4
+
+    n = _crash_every_boundary(base, op, _text_snapshot(spark), tmp_path)
+    assert n == 2 + 9  # 3 shard tables, doc_map, 3 globals, lineage, drop
+    merged = str(tmp_path / "uninterrupted")
+    rows, results = _text_snapshot(spark)(merged)
+    assert rows["stream_turns"] is None
+    assert len(rows["doc_map"][1]) == 16
+    ref = str(tmp_path / "ref")
+    build_store(spark, corpus, ref, CFG, n_shards=2)
+    assert results == _text_results(spark, ref)
 
 
 def test_shard_merge_heals_from_every_crash_point(spark, corpus, tmp_path):
     base = str(tmp_path / "base")
     build_store(spark, corpus, base, CFG, n_shards=4)
-    # the manifest's lineage row follows the swap, so it is not compared
     n = _crash_every_boundary(
         base,
         lambda root: merge_shards_tiered(spark, IndexStore(root, CFG), merge_factor=4),
         _text_snapshot(spark),
         tmp_path,
     )
-    assert n == 2 + 3  # one group: postings, doc_meta, blocks
+    assert n == 2 + 4  # one group: postings, doc_meta, blocks, lineage
     merged = str(tmp_path / "uninterrupted")
     for t in ("postings", "doc_meta", "blocks"):
         assert _partitions(os.path.join(merged, t)) == [0]

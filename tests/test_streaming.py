@@ -4,6 +4,8 @@ windowed event-time agg is correct."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -256,17 +258,16 @@ def test_compact_then_merge_stream(spark, tmp_path_factory):
 
 
 def test_merge_stream_crash_resume(spark, tmp_path_factory, monkeypatch):
-    """Regression (ADVICE r2, medium): a crash between the shard-table
-    commit and publication must NOT strand the merge. The commit
-    protocol: shard tables first, then the 'staged' manifest row
-    (commit point), then doc_map/globals/'done'. A crash right after
-    the commit point is healed by the next merge_stream call — convs
-    become queryable, doc_map gains no duplicates, and a LATER merge
-    takes a fresh shard number instead of overwriting."""
+    """Regression (ADVICE r2, medium): a crash between the commit and
+    publication must NOT strand the merge. The merge is one journal; a
+    crash right after the journal is written, before any swap step, is
+    healed by the next merge_stream call — convs become queryable,
+    doc_map gains no duplicates, and a LATER merge takes a fresh shard
+    number instead of overwriting."""
     import pytest as _pytest
 
-    import solr_ocr_processor_spark.streaming.ingest as ingest
     from solr_ocr_processor_spark.config import IndexConfig
+    from solr_ocr_processor_spark.operators import lifecycle
     from solr_ocr_processor_spark.operators.lifecycle import (
         build_store,
         check,
@@ -293,22 +294,26 @@ def test_merge_stream_crash_resume(spark, tmp_path_factory, monkeypatch):
         stream_transcripts(spark, src1), store.root, str(root / "ckpt1")
     ).awaitTermination(120)
 
-    real_finalize = ingest._finalize_merge
+    real_step = lifecycle._swap_step
 
     def boom(*a, **k):
         raise RuntimeError("injected crash after commit point")
 
-    monkeypatch.setattr(ingest, "_finalize_merge", boom)
+    monkeypatch.setattr(lifecycle, "_swap_step", boom)
     with _pytest.raises(RuntimeError, match="injected crash"):
         merge_stream(spark, store)
-    monkeypatch.setattr(ingest, "_finalize_merge", real_finalize)
+    monkeypatch.setattr(lifecycle, "_swap_step", real_step)
 
-    # crashed state: shard committed ('staged' row), nothing published
+    # crashed state: journal committed, nothing published
+    assert os.path.exists(os.path.join(store.root, "_swap_stream", "journal.json"))
     assert check(spark, store, "s000011") is False
     n1 = s1.select("conv_id").distinct().count()
-    assert merge_stream(spark, store) == n1  # heals + consumes staging
+    # heal (run first by merge_stream) finishes the merge and consumes
+    # the staging, so the call itself finds nothing left to fold
+    assert merge_stream(spark, store) == 0
     assert check(spark, store, "s000011") is True
     dm = spark.read.parquet(store.path("doc_map"))
+    assert dm.count() == batch.select("conv_id").distinct().count() + n1
     assert dm.count() == dm.select("doc_id").distinct().count()
     assert dm.count() == dm.select("conv_id").distinct().count()
 
@@ -334,14 +339,14 @@ def test_merge_stream_crash_resume(spark, tmp_path_factory, monkeypatch):
 
 
 def test_merge_stream_crash_before_commit(spark, tmp_path_factory, monkeypatch):
-    """A crash BEFORE the commit point (shard tables written, no
-    manifest row) must rerun cleanly: the rerun recomputes the same
-    shard number and overwrites the same tables — no duplicates, no
-    orphans."""
+    """A crash BEFORE the commit point (the fold staged, no journal)
+    must rerun cleanly: the rerun discards the stage, recomputes the
+    same doc ids and shard number and publishes them once — no
+    duplicates, no orphans."""
     import pytest as _pytest
 
-    import solr_ocr_processor_spark.streaming.ingest as ingest
     from solr_ocr_processor_spark.config import IndexConfig
+    from solr_ocr_processor_spark.operators import lifecycle
     from solr_ocr_processor_spark.operators.lifecycle import (
         build_store,
         check,
@@ -365,15 +370,16 @@ def test_merge_stream_crash_before_commit(spark, tmp_path_factory, monkeypatch):
         stream_transcripts(spark, src), store.root, str(root / "ckpt")
     ).awaitTermination(120)
 
-    real_row = ingest._merge_manifest_row
+    real_journal = lifecycle._write_journal
 
     def boom(*a, **k):
         raise RuntimeError("injected crash before commit point")
 
-    monkeypatch.setattr(ingest, "_merge_manifest_row", boom)
+    monkeypatch.setattr(lifecycle, "_write_journal", boom)
     with _pytest.raises(RuntimeError, match="injected crash"):
         merge_stream(spark, store)
-    monkeypatch.setattr(ingest, "_merge_manifest_row", real_row)
+    monkeypatch.setattr(lifecycle, "_write_journal", real_journal)
+    assert check(spark, store, "s000012") is False
 
     n1 = s1.select("conv_id").distinct().count()
     assert merge_stream(spark, store) == n1
