@@ -49,12 +49,13 @@ tiered merge and force merge — is one transaction under one protocol:
    paths); the live tables are not touched;
 2. commit: ``journal.json`` is written atomically (tmp file +
    ``os.replace``). It lists steps ``(src in stage, dst, paths to drop
-   first)``; an append moves each staged part file (Spark part names
-   are unique) into the live table's directory, and a step without a
+   first)``; an append is one step that moves every staged part file
+   of the table into the live table's directory, and a step without a
    ``src`` only drops ``dst``;
 3. swap: replay runs the steps in order — drop, then rename ``src`` to
-   ``dst`` — and skips a step whose ``src`` is already gone, so a
-   replay can restart from any crash point;
+   ``dst`` — and skips a step whose ``src`` is already gone (an append
+   moves only the part files still staged; Spark part names are
+   unique), so a replay can restart from any crash point;
 4. heal: :func:`heal` finishes every journaled stage and discards every
    stage without a journal (the crash came before the commit, so the
    live tables are intact and a re-run repeats the op with the same
@@ -125,7 +126,9 @@ def swap_stage(root: str, name: str) -> str:
 def commit_swap(root: str, name: str, steps: list[tuple[str, str, list[str]]]) -> None:
     """Commit the rewrite staged under ``swap_stage(root, name)`` and swap
     it in. ``steps`` are ``(src, dst, drops)``: ``src`` relative to the
-    stage, ``dst`` and ``drops`` relative to ``root``."""
+    stage, ``dst`` and ``drops`` relative to ``root``. A ``src`` of
+    ``"<dir>/*"`` appends: the staged part files move into ``dst``. A
+    ``src`` of None drops ``dst``, and its parent once that is empty."""
     stage = swap_stage(root, name)
     os.makedirs(stage, exist_ok=True)
     _write_journal(stage, steps)
@@ -141,10 +144,17 @@ def _write_journal(stage: str, steps) -> None:
     os.replace(tmp, os.path.join(stage, "journal.json"))
 
 
+def _journal_steps(stage: str) -> list | None:
+    """The committed steps of the stage, or None before its commit."""
+    path = os.path.join(stage, "journal.json")
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
+
+
 def _replay(root: str, stage: str) -> None:
-    with open(os.path.join(stage, "journal.json")) as f:
-        steps = json.load(f)
-    for src, dst, drops in steps:
+    for src, dst, drops in _journal_steps(stage):
         _swap_step(root, stage, src, dst, drops)
     shutil.rmtree(stage)
 
@@ -152,6 +162,16 @@ def _replay(root: str, stage: str) -> None:
 def _swap_step(
     root: str, stage: str, src: str | None, dst: str, drops: list[str]
 ) -> None:
+    target = os.path.join(root, dst)
+    if src and src.endswith("/*"):
+        # an append: part names are unique, and a file moved by an
+        # earlier attempt is no longer in the stage
+        parts = os.path.join(stage, src[:-2])
+        for f in sorted(os.listdir(parts)) if os.path.isdir(parts) else []:
+            if not f.startswith(("_", ".")):
+                os.makedirs(target, exist_ok=True)
+                os.rename(os.path.join(parts, f), os.path.join(target, f))
+        return
     staged = src and os.path.join(stage, src)
     if staged and not os.path.exists(staged):
         return  # swapped in by an earlier attempt
@@ -162,8 +182,11 @@ def _swap_step(
         elif os.path.exists(path):
             os.remove(path)
     if not staged:
-        return  # a drop-only step
-    target = os.path.join(root, dst)
+        # a drop-only step; its parent goes too once nothing is left in it
+        parent = os.path.normpath(os.path.dirname(target))
+        if parent != os.path.normpath(root) and os.path.isdir(parent) and not os.listdir(parent):
+            os.rmdir(parent)
+        return
     os.makedirs(os.path.dirname(target), exist_ok=True)
     os.rename(staged, target)
 
@@ -173,11 +196,11 @@ def heal(root: str) -> int:
     stage without a journal. Returns the number of swaps finished."""
     healed = 0
     for stage in sorted(glob.glob(os.path.join(glob.escape(root), "_swap_*"))):
-        if os.path.exists(os.path.join(stage, "journal.json")):
+        if _journal_steps(stage) is None:
+            shutil.rmtree(stage)
+        else:
             _replay(root, stage)
             healed += 1
-        else:
-            shutil.rmtree(stage)
     return healed
 
 
@@ -247,8 +270,7 @@ def build_store(
             .write.mode("overwrite")
             .parquet(corpus_prior_path)
         )
-    prior = spark.read.parquet(corpus_prior_path).first()
-    gstats = (int(prior["n_docs"]), float(prior["avgdl"]))
+    gstats = _corpus_stats(spark, corpus_prior_path)
     shard_width = max(1, -(-n_docs_total // n_shards))
 
     done = _manifest_done_shards(spark, store)
@@ -285,7 +307,11 @@ def build_store(
             raise RuntimeError(f"injected failure after shard {shard}")
 
     # --- step 2: finalize global stats ---------------------------------
-    finalize_store(spark, store)
+    _write_globals(
+        store.root,
+        spark.read.parquet(store.path("postings")),
+        spark.read.parquet(store.path("doc_meta")),
+    )
     # content fingerprints for the incremental sync path (sync_store):
     # one extra narrow md5 groupBy over the input — idempotent on
     # resume (overwrite), and the only way a FIRST sync can tell a
@@ -294,18 +320,6 @@ def build_store(
     if not _exists(spark, hp):
         conv_content_hashes(transcripts).write.mode("overwrite").parquet(hp)
     return store
-
-
-def finalize_store(spark: SparkSession, store: IndexStore) -> None:
-    """Recompute the global dictionary (term_stats) and corpus stats
-    from every shard's persisted tables — the last step of the sharded
-    build."""
-    term_stats, corpus = global_stats(
-        spark.read.parquet(store.path("postings")),
-        spark.read.parquet(store.path("doc_meta")),
-    )
-    term_stats.write.mode("overwrite").parquet(store.path("term_stats"))
-    corpus.write.mode("overwrite").parquet(store.path("corpus"))
 
 
 def global_stats(postings: DataFrame, doc_meta: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -322,6 +336,29 @@ def global_stats(postings: DataFrame, doc_meta: DataFrame) -> tuple[DataFrame, D
         F.coalesce(F.sum("dl") / F.count(F.lit(1)), F.lit(0.0)).alias("avgdl"),
     )
     return term_stats, corpus
+
+
+CORPUS_SCHEMA = "n_docs long, total_tokens long, avgdl double"
+
+
+def _corpus_stats(spark: SparkSession, path: str) -> tuple[int, float]:
+    """(n_docs, avgdl) of a corpus table, read with its known schema
+    (no inference job)."""
+    row = spark.read.schema(CORPUS_SCHEMA).parquet(path).first()
+    return int(row["n_docs"]), float(row["avgdl"])
+
+
+def _write_globals(dest: str, postings: DataFrame, doc_meta: DataFrame) -> None:
+    """Write term_stats and corpus of ``postings``/``doc_meta`` under
+    ``dest`` — the store root (the build) or a swap stage — and
+    corpus_prior as a file copy of that corpus (the stats a later
+    appended shard encodes with)."""
+    term_stats, corpus = global_stats(postings, doc_meta)
+    term_stats.write.mode("overwrite").parquet(os.path.join(dest, "term_stats"))
+    corpus.write.mode("overwrite").parquet(os.path.join(dest, "corpus"))
+    prior = os.path.join(dest, "corpus_prior")
+    shutil.rmtree(prior, ignore_errors=True)
+    shutil.copytree(os.path.join(dest, "corpus"), prior)
 
 
 def write_blocks(blocks: DataFrame, path: str) -> None:
@@ -343,23 +380,20 @@ def _write_shard(
     dest: str,
     shard: int,
     cfg: IndexConfig,
-    stats,
+    stats: tuple[int, float],
 ) -> None:
     """Write one shard's postings, doc_meta and blocks under
     ``{dest}/<table>/shard=N`` — ``dest`` is the store root (the build)
     or a swap stage. Blocks encode against the GLOBAL ``stats`` =
-    (n_docs, avgdl), or against what ``stats()`` returns once postings
-    and doc_meta are written (globals that count this shard). They
-    encode from ``postings`` when it is cached (a fresh build), else
-    from the table just written instead of re-running its plan."""
+    (n_docs, avgdl), from ``postings`` when it is cached (a fresh
+    build or fold), else from the table just written instead of
+    re-running its plan."""
 
     def path(table: str) -> str:
         return os.path.join(dest, table, f"shard={shard}")
 
     postings.write.mode("overwrite").parquet(path("postings"))
     doc_meta.write.mode("overwrite").parquet(path("doc_meta"))
-    if callable(stats):
-        stats = stats()
     if not postings.is_cached:  # the schema is known: no inference job
         postings = postings.sparkSession.read.schema(postings.schema).parquet(
             path("postings")
@@ -395,29 +429,11 @@ def _lineage(
     )
 
 
-def _stage_append(df: DataFrame, stage: str, table: str) -> list:
-    """Stage ``df`` as a new part file of ``table``; returns the journal
-    steps that move it into the live table. The appended rows are
-    narrow (ids, names, lineage), so one file per append keeps both
-    the journal and the table's file count short; ``repartition``, not
-    ``coalesce``, so the plan that computes the rows stays parallel."""
-    df.repartition(1).write.parquet(os.path.join(stage, table))
-    parts = sorted(
-        f for f in os.listdir(os.path.join(stage, table)) if not f.startswith(("_", "."))
-    )
-    return [(f"{table}/{f}", f"{table}/{f}", []) for f in parts]
-
-
-def _stage_globals(stage: str, postings: DataFrame, doc_meta: DataFrame) -> tuple[int, float]:
-    """Stage term_stats and corpus of ``postings``/``doc_meta``, and
-    corpus_prior as a file copy of that corpus (the stats a later
-    appended shard encodes with). Returns the corpus (n_docs, avgdl)."""
-    term_stats, corpus = global_stats(postings, doc_meta)
-    term_stats.write.parquet(os.path.join(stage, "term_stats"))
-    corpus.write.parquet(os.path.join(stage, "corpus"))
-    shutil.copytree(os.path.join(stage, "corpus"), os.path.join(stage, "corpus_prior"))
-    row = corpus.first()
-    return int(row["n_docs"]), float(row["avgdl"])
+def _stage_append(df: DataFrame, stage: str, table: str) -> tuple:
+    """Stage the rows ``df`` appends to ``table``; returns the journal
+    step that moves their part files into the live table."""
+    df.write.parquet(os.path.join(stage, table))
+    return (f"{table}/*", table, [])
 
 
 def _stage_fold(
@@ -456,34 +472,50 @@ def _stage_fold(
     new_map = ids0.withColumn("doc_id", (F.col("doc_id") + F.lit(base)).cast("long"))
     new_map.persist()
     idx = build_postings(fresh, store.cfg, doc_map=new_map, n_docs_hint=n_new)
+    idx.doc_meta.persist()  # read by the globals, then written
 
-    def union(table: str, *cols: str) -> DataFrame:
+    def union(table: str, new: DataFrame, *cols: str) -> DataFrame:
         return spark.read.parquet(store.path(table)).select(*cols).unionByName(
-            spark.read.parquet(os.path.join(stage, table)).select(*cols)
+            new.select(*cols)
         )
 
     # Unpersist in a FINALLY: a crash that leaves these frames cached
     # poisons a same-session retry — Spark's plan cache matches the
     # retry's identical logical plan and serves stale rows.
     try:
-        _write_shard(
-            idx.postings, idx.doc_meta, stage, shard, store.cfg,
-            lambda: _stage_globals(
-                stage, union("postings", "term", "tf"), union("doc_meta", "dl")
-            ),
+        _write_globals(
+            stage,
+            union("postings", idx.postings, "term", "tf"),
+            union("doc_meta", idx.doc_meta, "dl"),
         )
+        gstats = _corpus_stats(spark, os.path.join(stage, "corpus"))
+        _write_shard(idx.postings, idx.doc_meta, stage, shard, store.cfg, gstats)
         steps = [(f"{t}/shard={shard}", f"{t}/shard={shard}", []) for t in _SHARD_TABLES]
-        steps += _stage_append(new_map, stage, "doc_map")
+        steps.append(_stage_append(new_map, stage, "doc_map"))
         steps += [(t, t, []) for t in _GLOBAL_TABLES]
         counts = _shard_counts(spark, stage, shard)
         lineage = _lineage(spark, "stream-merge", shard, counts, 0.0)
-        steps += _stage_append(lineage, stage, "manifest")
+        steps.append(_stage_append(lineage, stage, "manifest"))
     finally:
         new_map.unpersist()
         ids0.unpersist()
+        idx.doc_meta.unpersist()
         idx.postings.unpersist()
         idx.mat.unpersist()  # docs + the persisted turns base
     return n_new, steps
+
+
+def _heal_fold(spark: SparkSession, store: IndexStore, name: str) -> int:
+    """:func:`heal` the store; returns the number of conversations that
+    a fold committed under the swap ``name`` and finished by this heal
+    published (the docs of its shard), 0 when none was pending."""
+    steps = _journal_steps(swap_stage(store.root, name)) or []
+    heal(store.root)
+    return sum(
+        spark.read.parquet(store.path(dst)).count()
+        for _, dst, _ in steps
+        if dst.startswith("doc_meta/")
+    )
 
 
 def load_index(spark: SparkSession, store: IndexStore) -> Index:
@@ -530,13 +562,13 @@ def load_index_with_content(
 
 def load_block_index(spark: SparkSession, store: IndexStore) -> BlockIndex:
     """Open the persisted store for querying (blocks + dictionary)."""
-    crow = spark.read.parquet(store.path("corpus")).first()
+    n_docs, avgdl = _corpus_stats(spark, store.path("corpus"))
     return BlockIndex(
         blocks=spark.read.parquet(store.path("blocks")),
         term_stats=spark.read.parquet(store.path("term_stats")),
         doc_meta=spark.read.parquet(store.path("doc_meta")),
-        n_docs=int(crow["n_docs"]),
-        avgdl=float(crow["avgdl"]),
+        n_docs=n_docs,
+        avgdl=avgdl,
         cfg=store.cfg,
     )
 
@@ -751,7 +783,7 @@ def sync_store(
                 .withColumn("deleted_at", F.lit(time.time()))
                 .select("doc_id", "conv_id", "deleted_at")
             )
-            steps += _stage_append(tombs, stage, "tombstones")
+            steps.append(_stage_append(tombs, stage, "tombstones"))
 
         # added + changed = new convs minus the live-and-unchanged set
         keep = live.join(changed, "conv_id", "left_anti")
@@ -801,16 +833,20 @@ def compact(spark: SparkSession, store: IndexStore) -> None:
     (verified in tests).
     """
     heal(store.root)
-    dead = tombstoned_convs(spark, store).select("doc_id").distinct()
-    if not dead.count():
-        return
+    dead = tombstoned_convs(spark, store).select("doc_id").distinct().persist()
+    try:
+        if dead.count():
+            _stage_compact(spark, store, dead)
+    finally:
+        dead.unpersist()
+
+
+def _stage_compact(spark: SparkSession, store: IndexStore, dead: DataFrame) -> None:
+    """Stage the store without the ``dead`` doc ids and commit it."""
     stage = swap_stage(store.root, "compact")
 
     def kept(name: str) -> DataFrame:
         return spark.read.parquet(store.path(name)).join(dead, "doc_id", "left_anti")
-
-    def staged(name: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(stage, name))
 
     # Rewrites keep the shard=K partition layout (everything folds into
     # shard=0): writing FLAT files under the root would leave any LATER
@@ -819,10 +855,10 @@ def compact(spark: SparkSession, store: IndexStore) -> None:
     # (a dead doc may sit mid-block) against the compacted corpus, and
     # corpus_prior follows it so later appends encode against the
     # post-compaction avgdl.
-    _write_shard(
-        kept("postings").drop("shard"), kept("doc_meta").drop("shard"), stage, 0,
-        store.cfg, lambda: _stage_globals(stage, staged("postings"), staged("doc_meta")),
-    )
+    postings, doc_meta = kept("postings").drop("shard"), kept("doc_meta").drop("shard")
+    _write_globals(stage, postings, doc_meta)
+    gstats = _corpus_stats(spark, os.path.join(stage, "corpus"))
+    _write_shard(postings, doc_meta, stage, 0, store.cfg, gstats)
     # doc_map must drop the victims too: membership (check) and the
     # merge re-POST filter read it, and a conv whose postings were
     # physically removed must read as NOT indexed (re-streaming it
@@ -871,8 +907,7 @@ def merge_shards_tiered(
     plan = tiered_merge_plan(census, merge_factor=merge_factor).collect()
     if not plan:
         return 0
-    crow = spark.read.parquet(store.path("corpus")).first()
-    gstats = (int(crow["n_docs"]), float(crow["avgdl"]))
+    gstats = _corpus_stats(spark, store.path("corpus"))
     stage = swap_stage(store.root, "merge")
     for row in plan:
         members = sorted(int(s) for s in row["seg_ids"].split(","))
@@ -893,7 +928,7 @@ def merge_shards_tiered(
                 (f"{t}/shard={target}", f"{t}/shard={target}", [f"{t}/shard={m}" for m in members])
                 for t in _SHARD_TABLES
             ]
-            + _stage_append(lineage, stage, "manifest"),
+            + [_stage_append(lineage, stage, "manifest")],
         )
     return len(plan)
 

@@ -26,7 +26,7 @@ lacks:
   store as a NEW shard: assign fresh doc ids after the existing max,
   run the normal build path (materialize -> tokenize -> blocks with
   the refreshed global avgdl), refresh term_stats/corpus, consume the
-  staging table — all staged and published as one journaled
+  staged batches it read — all staged and published as one journaled
   transaction, so a crash at any point heals or re-runs to the same
   store. After the merge, queries see streamed conversations with
   scores identical to a batch build of the union (per-block stored
@@ -41,6 +41,8 @@ lacks:
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -132,7 +134,8 @@ def append_turns(stream: DataFrame, store_root: str, checkpoint_dir: str):
 def merge_stream(spark: SparkSession, store) -> int:
     """Fold staged stream_turns into the persisted index store.
 
-    Returns the number of conversations merged (0 = nothing staged).
+    Returns the number of conversations merged (0 = nothing staged),
+    including any recovered from a previously crashed merge.
 
     The fold is an APPEND-ONLY shard build, not a full rebuild:
 
@@ -145,37 +148,46 @@ def merge_stream(spark: SparkSession, store) -> int:
        post-merge global avgdl;
     4. term_stats/corpus are recomputed over all shards, and
        corpus_prior follows them so later appends see current stats;
-    5. the staging table is consumed.
+    5. the staged batches it read are consumed.
 
     Crash protocol: the merge is ONE journaled transaction (the
     lifecycle module's stage → journal → swap → heal). Steps 2-4 are
     staged by ``lifecycle._stage_fold`` and the journal publishes them,
-    its last step dropping ``stream_turns``. A crash before the journal
-    leaves the store untouched: the next call discards the stage and
-    repeats the merge with the same doc ids and shard number. A crash
-    after it is finished by ``lifecycle.heal``, which every mutating
-    call runs first, so the staged convs are then indexed exactly once
-    and the staging table is gone.
+    its last steps dropping the ``stream_turns/batch_id=N`` partitions
+    the merge read (and ``stream_turns`` once empty). A crash before
+    the journal leaves the store untouched: the next call discards the
+    stage and repeats the merge with the same doc ids and shard number.
+    A crash after it is finished by ``lifecycle.heal``, which every
+    mutating call runs first, so the staged convs are then indexed
+    exactly once; a batch appended after the crash stays staged for
+    the next merge.
 
     After the merge, a query over the store is rank- and
     score-identical to a batch build over the union of the original
     and streamed transcripts (asserted in tests), because BM25 depends
     only on the global stats and per-doc tf/dl — all refreshed.
     """
-    from ..operators.lifecycle import _exists, _stage_fold, commit_swap, heal, swap_stage
+    from ..operators.lifecycle import _heal_fold, _stage_fold, commit_swap, swap_stage
 
-    heal(store.root)
+    n_healed = _heal_fold(spark, store, "stream")
     staged_path = store.path("stream_turns")
-    if not _exists(spark, staged_path):
-        return 0
-    staged = spark.read.parquet(staged_path).select(
-        "conv_id", "turn_idx", "role", "text", "tool", "ts"
+    # only the batches read here are consumed: a batch appended after
+    # this listing waits for the next merge
+    batches = sorted(os.listdir(staged_path)) if os.path.isdir(staged_path) else []
+    batches = [b for b in batches if b.startswith("batch_id=")]
+    if not batches:
+        return n_healed
+    staged = (
+        spark.read.option("basePath", staged_path)
+        .parquet(*[os.path.join(staged_path, b) for b in batches])
+        .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
     )
     doc_map = spark.read.parquet(store.path("doc_map"))
     fresh = staged.join(doc_map.select("conv_id"), "conv_id", "left_anti")
     n_new, steps = _stage_fold(spark, store, fresh, swap_stage(store.root, "stream"))
-    commit_swap(store.root, "stream", steps + [(None, "stream_turns", [])])
-    return n_new
+    drops = [(None, f"stream_turns/{b}", []) for b in batches]
+    commit_swap(store.root, "stream", steps + drops)
+    return n_healed + n_new
 
 
 def turns_per_window(

@@ -11,7 +11,10 @@ The harness injects a failure at each protocol boundary of an op:
 - after each swap step.
 
 It then heals. A crash before the commit leaves the live tables as
-they were, so the op is simply run again. The healed store must equal
+they were, so the op is simply run again. A crash after it writes
+nothing more than the uninterrupted run had written at that boundary,
+so that state is copied from the uninterrupted run instead of being
+reached by running the op once per boundary. The healed store must equal
 an uninterrupted run's store table by table (as sorted rows, read with
 pyarrow), and its query results must be identical: WAND and
 ``bm25_topk`` for the text index, exhaustive ``hnsw_topk_stored`` for
@@ -70,27 +73,29 @@ class Crash(RuntimeError):
     pass
 
 
-def _run(op, at):
+def _run(op, at, seen=lambda committed: None):
     """Run ``op`` with a crash at protocol boundary ``at`` (None: no
-    crash). Returns the number of boundaries the op passed."""
+    crash); ``seen(committed)`` is called at every boundary passed.
+    Returns the number of boundaries the op passed."""
     passed = 0
 
-    def boundary():
+    def boundary(committed):
         nonlocal passed
         if passed == at:
             raise Crash(f"injected crash at boundary {at}")
+        seen(committed)
         passed += 1
 
     write_journal, swap_step = lifecycle._write_journal, lifecycle._swap_step
 
     def journal(*args):
-        boundary()  # staged, no journal
+        boundary(False)  # staged, no journal
         write_journal(*args)
-        boundary()  # journal written, no step run
+        boundary(True)  # journal written, no step run
 
     def step(*args):
         swap_step(*args)
-        boundary()  # after this step
+        boundary(True)  # after this step
 
     with pytest.MonkeyPatch.context() as m:
         m.setattr(lifecycle, "_write_journal", journal)
@@ -122,17 +127,29 @@ def _crash_every_boundary(base, op, snapshot, tmp_path):
     """Copy the store at ``base`` for an uninterrupted run and for a
     crash at every boundary; each crashed copy, healed (and re-run when
     the crash came before the commit), must snapshot like the
-    uninterrupted one. ``op(root)`` runs the rewrite on a copy."""
+    uninterrupted one. ``op(root)`` runs the rewrite on a copy. A
+    committed boundary's crash state is a copy of the uninterrupted
+    store taken there; a crash before a commit is run for real, so the
+    re-run also starts in a session the crash left behind."""
     want_root = str(tmp_path / "uninterrupted")
     shutil.copytree(base, want_root)
-    n = _run(lambda: op(want_root), None)
+    crashed = []  # per boundary: the copied crash state, None before a commit
+
+    def seen(committed):
+        root = None
+        if committed:  # a crash here would write nothing more
+            root = shutil.copytree(want_root, str(tmp_path / f"crash_{len(crashed)}"))
+        crashed.append(root)
+
+    n = _run(lambda: op(want_root), None, seen)
     want = snapshot(want_root)
     assert n >= 3
     assert not [d for d in os.listdir(want_root) if d.startswith("_swap_")]
-    for at in range(n):
-        root = str(tmp_path / f"crash_{at}")
-        shutil.copytree(base, root)
-        _run(lambda: op(root), at)
+    for at, root in enumerate(crashed):
+        if root is None:
+            root = str(tmp_path / f"crash_{at}")
+            shutil.copytree(base, root)
+            _run(lambda: op(root), at)
         if heal(root) == 0:  # crashed before the commit: nothing swapped
             op(root)
         assert not [d for d in os.listdir(root) if d.startswith("_swap_")], at
@@ -246,6 +263,29 @@ def test_merge_stream_heals_from_every_crash_point(spark, corpus, tmp_path):
     ref = str(tmp_path / "ref")
     build_store(spark, corpus, ref, CFG, n_shards=2)
     assert results == _text_results(spark, ref)
+
+
+def test_merge_stream_keeps_a_batch_appended_after_a_crash(spark, corpus, tmp_path):
+    """The stream journal consumes only the batches its merge read: a
+    batch appended between a crash after the commit and the next merge
+    is folded by that merge, not dropped by its heal."""
+    root = str(tmp_path / "store")
+    build_store(spark, corpus.where("conv_id < 's000008'"), root, CFG, n_shards=2)
+    turns = os.path.join(root, "stream_turns")
+    corpus.where("conv_id >= 's000008' and conv_id < 's000012'").write.parquet(
+        os.path.join(turns, "batch_id=0")
+    )
+    store = IndexStore(root, CFG)
+    assert _run(lambda: merge_stream(spark, store), 1) == 1  # journal written
+    corpus.where("conv_id >= 's000012'").write.parquet(os.path.join(turns, "batch_id=1"))
+
+    assert merge_stream(spark, store) == 4 + 4  # the healed merge's + batch 1's
+    assert not os.path.exists(turns)
+    dm = spark.read.parquet(store.path("doc_map"))
+    assert dm.count() == dm.select("conv_id").distinct().count() == 16
+    ref = str(tmp_path / "ref")
+    build_store(spark, corpus, ref, CFG, n_shards=2)
+    assert _text_results(spark, root) == _text_results(spark, ref)
 
 
 def test_shard_merge_heals_from_every_crash_point(spark, corpus, tmp_path):

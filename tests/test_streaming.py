@@ -308,9 +308,7 @@ def test_merge_stream_crash_resume(spark, tmp_path_factory, monkeypatch):
     assert os.path.exists(os.path.join(store.root, "_swap_stream", "journal.json"))
     assert check(spark, store, "s000011") is False
     n1 = s1.select("conv_id").distinct().count()
-    # heal (run first by merge_stream) finishes the merge and consumes
-    # the staging, so the call itself finds nothing left to fold
-    assert merge_stream(spark, store) == 0
+    assert merge_stream(spark, store) == n1  # heals + consumes staging
     assert check(spark, store, "s000011") is True
     dm = spark.read.parquet(store.path("doc_map"))
     assert dm.count() == batch.select("conv_id").distinct().count() + n1
