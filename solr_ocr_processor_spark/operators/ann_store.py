@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ann import _planes, ivf_assign, ivf_centroids, lsh_assign
+from .lifecycle import commit_swap, heal, swap_stage
 
 
 @dataclass
@@ -114,7 +115,12 @@ def build_ann_store(
     a 10x slower build at bench scale); after the repartition each dir
     gets exactly one sorted file. At 10^9 rows pair this with
     spark.sql.files.maxRecordsPerFile to split oversized bucket files.
+
+    Both tables and meta.json are staged and swapped in through
+    lifecycle's journal, replacing any earlier build at ``root``.
     """
+    heal(root)
+    stage = swap_stage(root, "ann")
     # The build reads the corpus for several consumers (the sizing
     # count, two assignment passes, two join-backs, the centroid
     # seed). Persist the 2-column projection for the build's duration
@@ -133,9 +139,8 @@ def build_ann_store(
         .withColumn("bdir", F.shiftright("bucket", bucket_shift))
         .repartition("band", "bdir")
         .sortWithinPartitions("band", "bdir", "bucket")
-        .write.mode("overwrite")
-        .partitionBy("band", "bdir")
-        .parquet(os.path.join(root, "lsh"))
+        .write.partitionBy("band", "bdir")
+        .parquet(os.path.join(stage, "lsh"))
     )
 
     C = ivf_centroids(embs, n_centroids, ivf_seed, id_col, vec_col)
@@ -170,10 +175,9 @@ def build_ann_store(
         .withColumn("_salt", F.pmod(F.hash("id"), F.col("_fanout")))
         .repartition(total_slots, "list_id", "_salt")
         .drop("_fanout", "_salt")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", rows_per_dir)
+        .write.option("maxRecordsPerFile", rows_per_dir)
         .partitionBy("list_id")
-        .parquet(os.path.join(root, "ivf"))
+        .parquet(os.path.join(stage, "ivf"))
     )
     ivf.unpersist()
 
@@ -187,8 +191,9 @@ def build_ann_store(
         "centroids": C.tolist(),
         "bucket_shift": bucket_shift,
     }
-    with open(os.path.join(root, "meta.json"), "w") as f:
+    with open(os.path.join(stage, "meta.json"), "w") as f:
         json.dump(meta, f)
+    commit_swap(root, "ann", [(t, t, []) for t in ("lsh", "ivf", "meta.json")])
     embs.unpersist()
     return AnnStore(
         root=root,
@@ -581,19 +586,20 @@ def append_ann_store(
     the new rows APPEND into the existing partition directories, so
     probes keep pruning to the same (band, bdir) / list_id layout.
 
-    Idempotency / crash protocol (commit-ordered): the fresh set is
-    ids absent from the stored IVF table (a single-column columnar
-    scan — the id column is the cheapest full read the store
-    supports); the LSH leg writes FIRST, the IVF leg LAST — the
-    commit point. A crash between the legs reruns with the same
-    fresh set (IVF still lacks it) and re-appends the LSH rows;
-    duplicate LSH candidates are harmless (the probe dedupes by id
-    before the re-rank) and the next rebuild clears them. Re-sending
-    already-indexed vectors is a no-op (returns 0), the GET-before-
-    POST idempotency the reference's handler applies to re-POSTs.
+    One transaction: the fresh set is the ids absent from the stored
+    IVF table (a single-column columnar scan — the id column is the
+    cheapest full read the store supports); its LSH and IVF rows are
+    staged and appended under one journal, one step per staged leaf
+    partition (lifecycle's stage → journal → swap → heal). A crash
+    before the commit leaves the store as it was, and a re-run stages
+    the same fresh set; after it, :func:`heal` finishes the append.
+    Re-sending already-indexed vectors is a no-op (returns 0), the
+    GET-before-POST idempotency the reference's handler applies to
+    re-POSTs.
 
     Returns the number of vectors appended.
     """
+    heal(store.root)
     existing = spark.read.parquet(store.path("ivf")).select("id")
     fresh = (
         embs.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
@@ -604,6 +610,7 @@ def append_ann_store(
     if n == 0:
         fresh.unpersist()
         return 0
+    stage = swap_stage(store.root, "append")
     lsh = lsh_assign(
         fresh, store.dim, store.num_bands, store.bits_per_band,
         store.lsh_seed, "id", "vec",
@@ -613,19 +620,19 @@ def append_ann_store(
         .withColumn("bdir", F.shiftright("bucket", store.bucket_shift))
         .repartition("band", "bdir")
         .sortWithinPartitions("band", "bdir", "bucket")
-        .write.mode("append")
-        .partitionBy("band", "bdir")
-        .parquet(store.path("lsh"))
+        .write.partitionBy("band", "bdir")
+        .parquet(os.path.join(stage, "lsh"))
     )
     ivf = ivf_assign(fresh, store.centroids, "id", "vec")
     (
         ivf.join(fresh, "id")
         .repartition("list_id")
-        .write.mode("append")
-        .partitionBy("list_id")
-        .parquet(store.path("ivf"))
+        .write.partitionBy("list_id")
+        .parquet(os.path.join(stage, "ivf"))
     )
     fresh.unpersist()
+    leaves = sorted(os.path.relpath(d, stage) for d, sub, _ in os.walk(stage) if not sub)
+    commit_swap(store.root, "append", [(f"{d}/*", d, []) for d in leaves])
     return n
 
 
@@ -661,23 +668,25 @@ def build_pq_store(
     less than the float table's."""
     from .ann import pq_codebooks, pq_encode
 
+    heal(store.root)
+    stage = swap_stage(store.root, "pq")
     C = pq_codebooks(embs, m, n_codes, pq_seed, id_col, vec_col)
     lists = spark.read.parquet(store.path("ivf")).select("id", "list_id")
     (
         pq_encode(embs, C, id_col, vec_col)
         .join(lists, "id")
         .repartition("list_id")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", rows_per_dir)
+        .write.option("maxRecordsPerFile", rows_per_dir)
         .partitionBy("list_id")
-        .parquet(store.path("pq"))
+        .parquet(os.path.join(stage, "pq"))
     )
-    with open(store.path("pq_meta.json"), "w") as f:
+    with open(os.path.join(stage, "pq_meta.json"), "w") as f:
         json.dump(
             {"m": m, "n_codes": n_codes, "pq_seed": pq_seed,
              "codebooks": C.tolist()},
             f,
         )
+    commit_swap(store.root, "pq", [(t, t, []) for t in ("pq", "pq_meta.json")])
 
 
 def ivfpq_topk_stored(

@@ -19,13 +19,13 @@ Every posting block covers ONE term within ONE doc-id range
 
 Why range alignment instead of salting: the dataflow is ONE shuffle —
 ``repartition(term, range_id)`` + in-partition sort + a streaming
-mapInPandas encoder — and a (term, range) group can never hold more
+mapInArrow encoder — and a (term, range) group can never hold more
 than ``range_size`` documents' postings: a stopword appearing in every
 doc splits into ``n_docs / range_size`` independent groups. That
 removes hot-term skew *structurally* (SURVEY §4.2-1 proposed salting +
 merge; range alignment achieves the same bound with no second pass,
 and the ranges double as the WAND pruning/skip unit at query time).
-The encoder is mapInPandas rather than grouped-map applyInPandas
+The encoder is mapInArrow rather than grouped-map applyInPandas
 because at ~10^5-10^6 groups per build the one-pandas-DataFrame-per-
 group overhead of grouped-map dominates the actual encoding.
 
@@ -249,9 +249,10 @@ def build_block_index(
 ) -> BlockIndex:
     """Compress an M1 postings index into posting blocks.
 
-    One shuffle: groupBy(term, range_id) — every group is bounded by
+    One shuffle: repartition on (term, range_id) with rows sorted by
+    (term, range_id, doc_id) — every (term, range) run is bounded by
     ``range_size`` postings regardless of term frequency (see module
-    docstring), then applyInPandas encodes the blocks with the numpy
+    docstring), then mapInArrow encodes the blocks with the numpy
     codec. No collect, no driver-side state beyond the 3 corpus
     scalars.
 

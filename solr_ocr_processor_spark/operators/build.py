@@ -24,8 +24,8 @@ Two layers:
 - ``build_block_index`` (operators/blocks.py, M2): compressed posting
   BLOCKS — delta+varint doc-id gaps, tf/dl streams, concatenated
   position payloads, per-block max_score for block-max WAND — built
-  straight from the posting table with one groupBy(term, range_id)
-  shuffle.
+  straight from the posting table with one (term, range_id)
+  repartition and a mapInArrow encoder.
 """
 
 from __future__ import annotations

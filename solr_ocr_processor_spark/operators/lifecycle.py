@@ -2,10 +2,9 @@
 
 The reference's HTTP lifecycle (app/main.go:94-116) mapped to jobs:
 
-- POST /item  -> :func:`build_store` — the index build, shard-by-shard
-  with per-shard checkpoint manifests so a killed job resumes without
-  redoing finished shards (the GET-before-POST idempotency analog,
-  app/handler/indexer.go:27-41).
+- POST /item  -> :func:`build_store` — the index build, one commit per
+  shard so a killed job resumes without redoing finished shards (the
+  GET-before-POST idempotency analog, app/handler/indexer.go:27-41).
 - GET /item   -> :func:`check` — membership lookup (numFound>0,
   app/process/solr.go:100-124).
 - DELETE /item -> :func:`delete_conv` — delete-by-query. The reference
@@ -38,15 +37,17 @@ to ``doc_map`` before any shard builds — reruns and resumes read the
 checkpoint instead of recomputing, so doc ids are stable across
 failures (SURVEY §4.2-5; monotonically_increasing_id is banned).
 
-Every mutation after the build — :func:`compact`, :func:`sync_store`,
-:func:`merge_shards_tiered`, the stream fold-in
-(``streaming.ingest.merge_stream``), and the HNSW store's append,
-tiered merge and force merge — is one transaction under one protocol:
+Every store mutation — the build (:func:`build_store`, one commit for
+its step 0, one per shard, one for its finalize), :func:`delete_convs`,
+:func:`compact`, :func:`sync_store`, :func:`merge_shards_tiered`, the
+stream fold-in (``streaming.ingest.merge_stream``), the HNSW store's
+append, tiered merge and force merge, and the ANN store's build and
+append — is a transaction under one protocol:
 
 1. stage: the replacement tables, and the part files an append adds
-   (doc_map, manifest and tombstone rows), are written under
-   ``{root}/_swap_<name>/`` (Spark's listing hides ``_``-prefixed
-   paths); the live tables are not touched;
+   (doc_map, manifest, tombstone and ANN partition rows), are written
+   under ``{root}/_swap_<name>/`` (Spark's listing hides
+   ``_``-prefixed paths); the live tables are not touched;
 2. commit: ``journal.json`` is written atomically (tmp file +
    ``os.replace``). It lists steps ``(src in stage, dst, paths to drop
    first)``; an append is one step that moves every staged part file
@@ -69,12 +70,12 @@ tombstone rows and ``conv_hashes`` to the same journal.
 Contract: one writer per store. Every mutating entry point heals
 first; readers do not heal, so after a crash inside a swap the store
 reads correctly again once the next mutating call (or :func:`heal`)
-has run. Only :func:`build_store` (resumed per shard from the
-manifest) and the standalone tombstone appends of :func:`delete_conv`
-and :func:`delete_convs` write live tables directly. Renames are
-driver-local filesystem ops, so the root must be on a filesystem the
-driver addresses directly (local/NFS; on object stores swap via the
-catalog instead).
+has run. No store table but the input staging table ``stream_turns``
+(``streaming.ingest``) is written outside a stage, so a table exists
+only once its commit has run and a driver-side ``os.path.isdir``
+tells whether it does. Renames are driver-local filesystem ops, so the
+root must be on a filesystem the driver addresses directly (local/NFS;
+on object stores swap via the catalog instead).
 """
 
 from __future__ import annotations
@@ -108,14 +109,9 @@ MANIFEST_SCHEMA = (
     "build_id string, shard int, status string, n_convs long, n_turns long, "
     "n_postings long, n_blocks long, wall_sec double, finished_at double"
 )
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    try:
-        spark.read.parquet(path).limit(1).collect()
-        return True
-    except Exception:  # noqa: BLE001 - missing path
-        return False
+DOC_MAP_SCHEMA = "doc_id long, conv_id string"
+TOMBSTONES_SCHEMA = "doc_id long, conv_id string, deleted_at double"
+CONV_HASHES_SCHEMA = "conv_id string, content_hash long"
 
 
 def swap_stage(root: str, name: str) -> str:
@@ -204,39 +200,33 @@ def heal(root: str) -> int:
     return healed
 
 
-def _manifest_done_shards(spark: SparkSession, store: IndexStore) -> set[int]:
-    p = store.path("manifest")
-    if not _exists(spark, p):
-        return set()
-    return {
-        r["shard"]
-        for r in spark.read.parquet(p).where("status = 'done'").select("shard").collect()
-    }
-
-
 def build_store(
     spark: SparkSession,
     transcripts: DataFrame,
     root: str,
     cfg: IndexConfig = DEFAULT,
     n_shards: int = 4,
-    fail_after_shard: int | None = None,
 ) -> IndexStore:
-    """Build (or resume) a persisted index at ``root``.
+    """Build (or resume) a persisted index at ``root`` as a sequence of
+    journaled commits (module docstring), each staged under
+    ``_swap_build/``:
 
-    Steps:
-      0. doc_map checkpoint (skipped when present).
-      1. per doc-id shard: materialize + tokenize + postings + blocks,
-         written under ``shard=K``; a manifest row records lineage and
-         throughput metrics. Shards listed 'done' in the manifest are
-         skipped on resume.
-      2. finalize: global term_stats + corpus from all shards.
+      0. doc_map and the global corpus_prior, in one commit;
+      1. per doc-id shard: materialize + tokenize + postings + blocks
+         under ``shard=K`` plus its manifest row (lineage and
+         throughput), in one commit per shard;
+      2. finalize: term_stats, corpus, corpus_prior and conv_hashes, in
+         one commit.
 
-    ``fail_after_shard`` injects a crash after N shards (tests only).
+    A table exists only once its commit has run, so resume is
+    :func:`heal` followed by skipping what is on disk: step 0 when
+    doc_map exists, every shard the manifest lists, and the finalize
+    when term_stats exists.
     """
     store = IndexStore(root=root, cfg=cfg)
     heal(root)
     build_id = uuid.uuid4().hex[:12]
+    stage = swap_stage(root, "build")
 
     # --- step 0: checkpointed doc-id assignment + GLOBAL corpus stats ---
     # Global avgdl must exist BEFORE any shard builds: block-max bounds
@@ -244,37 +234,36 @@ def build_store(
     # shard's avgdl is below the global one, and WAND would then prune
     # ranges holding true top-k docs (silent wrong results). One cheap
     # token-count scan (no token rows materialized) fixes the stats.
-    doc_map_path = store.path("doc_map")
-    corpus_prior_path = store.path("corpus_prior")
-    if not _exists(spark, doc_map_path):
-        from ..plans.materialize import assign_doc_ids, ordered_turns
-
-        turns = ordered_turns(transcripts)
-        ids_df = assign_doc_ids(turns)
-        ids_df.write.mode("overwrite").parquet(doc_map_path)
-        ids_df.unpersist()
-    doc_map = spark.read.parquet(doc_map_path)
-    n_docs_total = doc_map.count()
-    if not _exists(spark, corpus_prior_path):
+    if not os.path.isdir(store.path("doc_map")):
         from ..functions.tokenizer import count_turn_tokens
+        from ..plans.materialize import _assign_doc_ids_deferred, ordered_turns
 
+        ids_df, n_docs, caches = _assign_doc_ids_deferred(ordered_turns(transcripts))
+        ids_df.write.parquet(os.path.join(stage, "doc_map"))
+        for df in (ids_df, *caches):
+            df.unpersist()
         nonempty = transcripts.where(F.length(F.trim(F.col("text"))) > 0)
         (
             count_turn_tokens(nonempty, cfg)
             .agg(F.sum("n_toks").cast("long").alias("total_tokens"))
             .select(
-                F.lit(n_docs_total).cast("long").alias("n_docs"),
+                F.lit(n_docs).cast("long").alias("n_docs"),
                 "total_tokens",
-                (F.col("total_tokens") / F.lit(n_docs_total)).alias("avgdl"),
+                (F.col("total_tokens") / F.lit(n_docs)).alias("avgdl"),
             )
-            .write.mode("overwrite")
-            .parquet(corpus_prior_path)
+            .write.parquet(os.path.join(stage, "corpus_prior"))
         )
-    gstats = _corpus_stats(spark, corpus_prior_path)
+        commit_swap(root, "build", [(t, t, []) for t in ("doc_map", "corpus_prior")])
+    doc_map = spark.read.schema(DOC_MAP_SCHEMA).parquet(store.path("doc_map"))
+    # step 0's n_docs is the doc_map's row count; shards leave it as is
+    gstats = _corpus_stats(spark, store.path("corpus_prior"))
+    n_docs_total = gstats[0]
     shard_width = max(1, -(-n_docs_total // n_shards))
 
-    done = _manifest_done_shards(spark, store)
-    built = 0
+    done = set()
+    if os.path.isdir(store.path("manifest")):
+        manifest = spark.read.schema(MANIFEST_SCHEMA).parquet(store.path("manifest"))
+        done = {r["shard"] for r in manifest.where("status = 'done'").select("shard").collect()}
     for shard in range(n_shards):
         if shard in done:
             continue
@@ -295,30 +284,31 @@ def build_store(
             doc_map=convs,
             n_docs_hint=max(0, min(hi, n_docs_total) - lo),
         )
-        _write_shard(idx.postings, idx.doc_meta, store.root, shard, cfg, gstats)
-        counts = _shard_counts(spark, store.root, shard)
+        _write_shard(idx.postings, idx.doc_meta, stage, shard, cfg, gstats)
         idx.postings.unpersist()
         idx.mat.unpersist()  # releases docs + the persisted turns base
-        _lineage(spark, build_id, shard, counts, time.perf_counter() - t0).write.mode(
-            "append"
-        ).parquet(store.path("manifest"))
-        built += 1
-        if fail_after_shard is not None and built >= fail_after_shard:
-            raise RuntimeError(f"injected failure after shard {shard}")
+        counts = _shard_counts(spark, stage, shard)
+        lineage = _lineage(spark, build_id, shard, counts, time.perf_counter() - t0)
+        commit_swap(
+            root,
+            "build",
+            [(f"{t}/shard={shard}", f"{t}/shard={shard}", []) for t in _SHARD_TABLES]
+            + [_stage_append(lineage, stage, "manifest")],
+        )
 
     # --- step 2: finalize global stats ---------------------------------
-    _write_globals(
-        store.root,
-        spark.read.parquet(store.path("postings")),
-        spark.read.parquet(store.path("doc_meta")),
-    )
-    # content fingerprints for the incremental sync path (sync_store):
-    # one extra narrow md5 groupBy over the input — idempotent on
-    # resume (overwrite), and the only way a FIRST sync can tell a
-    # changed conv from an unchanged one.
-    hp = store.path("conv_hashes")
-    if not _exists(spark, hp):
-        conv_content_hashes(transcripts).write.mode("overwrite").parquet(hp)
+    if not os.path.isdir(store.path("term_stats")):
+        _write_globals(
+            stage,
+            spark.read.parquet(store.path("postings")),
+            spark.read.parquet(store.path("doc_meta")),
+        )
+        # content fingerprints for the incremental sync path
+        # (sync_store): one extra narrow md5 groupBy over the input, and
+        # the only way a FIRST sync can tell a changed conv from an
+        # unchanged one.
+        conv_content_hashes(transcripts).write.parquet(os.path.join(stage, "conv_hashes"))
+        commit_swap(root, "build", [(t, t, []) for t in (*_GLOBAL_TABLES, "conv_hashes")])
     return store
 
 
@@ -409,13 +399,14 @@ def _write_shard(
 def _shard_counts(spark: SparkSession, dest: str, shard: int) -> tuple[int, int, int, int]:
     """(n_convs, n_turns, n_postings, n_blocks) of a shard written by
     :func:`_write_shard`: two tiny aggregates over its parquet, not a
-    re-run of the tokenize+encode DAG."""
+    re-run of the tokenize+encode DAG, each reading one column with its
+    known type (no schema-inference job)."""
 
-    def read(table: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(dest, table, f"shard={shard}"))
+    def read(table: str, column: str) -> DataFrame:
+        return spark.read.schema(column).parquet(os.path.join(dest, table, f"shard={shard}"))
 
-    meta = read("doc_meta").agg(F.count(F.lit(1)), F.sum("n_turns")).first()
-    blk = read("blocks").agg(F.count(F.lit(1)), F.sum("n_docs")).first()
+    meta = read("doc_meta", "n_turns long").agg(F.count(F.lit(1)), F.sum("n_turns")).first()
+    blk = read("blocks", "n_docs int").agg(F.count(F.lit(1)), F.sum("n_docs")).first()
     return int(meta[0]), int(meta[1] or 0), int(blk[1] or 0), int(blk[0])
 
 
@@ -461,13 +452,11 @@ def _stage_fold(
     n_new = turns.select("conv_id").distinct().count()
     if n_new == 0:
         return 0, []
-    top = spark.read.parquet(store.path("doc_map")).agg(F.max("doc_id")).first()[0]
+    doc_map = spark.read.schema(DOC_MAP_SCHEMA).parquet(store.path("doc_map"))
+    top = doc_map.agg(F.max("doc_id")).first()[0]
     base = 0 if top is None else top + 1  # None: every doc compacted away
-    shard = 1 + max(
-        (r["shard"] for r in spark.read.parquet(store.path("manifest"))
-         .select("shard").collect()),
-        default=-1,
-    )
+    manifest = spark.read.schema(MANIFEST_SCHEMA).parquet(store.path("manifest"))
+    shard = 1 + max((r["shard"] for r in manifest.select("shard").collect()), default=-1)
     ids0 = assign_doc_ids(turns)
     new_map = ids0.withColumn("doc_id", (F.col("doc_id") + F.lit(base)).cast("long"))
     new_map.persist()
@@ -549,7 +538,7 @@ def load_index_with_content(
     from ..plans.materialize import Materialized, ordered_turns
 
     idx = load_index(spark, store)
-    doc_map = spark.read.parquet(store.path("doc_map")).select("doc_id", "conv_id")
+    doc_map = spark.read.schema(DOC_MAP_SCHEMA).parquet(store.path("doc_map"))
     turns = ordered_turns(transcripts).join(doc_map, "conv_id")
     return Index(
         postings=idx.postings,
@@ -584,7 +573,7 @@ def check(spark: SparkSession, store: IndexStore, conv_id: str) -> bool:
     and a live new one in doc_map — it IS indexed. A conv-level
     "any tombstone row => gone" test would wrongly report it missing.
     """
-    dm = spark.read.parquet(store.path("doc_map")).where(
+    dm = spark.read.schema(DOC_MAP_SCHEMA).parquet(store.path("doc_map")).where(
         F.col("conv_id") == conv_id
     )
     dead = tombstoned_convs(spark, store).select("doc_id")
@@ -635,15 +624,11 @@ def check_offline(root: str, conv_id: str) -> bool:
 
 
 def delete_conv(spark: SparkSession, store: IndexStore, conv_id: str) -> None:
-    """DELETE: record a tombstone. Like the reference we capture the
-    doc ids BEFORE logically removing them (app/process/solr.go:25-34 —
-    the index is the only place they're recorded)."""
-    heal(store.root)
-    dm = spark.read.parquet(store.path("doc_map"))
-    victims = dm.where(F.col("conv_id") == conv_id).withColumn(
-        "deleted_at", F.lit(time.time())
-    )
-    victims.write.mode("append").parquet(store.path("tombstones"))
+    """DELETE: record a tombstone (:func:`delete_convs` of one conv).
+    Like the reference we capture the doc ids BEFORE logically removing
+    them (app/process/solr.go:25-34 — the index is the only place
+    they're recorded)."""
+    delete_convs(spark, store, spark.createDataFrame([(conv_id,)], "conv_id string"))
 
 
 def conv_content_hashes(transcripts: DataFrame) -> DataFrame:
@@ -675,22 +660,38 @@ def delete_convs(spark: SparkSession, store: IndexStore, convs: DataFrame) -> in
     (a (conv_id) frame) in ONE doc_map pass + one append — the set
     form of :func:`delete_conv` (the reference deletes one item per
     HTTP call, app/handler/indexer.go:155-163; a sync deletes many).
-    Already-tombstoned doc ids are skipped so repeated syncs don't
-    grow the tombstone table. Returns the number of docs tombstoned."""
+    Already-tombstoned doc ids are skipped so repeated deletes don't
+    grow the tombstone table. The rows are staged and committed through
+    one journal (module docstring). Returns the number of docs
+    tombstoned."""
+    import pyarrow.dataset as pads
+
     heal(store.root)
-    dm = spark.read.parquet(store.path("doc_map"))
-    victims = (
-        dm.join(convs.select("conv_id").distinct(), "conv_id", "left_semi")
-        .join(tombstoned_convs(spark, store).select("doc_id"), "doc_id", "left_anti")
-        .withColumn("deleted_at", F.lit(time.time()))
-        .select("doc_id", "conv_id", "deleted_at")
-    )
-    victims.persist()
-    n = victims.count()
+    stage = swap_stage(store.root, "delete")
+    step = _stage_tombstones(spark, store, convs, stage)
+    n = pads.dataset(os.path.join(stage, "tombstones"), format="parquet").count_rows()
     if n:
-        victims.write.mode("append").parquet(store.path("tombstones"))
-    victims.unpersist()
+        commit_swap(store.root, "delete", [step])
+    else:
+        shutil.rmtree(stage)
     return n
+
+
+def _stage_tombstones(
+    spark: SparkSession, store: IndexStore, convs: DataFrame, stage: str
+) -> tuple:
+    """Stage a tombstone row for every doc id of the conversations in
+    ``convs`` (a conv_id frame) that is live in doc_map and not yet
+    tombstoned; returns the journal step that appends them."""
+    dead = tombstoned_convs(spark, store).select("doc_id")
+    victims = (
+        spark.read.schema(DOC_MAP_SCHEMA)
+        .parquet(store.path("doc_map"))
+        .join(convs.select("conv_id"), "conv_id", "left_semi")
+        .join(dead, "doc_id", "left_anti")
+        .withColumn("deleted_at", F.lit(time.time()))
+    )
+    return _stage_append(victims, stage, "tombstones")
 
 
 def sync_store(
@@ -744,7 +745,7 @@ def sync_store(
     stage = swap_stage(store.root, "sync")
 
     new_h = conv_content_hashes(new_transcripts).persist()
-    dm = spark.read.parquet(store.path("doc_map"))
+    dm = spark.read.schema(DOC_MAP_SCHEMA).parquet(store.path("doc_map"))
     dead = tombstoned_convs(spark, store).select("doc_id")
     live = (
         dm.join(dead, "doc_id", "left_anti").select("conv_id").distinct().persist()
@@ -756,8 +757,8 @@ def sync_store(
         removed = live.join(new_convs, "conv_id", "left_anti")
 
         hashes_path = store.path("conv_hashes")
-        if _exists(spark, hashes_path):
-            old_h = spark.read.parquet(hashes_path)
+        if os.path.isdir(hashes_path):
+            old_h = spark.read.schema(CONV_HASHES_SCHEMA).parquet(hashes_path)
             changed = (
                 live.join(old_h, "conv_id")
                 .join(new_h.withColumnRenamed("content_hash", "_new"), "conv_id")
@@ -776,14 +777,7 @@ def sync_store(
 
         steps = []
         if n_victims_convs:
-            # the set form of delete_convs: every live doc id of a victim
-            tombs = (
-                dm.join(victims, "conv_id", "left_semi")
-                .join(dead, "doc_id", "left_anti")
-                .withColumn("deleted_at", F.lit(time.time()))
-                .select("doc_id", "conv_id", "deleted_at")
-            )
-            steps.append(_stage_append(tombs, stage, "tombstones"))
+            steps.append(_stage_tombstones(spark, store, victims, stage))
 
         # added + changed = new convs minus the live-and-unchanged set
         keep = live.join(changed, "conv_id", "left_anti")
@@ -810,10 +804,12 @@ def sync_store(
 
 
 def tombstoned_convs(spark: SparkSession, store: IndexStore) -> DataFrame:
+    """The tombstone table (doc_id, conv_id, deleted_at); opening it
+    runs no Spark job."""
     p = store.path("tombstones")
-    if not _exists(spark, p):
-        return spark.createDataFrame([], "doc_id long, conv_id string, deleted_at double")
-    return spark.read.parquet(p)
+    if not os.path.isdir(p):
+        return spark.createDataFrame([], TOMBSTONES_SCHEMA)
+    return spark.read.schema(TOMBSTONES_SCHEMA).parquet(p)
 
 
 def tombstoned_doc_ids(spark: SparkSession, store: IndexStore) -> list[int]:

@@ -1,12 +1,16 @@
-"""M4 lifecycle: resumable shard build, membership, tombstone delete,
-compaction equivalence (delete(X) ranking == fresh build without X)."""
+"""M4 lifecycle: sharded build, membership, tombstone delete,
+compaction equivalence (delete(X) ranking == fresh build without X).
+Build resume is crash-tested in test_lifecycle_crash.py."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
+import pyarrow.dataset as pads
 import pytest
 
 from solr_ocr_processor_spark.config import IndexConfig
-from solr_ocr_processor_spark.operators.build import build_postings
 from solr_ocr_processor_spark.operators.lifecycle import (
     IndexStore,
     build_metrics,
@@ -15,6 +19,7 @@ from solr_ocr_processor_spark.operators.lifecycle import (
     compact,
     delete_conv,
     load_block_index,
+    tombstoned_convs,
     tombstoned_doc_ids,
 )
 from solr_ocr_processor_spark.operators.wand import wand_topk
@@ -28,33 +33,6 @@ QUERY = "spark window merge"
 @pytest.fixture(scope="module")
 def corpus(spark):
     return synth_transcripts(spark, n_convs=30, max_turns=8, seed=3)
-
-
-def test_resume_after_injected_failure(spark, corpus, tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("store_resume"))
-    with pytest.raises(RuntimeError, match="injected failure"):
-        build_store(spark, corpus, root, CFG, n_shards=3, fail_after_shard=1)
-    store = IndexStore(root, CFG)
-    m1 = build_metrics(spark, store).collect()
-    assert len(m1) == 1 and m1[0]["status"] == "done"
-
-    # resume: finishes remaining shards, does NOT rebuild the done one
-    build_store(spark, corpus, root, CFG, n_shards=3)
-    m2 = build_metrics(spark, store).collect()
-    assert len(m2) == 3
-    assert {r["shard"] for r in m2} == {0, 1, 2}
-    # the shard built pre-crash kept its original build_id (not redone)
-    assert m1[0]["build_id"] in {r["build_id"] for r in m2}
-    assert all(r["turns_per_sec"] > 0 for r in m2)
-
-    # queries over the resumed store are rank-identical to the oracle
-    bidx = load_block_index(spark, store)
-    docs_pd = oracle_materialize(corpus.toPandas())
-    assert bidx.n_docs == len(docs_pd)
-    got = wand_topk(spark, bidx, QUERY, k=10, cfg=CFG).collect()
-    want = oracle_bm25_topk(docs_pd, QUERY, k=10, cfg=CFG)
-    assert [r["doc_id"] for r in got] == list(want["doc_id"])
-    assert all(abs(r["score"] - s) < 1e-9 for r, s in zip(got, want["score"]))
 
 
 def test_sharded_wand_bounds_survive_skewed_shard_avgdl(spark, tmp_path_factory):
@@ -139,6 +117,35 @@ def test_delete_then_query_excludes(spark, store, corpus):
     want = oracle_bm25_topk(fresh_pd, QUERY, k=5, cfg=CFG)
     assert [r["conv_id"] for r in got] == list(want["conv_id"])
     assert all(abs(r["score"] - s) < 1e-9 for r, s in zip(got, want["score"]))
+
+
+def _deleted_copy(spark, store, tmp_path):
+    """A copy of ``store`` with one conversation deleted twice; returns
+    the copy and that conversation's doc ids."""
+    root = shutil.copytree(store.root, str(tmp_path / "copy"))
+    doc_map = pads.dataset(os.path.join(root, "doc_map")).to_table().to_pylist()
+    conv = doc_map[0]["conv_id"]
+    copy = IndexStore(root, CFG)
+    for _ in range(2):
+        delete_conv(spark, copy, conv)
+    return copy, sorted(r["doc_id"] for r in doc_map if r["conv_id"] == conv)
+
+
+def test_delete_conv_twice_tombstones_each_doc_once(spark, store, tmp_path):
+    copy, doc_ids = _deleted_copy(spark, store, tmp_path)
+    assert sorted(tombstoned_doc_ids(spark, copy)) == doc_ids
+
+
+def test_tombstoned_convs_opens_without_a_job(spark, store, tmp_path):
+    copy, doc_ids = _deleted_copy(spark, store, tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("open-tombstones", "open-tombstones")
+    try:
+        dead = tombstoned_convs(spark, copy)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("open-tombstones")) == []
+    assert sorted(r["doc_id"] for r in dead.collect()) == doc_ids
 
 
 def test_tz_naive_ts_fingerprints_like_utc_timestamps(spark, tmp_path_factory):
