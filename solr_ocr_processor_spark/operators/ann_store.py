@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ann import _planes, ivf_assign, ivf_centroids, lsh_assign
-from .lifecycle import commit_swap, heal, swap_stage
+from .lifecycle import commit_swap, heal, read_table, swap_stage
 
 
 @dataclass
@@ -337,7 +337,7 @@ def mutual_knn_stored(
     cos DESC, id1 ASC, id2 ASC."""
     from pyspark.sql.window import Window
 
-    ivf = spark.read.parquet(store.path("ivf"))
+    ivf = read_table(spark, store.path("ivf"))
     panel = ivf.select(F.col("id").alias("qid"), F.col("vec").alias("qv"))
     if max_id is not None:
         panel = panel.where(F.col("qid") < F.lit(int(max_id)))
@@ -454,7 +454,7 @@ def ivf_batch_topk_stored(
     probe_map = spark.createDataFrame(probe_rows, "qid long, list_id int")
     lists = sorted({x for _, x in probe_rows})
     cand = (
-        spark.read.parquet(store.path("ivf"))
+        read_table(spark, store.path("ivf"))
         .where(F.col("list_id").isin(lists))
         .join(F.broadcast(probe_map), "list_id")
         .select("qid", "id", "vec")
@@ -557,7 +557,7 @@ def lsh_batch_topk_stored(
         )
         pred = clause if pred is None else (pred | clause)
     cand = (
-        spark.read.parquet(store.path("lsh"))
+        read_table(spark, store.path("lsh"))
         .where(pred)
         .join(F.broadcast(probe_map), ["band", "bucket"])
         .select("qid", "id", "vec")
@@ -600,7 +600,7 @@ def append_ann_store(
     Returns the number of vectors appended.
     """
     heal(store.root)
-    existing = spark.read.parquet(store.path("ivf")).select("id")
+    existing = read_table(spark, store.path("ivf")).select("id")
     fresh = (
         embs.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
         .join(existing, "id", "left_anti")
@@ -671,7 +671,7 @@ def build_pq_store(
     heal(store.root)
     stage = swap_stage(store.root, "pq")
     C = pq_codebooks(embs, m, n_codes, pq_seed, id_col, vec_col)
-    lists = spark.read.parquet(store.path("ivf")).select("id", "list_id")
+    lists = read_table(spark, store.path("ivf")).select("id", "list_id")
     (
         pq_encode(embs, C, id_col, vec_col)
         .join(lists, "id")
@@ -730,7 +730,7 @@ def ivfpq_topk_stored(
         ]
     )
     cand = (
-        spark.read.parquet(store.path("pq"))
+        read_table(spark, store.path("pq"))
         .where(F.col("list_id").isin(probe))
         .select("id", adc_dist_expr(dt).alias("adist"))
         .orderBy(F.asc("adist"), F.asc("id"))

@@ -91,8 +91,7 @@ class BlockIndex:
     blocks: DataFrame      # compressed posting blocks (schema above)
     term_stats: DataFrame  # term, df, cf  (the "dictionary")
     doc_meta: DataFrame    # doc_id, conv_id, dl, ...
-    n_docs: int
-    avgdl: float
+    corpus: DataFrame      # one row: n_docs, total_tokens, avgdl (read via score.query_stats)
     cfg: IndexConfig
 
 
@@ -253,8 +252,7 @@ def build_block_index(
     (term, range_id, doc_id) — every (term, range) run is bounded by
     ``range_size`` postings regardless of term frequency (see module
     docstring), then mapInArrow encodes the blocks with the numpy
-    codec. No collect, no driver-side state beyond the 3 corpus
-    scalars.
+    codec. No collect, no driver-side state beyond the corpus avgdl.
 
     ``corpus_stats`` = (n_docs, avgdl) overrides the stats read from
     ``index.corpus`` — sharded builds (lifecycle.build_store) pass the
@@ -263,10 +261,9 @@ def build_block_index(
     (which silently under-bounds and breaks WAND pruning exactness).
     """
     if corpus_stats is not None:
-        n_docs, avgdl = int(corpus_stats[0]), float(corpus_stats[1])
+        avgdl = float(corpus_stats[1])
     else:
-        crow = index.corpus.first()
-        n_docs, avgdl = int(crow["n_docs"]), float(crow["avgdl"])
+        avgdl = float(index.corpus.first()["avgdl"])
 
     num_partitions = int(
         index.postings.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -291,7 +288,6 @@ def build_block_index(
         blocks=blocks,
         term_stats=index.term_stats,
         doc_meta=index.doc_meta,
-        n_docs=n_docs,
-        avgdl=avgdl,
+        corpus=index.corpus,
         cfg=cfg,
     )

@@ -95,7 +95,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .lifecycle import commit_swap, heal, swap_stage, tiered_merge_plan
+from .lifecycle import commit_swap, heal, read_table, swap_stage, tiered_merge_plan
 
 
 @dataclass
@@ -383,7 +383,7 @@ def append_hnsw_store(
     id layout (asserted in tests). Returns the number of vectors
     appended."""
     heal(store.root)
-    nodes = spark.read.parquet(store.path("nodes"))
+    nodes = read_table(spark, store.path("nodes"))
     base = embs.select(
         F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
     ).join(nodes.select("id"), "id", "left_anti")
@@ -460,7 +460,7 @@ def merge_hnsw_segments(
     constraint as every journaled swap). Returns the updated store."""
     heal(store.root)
     stage = swap_stage(store.root, "hnsw")
-    nodes = spark.read.parquet(store.path("nodes")).select("id", "vec")
+    nodes = read_table(spark, store.path("nodes")).select("id", "vec")
     build_hnsw_store(
         spark,
         nodes,
@@ -485,7 +485,7 @@ def hnsw_merge_plan(spark: SparkSession, store: HnswStore, merge_factor: int = 4
     index's segment merges — one planner, two stores. Returns the
     planner's (tier, merge_ord, n_segs, seg_ids, total_docs) rows."""
     manifest = (
-        spark.read.parquet(store.path("nodes"))
+        read_table(spark, store.path("nodes"))
         .groupBy("seg")
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     )
@@ -518,7 +518,7 @@ def merge_hnsw_tiered(
         return 0
     groups = [[int(s) for s in row["seg_ids"].split(",")] for row in plan]
     members = [m for g in groups for m in g]
-    nodes = spark.read.parquet(store.path("nodes")).where(F.col("seg").isin(members))
+    nodes = read_table(spark, store.path("nodes")).where(F.col("seg").isin(members))
     min_id = {
         r["seg"]: r["min_id"]
         for r in nodes.groupBy("seg").agg(F.min("id").alias("min_id")).collect()
@@ -549,8 +549,8 @@ def _store_union(spark: SparkSession, store: HnswStore) -> DataFrame:
     """nodes + edges as one seg-keyed relation (vec rows carry null
     dst; edge rows carry null vec) so ONE grouped kernel per segment
     sees both the matrix and the adjacency."""
-    nodes = spark.read.parquet(store.path("nodes"))
-    edges = spark.read.parquet(store.path("edges"))
+    nodes = read_table(spark, store.path("nodes"))
+    edges = read_table(spark, store.path("edges"))
     return nodes.select(
         "seg", "id", "vec", F.lit(None).cast("int").alias("level"),
         F.lit(None).cast("long").alias("dst"),

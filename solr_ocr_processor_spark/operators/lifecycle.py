@@ -67,15 +67,23 @@ The fold (:func:`_stage_fold`, shared by ``sync_store`` and
 term_stats, corpus, corpus_prior and lineage row; the sync adds its
 tombstone rows and ``conv_hashes`` to the same journal.
 
+Every read of a store table — text, HNSW and ANN stores and the
+streaming tables — goes through one reader, :func:`read_table`: it
+takes the table's schema from the Spark footer key of its first part
+file, found by a driver-side directory walk, so opening a store
+(:func:`load_index`, :func:`load_block_index`,
+:func:`tombstoned_convs`) runs no Spark job.
+
 Contract: one writer per store. Every mutating entry point heals
 first; readers do not heal, so after a crash inside a swap the store
 reads correctly again once the next mutating call (or :func:`heal`)
 has run. No store table but the input staging table ``stream_turns``
 (``streaming.ingest``) is written outside a stage, so a table exists
 only once its commit has run and a driver-side ``os.path.isdir``
-tells whether it does. Renames are driver-local filesystem ops, so the
-root must be on a filesystem the driver addresses directly (local/NFS;
-on object stores swap via the catalog instead).
+tells whether it does. Renames and the reader's footer walk are
+driver-local filesystem ops, so the root must be on a filesystem the
+driver addresses directly (a local or NFS path, optionally
+``file://``; on object stores swap via the catalog instead).
 """
 
 from __future__ import annotations
@@ -86,10 +94,11 @@ import os
 import shutil
 import time
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import DEFAULT, IndexConfig
 from .blocks import BlockIndex, build_block_index
@@ -109,9 +118,44 @@ MANIFEST_SCHEMA = (
     "build_id string, shard int, status string, n_convs long, n_turns long, "
     "n_postings long, n_blocks long, wall_sec double, finished_at double"
 )
-DOC_MAP_SCHEMA = "doc_id long, conv_id string"
 TOMBSTONES_SCHEMA = "doc_id long, conv_id string, deleted_at double"
-CONV_HASHES_SCHEMA = "conv_id string, content_hash long"
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """Open the store table at ``path`` with the schema Spark wrote into
+    the footer of its first part file (the key Spark's own inference
+    reads, mergeSchema off), so opening it runs no Spark job. Partition
+    columns (``shard=K``) are discovered from the paths, as with
+    inference. A table without that key (not written by Spark), or a
+    root the driver cannot list (hdfs://, s3a://, which :func:`check`
+    serves), is opened by inference."""
+    schema = _footer_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def _footer_schema(path: str) -> T.StructType | None:
+    """The Spark schema in the footer of the first part file under
+    ``path``, found by a sorted walk that skips ``_``/``.`` entries and
+    stops at its first hit."""
+    import pyarrow.parquet as pq
+
+    for top, dirs, files in os.walk(path.removeprefix("file://")):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        parts = sorted(f for f in files if not f.startswith(("_", ".")))
+        if parts:
+            meta = pq.read_metadata(os.path.join(top, parts[0])).metadata or {}
+            raw = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+            return T.StructType.fromJson(json.loads(raw)) if raw else None
+    return None
+
+
+def _row_count(path: str) -> int:
+    """Rows of the parquet table at ``path``, from its footers (no
+    Spark job)."""
+    import pyarrow.dataset as pads
+
+    return pads.dataset(path, format="parquet").count_rows()
 
 
 def swap_stage(root: str, name: str) -> str:
@@ -254,7 +298,7 @@ def build_store(
             .write.parquet(os.path.join(stage, "corpus_prior"))
         )
         commit_swap(root, "build", [(t, t, []) for t in ("doc_map", "corpus_prior")])
-    doc_map = spark.read.schema(DOC_MAP_SCHEMA).parquet(store.path("doc_map"))
+    doc_map = read_table(spark, store.path("doc_map"))
     # step 0's n_docs is the doc_map's row count; shards leave it as is
     gstats = _corpus_stats(spark, store.path("corpus_prior"))
     n_docs_total = gstats[0]
@@ -262,7 +306,7 @@ def build_store(
 
     done = set()
     if os.path.isdir(store.path("manifest")):
-        manifest = spark.read.schema(MANIFEST_SCHEMA).parquet(store.path("manifest"))
+        manifest = read_table(spark, store.path("manifest"))
         done = {r["shard"] for r in manifest.where("status = 'done'").select("shard").collect()}
     for shard in range(n_shards):
         if shard in done:
@@ -300,8 +344,8 @@ def build_store(
     if not os.path.isdir(store.path("term_stats")):
         _write_globals(
             stage,
-            spark.read.parquet(store.path("postings")),
-            spark.read.parquet(store.path("doc_meta")),
+            read_table(spark, store.path("postings")),
+            read_table(spark, store.path("doc_meta")),
         )
         # content fingerprints for the incremental sync path
         # (sync_store): one extra narrow md5 groupBy over the input, and
@@ -328,13 +372,9 @@ def global_stats(postings: DataFrame, doc_meta: DataFrame) -> tuple[DataFrame, D
     return term_stats, corpus
 
 
-CORPUS_SCHEMA = "n_docs long, total_tokens long, avgdl double"
-
-
 def _corpus_stats(spark: SparkSession, path: str) -> tuple[int, float]:
-    """(n_docs, avgdl) of a corpus table, read with its known schema
-    (no inference job)."""
-    row = spark.read.schema(CORPUS_SCHEMA).parquet(path).first()
+    """(n_docs, avgdl) of a corpus table."""
+    row = read_table(spark, path).first()
     return int(row["n_docs"]), float(row["avgdl"])
 
 
@@ -384,10 +424,8 @@ def _write_shard(
 
     postings.write.mode("overwrite").parquet(path("postings"))
     doc_meta.write.mode("overwrite").parquet(path("doc_meta"))
-    if not postings.is_cached:  # the schema is known: no inference job
-        postings = postings.sparkSession.read.schema(postings.schema).parquet(
-            path("postings")
-        )
+    if not postings.is_cached:
+        postings = read_table(postings.sparkSession, path("postings"))
     blocks = build_block_index(
         Index(postings, doc_meta, term_stats=None, corpus=None, mat=None),
         cfg,
@@ -398,16 +436,17 @@ def _write_shard(
 
 def _shard_counts(spark: SparkSession, dest: str, shard: int) -> tuple[int, int, int, int]:
     """(n_convs, n_turns, n_postings, n_blocks) of a shard written by
-    :func:`_write_shard`: two tiny aggregates over its parquet, not a
-    re-run of the tokenize+encode DAG, each reading one column with its
-    known type (no schema-inference job)."""
+    :func:`_write_shard`, from its parquet, not a re-run of the
+    tokenize+encode DAG: row counts from the footers (every posting
+    sits in exactly one block, so n_postings is also Σ blocks.n_docs)
+    and one aggregate for n_turns."""
 
-    def read(table: str, column: str) -> DataFrame:
-        return spark.read.schema(column).parquet(os.path.join(dest, table, f"shard={shard}"))
+    def path(table: str) -> str:
+        return os.path.join(dest, table, f"shard={shard}")
 
-    meta = read("doc_meta", "n_turns long").agg(F.count(F.lit(1)), F.sum("n_turns")).first()
-    blk = read("blocks", "n_docs int").agg(F.count(F.lit(1)), F.sum("n_docs")).first()
-    return int(meta[0]), int(meta[1] or 0), int(blk[1] or 0), int(blk[0])
+    n_turns = read_table(spark, path("doc_meta")).agg(F.sum("n_turns")).first()[0]
+    n_postings, n_convs, n_blocks = (_row_count(path(t)) for t in _SHARD_TABLES)
+    return n_convs, int(n_turns or 0), n_postings, n_blocks
 
 
 def _lineage(
@@ -452,10 +491,10 @@ def _stage_fold(
     n_new = turns.select("conv_id").distinct().count()
     if n_new == 0:
         return 0, []
-    doc_map = spark.read.schema(DOC_MAP_SCHEMA).parquet(store.path("doc_map"))
+    doc_map = read_table(spark, store.path("doc_map"))
     top = doc_map.agg(F.max("doc_id")).first()[0]
     base = 0 if top is None else top + 1  # None: every doc compacted away
-    manifest = spark.read.schema(MANIFEST_SCHEMA).parquet(store.path("manifest"))
+    manifest = read_table(spark, store.path("manifest"))
     shard = 1 + max((r["shard"] for r in manifest.select("shard").collect()), default=-1)
     ids0 = assign_doc_ids(turns)
     new_map = ids0.withColumn("doc_id", (F.col("doc_id") + F.lit(base)).cast("long"))
@@ -464,7 +503,7 @@ def _stage_fold(
     idx.doc_meta.persist()  # read by the globals, then written
 
     def union(table: str, new: DataFrame, *cols: str) -> DataFrame:
-        return spark.read.parquet(store.path(table)).select(*cols).unionByName(
+        return read_table(spark, store.path(table)).select(*cols).unionByName(
             new.select(*cols)
         )
 
@@ -500,11 +539,7 @@ def _heal_fold(spark: SparkSession, store: IndexStore, name: str) -> int:
     published (the docs of its shard), 0 when none was pending."""
     steps = _journal_steps(swap_stage(store.root, name)) or []
     heal(store.root)
-    return sum(
-        spark.read.parquet(store.path(dst)).count()
-        for _, dst, _ in steps
-        if dst.startswith("doc_meta/")
-    )
+    return sum(_row_count(store.path(dst)) for _, dst, _ in steps if dst.startswith("doc_meta/"))
 
 
 def load_index(spark: SparkSession, store: IndexStore) -> Index:
@@ -515,10 +550,10 @@ def load_index(spark: SparkSession, store: IndexStore) -> Index:
     from ..plans.materialize import Materialized
 
     return Index(
-        postings=spark.read.parquet(store.path("postings")),
-        doc_meta=spark.read.parquet(store.path("doc_meta")),
-        term_stats=spark.read.parquet(store.path("term_stats")),
-        corpus=spark.read.parquet(store.path("corpus")),
+        postings=read_table(spark, store.path("postings")),
+        doc_meta=read_table(spark, store.path("doc_meta")),
+        term_stats=read_table(spark, store.path("term_stats")),
+        corpus=read_table(spark, store.path("corpus")),
         mat=Materialized(turns=None, docs=None),
     )
 
@@ -537,27 +572,17 @@ def load_index_with_content(
     the resolved text bit-for-bit."""
     from ..plans.materialize import Materialized, ordered_turns
 
-    idx = load_index(spark, store)
-    doc_map = spark.read.schema(DOC_MAP_SCHEMA).parquet(store.path("doc_map"))
-    turns = ordered_turns(transcripts).join(doc_map, "conv_id")
-    return Index(
-        postings=idx.postings,
-        doc_meta=idx.doc_meta,
-        term_stats=idx.term_stats,
-        corpus=idx.corpus,
-        mat=Materialized(turns=turns, docs=None),
-    )
+    turns = ordered_turns(transcripts).join(read_table(spark, store.path("doc_map")), "conv_id")
+    return replace(load_index(spark, store), mat=Materialized(turns=turns, docs=None))
 
 
 def load_block_index(spark: SparkSession, store: IndexStore) -> BlockIndex:
     """Open the persisted store for querying (blocks + dictionary)."""
-    n_docs, avgdl = _corpus_stats(spark, store.path("corpus"))
     return BlockIndex(
-        blocks=spark.read.parquet(store.path("blocks")),
-        term_stats=spark.read.parquet(store.path("term_stats")),
-        doc_meta=spark.read.parquet(store.path("doc_meta")),
-        n_docs=n_docs,
-        avgdl=avgdl,
+        blocks=read_table(spark, store.path("blocks")),
+        term_stats=read_table(spark, store.path("term_stats")),
+        doc_meta=read_table(spark, store.path("doc_meta")),
+        corpus=read_table(spark, store.path("corpus")),
         cfg=store.cfg,
     )
 
@@ -573,9 +598,7 @@ def check(spark: SparkSession, store: IndexStore, conv_id: str) -> bool:
     and a live new one in doc_map — it IS indexed. A conv-level
     "any tombstone row => gone" test would wrongly report it missing.
     """
-    dm = spark.read.schema(DOC_MAP_SCHEMA).parquet(store.path("doc_map")).where(
-        F.col("conv_id") == conv_id
-    )
+    dm = read_table(spark, store.path("doc_map")).where(F.col("conv_id") == conv_id)
     dead = tombstoned_convs(spark, store).select("doc_id")
     return bool(dm.join(dead, "doc_id", "left_anti").limit(1).count())
 
@@ -664,12 +687,10 @@ def delete_convs(spark: SparkSession, store: IndexStore, convs: DataFrame) -> in
     grow the tombstone table. The rows are staged and committed through
     one journal (module docstring). Returns the number of docs
     tombstoned."""
-    import pyarrow.dataset as pads
-
     heal(store.root)
     stage = swap_stage(store.root, "delete")
     step = _stage_tombstones(spark, store, convs, stage)
-    n = pads.dataset(os.path.join(stage, "tombstones"), format="parquet").count_rows()
+    n = _row_count(os.path.join(stage, "tombstones"))
     if n:
         commit_swap(store.root, "delete", [step])
     else:
@@ -685,8 +706,7 @@ def _stage_tombstones(
     tombstoned; returns the journal step that appends them."""
     dead = tombstoned_convs(spark, store).select("doc_id")
     victims = (
-        spark.read.schema(DOC_MAP_SCHEMA)
-        .parquet(store.path("doc_map"))
+        read_table(spark, store.path("doc_map"))
         .join(convs.select("conv_id"), "conv_id", "left_semi")
         .join(dead, "doc_id", "left_anti")
         .withColumn("deleted_at", F.lit(time.time()))
@@ -745,7 +765,7 @@ def sync_store(
     stage = swap_stage(store.root, "sync")
 
     new_h = conv_content_hashes(new_transcripts).persist()
-    dm = spark.read.schema(DOC_MAP_SCHEMA).parquet(store.path("doc_map"))
+    dm = read_table(spark, store.path("doc_map"))
     dead = tombstoned_convs(spark, store).select("doc_id")
     live = (
         dm.join(dead, "doc_id", "left_anti").select("conv_id").distinct().persist()
@@ -758,7 +778,7 @@ def sync_store(
 
         hashes_path = store.path("conv_hashes")
         if os.path.isdir(hashes_path):
-            old_h = spark.read.schema(CONV_HASHES_SCHEMA).parquet(hashes_path)
+            old_h = read_table(spark, hashes_path)
             changed = (
                 live.join(old_h, "conv_id")
                 .join(new_h.withColumnRenamed("content_hash", "_new"), "conv_id")
@@ -809,11 +829,7 @@ def tombstoned_convs(spark: SparkSession, store: IndexStore) -> DataFrame:
     p = store.path("tombstones")
     if not os.path.isdir(p):
         return spark.createDataFrame([], TOMBSTONES_SCHEMA)
-    return spark.read.schema(TOMBSTONES_SCHEMA).parquet(p)
-
-
-def tombstoned_doc_ids(spark: SparkSession, store: IndexStore) -> list[int]:
-    return [r["doc_id"] for r in tombstoned_convs(spark, store).select("doc_id").collect()]
+    return read_table(spark, p)
 
 
 def compact(spark: SparkSession, store: IndexStore) -> None:
@@ -842,7 +858,7 @@ def _stage_compact(spark: SparkSession, store: IndexStore, dead: DataFrame) -> N
     stage = swap_stage(store.root, "compact")
 
     def kept(name: str) -> DataFrame:
-        return spark.read.parquet(store.path(name)).join(dead, "doc_id", "left_anti")
+        return read_table(spark, store.path(name)).join(dead, "doc_id", "left_anti")
 
     # Rewrites keep the shard=K partition layout (everything folds into
     # shard=0): writing FLAT files under the root would leave any LATER
@@ -896,7 +912,7 @@ def merge_shards_tiered(
     Returns the number of merge groups executed (0 = nothing to do)."""
     heal(store.root)
     census = (
-        spark.read.parquet(store.path("doc_meta"))
+        read_table(spark, store.path("doc_meta"))
         .groupBy(F.col("shard").cast("long").alias("seg"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     )
@@ -910,7 +926,7 @@ def merge_shards_tiered(
         target = members[0]
 
         def group(name: str) -> DataFrame:
-            return spark.read.parquet(store.path(name)).where(
+            return read_table(spark, store.path(name)).where(
                 F.col("shard").isin(members)
             ).drop("shard")
 
@@ -933,7 +949,7 @@ def build_metrics(spark: SparkSession, store: IndexStore) -> DataFrame:
     """Lineage/metrics table: one row per built shard (build_id, counts,
     wall_sec, turns/sec) — the reference's log-sink analog (S11) as a
     queryable table."""
-    m = spark.read.parquet(store.path("manifest"))
+    m = read_table(spark, store.path("manifest"))
     return m.withColumn(
         "turns_per_sec",
         F.when(F.col("wall_sec") > 0, F.col("n_turns") / F.col("wall_sec")),

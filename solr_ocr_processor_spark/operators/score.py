@@ -60,7 +60,8 @@ def query_stats(index: Index, terms) -> QueryStats:
     terms' dictionary rows union into a single collect — one Spark job,
     whatever the scorer. Every BM25 idf a scorer uses comes from
     :meth:`QueryStats.idf` (functions/bm25.idf_scalar), the spelling
-    the oracle and WAND share."""
+    the oracle shares. ``index`` is anything with ``corpus`` and
+    ``term_stats`` frames (Index, BlockIndex)."""
     rows = index.corpus.select(
         F.lit(None).cast("string").alias("term"),
         F.lit(None).cast("long").alias("df"),

@@ -27,6 +27,13 @@ Distributed shape — two-phase block-max pruning:
    scorer and the pandas oracle. Total driver traffic per query:
    64 bound rows + 2·k score rows, independent of corpus size.
 
+The query's n_docs, avgdl and per-term df come from
+``score.query_stats`` — the one stats read every BM25 scorer shares
+(the index's ``corpus`` and ``term_stats`` frames, one collect) — and
+the idfs are ``QueryStats.idf``, folded into the block scan as a
+literal map. Tombstones have one form, a (doc_id) frame grouped by
+range inside the plan (:func:`wand_topk`).
+
 Inside a range, scoring is a dense numpy accumulation: decode each
 block's (doc_ids, tfs, dls), score ``idf·tfnorm`` vectorized, and
 ``np.add.at`` into a range-local dense array. Blocks are processed in
@@ -49,27 +56,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, IndexConfig
-from ..functions.bm25 import idf_scalar, tf_norm
+from ..functions.bm25 import tf_norm
 from ..functions.codec import delta_decode, varint_decode
 from ..functions.tokenizer import query_terms
 from .blocks import BlockIndex
-from .score import rank_topk
+from .score import query_stats, rank_topk, term_lookup
 
 _TOPK_SCHEMA = "range_id long, doc_id long, score double"
 
 
-def _make_range_scorer(
-    range_size: int,
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    exclude: frozenset[int] = frozenset(),
-):
+def _make_range_scorer(range_size: int, k: int, k1: float, b: float, avgdl: float):
     """applyInPandas scorer for one doc-id range's query blocks.
 
-    ``exclude`` carries tombstoned doc ids (lifecycle deletes) — their
-    scores are zeroed before top-k selection so deleted docs can never
+    A ``dead_ids`` column carries the range's tombstoned doc ids
+    (lifecycle deletes, grouped by range in :func:`wand_topk`'s plan so
+    the driver never materializes the global dead list); their scores
+    are zeroed before top-k selection so deleted docs can never
     surface, without rewriting the index (query-time tombstones,
     SURVEY A9)."""
 
@@ -77,16 +79,8 @@ def _make_range_scorer(
         range_id = int(pdf["range_id"].iat[0])
         base = range_id * range_size
         dense = np.zeros(range_size, dtype=np.float64)
-        # per-range tombstones ride the PLAN (dead_ids column from the
-        # range-grouped anti-... aggregate join in wand_topk) so the
-        # driver never materializes the global dead list; the scalar
-        # `exclude` closure remains for direct/API callers.
-        plan_dead: list[int] = []
-        if "dead_ids" in pdf.columns:
-            for v in pdf["dead_ids"]:
-                if v is not None and not (isinstance(v, float) and np.isnan(v)):
-                    plan_dead = [int(x) for x in v]
-                    break
+        # every row of the range carries the same dead list (or null)
+        dead = pdf["dead_ids"].iat[0] if "dead_ids" in pdf.columns else None
         pdf = pdf.sort_values(["term", "block_id"], kind="mergesort")
         for row in pdf.itertuples():
             docs = delta_decode(row.doc_ids).astype(np.int64)
@@ -94,17 +88,8 @@ def _make_range_scorer(
             dls = varint_decode(row.dls).astype(np.int64)
             contrib = row.idf * tf_norm(tfs, dls, avgdl, k1, b)
             np.add.at(dense, docs - base, contrib)
-        if exclude or plan_dead:
-            dead = np.array(
-                [
-                    d - base
-                    for d in set(plan_dead).union(exclude)
-                    if base <= d < base + range_size
-                ],
-                dtype=np.int64,
-            )
-            if dead.size:
-                dense[dead] = 0.0
+        if isinstance(dead, (list, np.ndarray)) and len(dead):
+            dense[np.asarray(dead, dtype=np.int64) - base] = 0.0
         hit = np.flatnonzero(dense)
         if hit.size == 0:
             return pd.DataFrame({"range_id": [], "doc_id": [], "score": []}).astype(
@@ -134,24 +119,23 @@ def wand_topk(
     query: str,
     k: int = 10,
     cfg: IndexConfig | None = None,
-    exclude_doc_ids: list[int] | None = None,
     exclude_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Exact BM25 top-k via two-phase block-max pruning.
 
     Returns (doc_id, conv_id, score) ordered by (score desc, doc_id).
-    Tombstone suppression (exact — zeroed inside the scorer, not
-    post-filtered, so the result always has k live docs when k exist)
-    has two forms:
+    The corpus scalars and the query terms' df come from
+    ``score.query_stats`` (one collect), the same stats read and idf
+    every other BM25 scorer uses; the idfs ride the plan as a literal
+    map (``score.term_lookup``).
 
-    - ``exclude_docs``: a (doc_id) DataFrame — the SCALE path. Dead
-      ids are grouped BY RANGE (``range_id = doc_id // range_size``)
-      in the plan and each range's list rides its block group into
-      the kernel, so driver traffic stays O(touched ranges) and a
-      store with 10^8 tombstones between compactions never
-      materializes a driver-side id list (round-3 verdict item).
-    - ``exclude_doc_ids``: a scalar list closed over by the kernel —
-      kept for direct API callers with small known sets; both compose.
+    Tombstone suppression is exact — zeroed inside the scorer, not
+    post-filtered, so the result always has k live docs when k exist.
+    ``exclude_docs`` is a (doc_id) DataFrame: dead ids are grouped BY
+    RANGE (``range_id = doc_id // range_size``) in the plan and each
+    range's list rides its block group into the kernel, so driver
+    traffic stays O(touched ranges) and a store with 10^8 tombstones
+    between compactions never materializes a driver-side id list.
     """
     cfg = cfg or bidx.cfg
     terms = query_terms(query, cfg)
@@ -159,36 +143,26 @@ def wand_topk(
     if not terms:
         return empty
 
-    # --- dictionary lookup: idf per present query term (tiny) ---
-    stats = (
-        bidx.term_stats.where(F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    )
-    if not stats:
+    stats = query_stats(bidx, terms)
+    present = sorted(t for t in set(terms) if t in stats.df)
+    if not present:
         return empty
-    idf_map = {r["term"]: idf_scalar(bidx.n_docs, r["df"]) for r in stats}
-
-    qidf = spark.createDataFrame(
-        [(t, i) for t, i in idf_map.items()], "term string, idf double"
-    )
     # Bound validity under avgdl drift: each block carries the avgdl its
     # max_tfnorm was computed against; tfnorm grows with avgdl by at most
     # avgdl_now/avgdl_built (blocks.py module docstring), so scaling the
     # stored bound by max(1, ratio) keeps pruning exact even for shards
     # built against a stale or shard-local avgdl.
-    # The isin filter (redundant with the join semantically) is what
-    # reaches the parquet/Iceberg scan as a PushedFilter: the store
-    # writes blocks term-sorted so min/max row-group stats prune to a
-    # handful of pages per query term. A join alone pushes nothing.
+    # The isin filter reaches the parquet/Iceberg scan as a
+    # PushedFilter: the store writes blocks term-sorted so min/max
+    # row-group stats prune to a handful of pages per query term.
     qb = (
-        bidx.blocks.where(F.col("term").isin(terms))
-        .join(F.broadcast(qidf), "term")
+        bidx.blocks.where(F.col("term").isin(present))
+        .withColumn("idf", term_lookup({t: stats.idf(t) for t in present}))
         .withColumn(
             "max_score",
             F.col("idf")
             * F.col("max_tfnorm")
-            * F.greatest(F.lit(1.0), F.lit(float(bidx.avgdl)) / F.col("avgdl")),
+            * F.greatest(F.lit(1.0), F.lit(stats.avgdl) / F.col("avgdl")),
         )
         .select(
             "term", "range_id", "block_id", "idf", "max_score", "n_docs",
@@ -230,10 +204,7 @@ def wand_topk(
         if not head:
             return empty
 
-        scorer = _make_range_scorer(
-            cfg.range_size, k, cfg.k1, cfg.b, bidx.avgdl,
-            frozenset(exclude_doc_ids or ()),
-        )
+        scorer = _make_range_scorer(cfg.range_size, k, cfg.k1, cfg.b, stats.avgdl)
 
         # --- adaptive cutover: when the head holds EVERY touched range
         # (small corpus or rare terms), theta-pruning cannot skip enough

@@ -138,6 +138,7 @@ def near_dedup_doc_stream(
     from solr_ocr_processor_spark.operators.dedup import (
         incremental_minhash_dedup,
     )
+    from solr_ocr_processor_spark.operators.lifecycle import read_table
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -150,7 +151,7 @@ def near_dedup_doc_stream(
             if _os.path.exists(_os.path.join(store_dir, "_SUCCESS")) or (
                 _os.path.isdir(store_dir) and _os.listdir(store_dir)
             ):
-                full_store = spark.read.parquet(store_dir)
+                full_store = read_table(spark, store_dir)
             else:
                 full_store = spark.createDataFrame(
                     [], "doc_id long, text string"

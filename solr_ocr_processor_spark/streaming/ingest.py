@@ -167,7 +167,7 @@ def merge_stream(spark: SparkSession, store) -> int:
     and streamed transcripts (asserted in tests), because BM25 depends
     only on the global stats and per-doc tf/dl — all refreshed.
     """
-    from ..operators.lifecycle import _heal_fold, _stage_fold, commit_swap, swap_stage
+    from ..operators.lifecycle import _heal_fold, _stage_fold, commit_swap, read_table, swap_stage
 
     n_healed = _heal_fold(spark, store, "stream")
     staged_path = store.path("stream_turns")
@@ -178,11 +178,11 @@ def merge_stream(spark: SparkSession, store) -> int:
     if not batches:
         return n_healed
     staged = (
-        spark.read.option("basePath", staged_path)
-        .parquet(*[os.path.join(staged_path, b) for b in batches])
+        read_table(spark, staged_path)
+        .where(F.col("batch_id").isin([int(b.split("=", 1)[1]) for b in batches]))
         .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
     )
-    doc_map = spark.read.parquet(store.path("doc_map"))
+    doc_map = read_table(spark, store.path("doc_map"))
     fresh = staged.join(doc_map.select("conv_id"), "conv_id", "left_anti")
     n_new, steps = _stage_fold(spark, store, fresh, swap_stage(store.root, "stream"))
     drops = [(None, f"stream_turns/{b}", []) for b in batches]

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from dataclasses import replace
 
 import pyarrow.dataset as pads
 import pytest
@@ -19,9 +20,11 @@ from solr_ocr_processor_spark.operators.lifecycle import (
     compact,
     delete_conv,
     load_block_index,
+    load_index,
+    read_table,
     tombstoned_convs,
-    tombstoned_doc_ids,
 )
+from solr_ocr_processor_spark.operators.score import query_stats
 from solr_ocr_processor_spark.operators.wand import wand_topk
 from solr_ocr_processor_spark.oracle import oracle_bm25_topk, oracle_materialize
 from solr_ocr_processor_spark.sources.transcripts import synth_transcripts
@@ -93,11 +96,11 @@ def test_delete_then_query_excludes(spark, store, corpus):
 
     delete_conv(spark, store, victim)
     assert check(spark, store, victim) is False
-    dead = tombstoned_doc_ids(spark, store)
-    assert before[0]["doc_id"] in dead
+    dead = tombstoned_convs(spark, store)
+    assert before[0]["doc_id"] in _dead_ids(spark, store)
 
     after = wand_topk(
-        spark, bidx, QUERY, k=5, cfg=CFG, exclude_doc_ids=dead
+        spark, bidx, QUERY, k=5, cfg=CFG, exclude_docs=dead
     ).collect()
     assert victim not in {r["conv_id"] for r in after}
     # tombstone mode keeps corpus stats: scores of survivors unchanged
@@ -106,9 +109,9 @@ def test_delete_then_query_excludes(spark, store, corpus):
 
     # compaction: physical removal; ranking == fresh build without victim
     compact(spark, store)
-    assert not tombstoned_doc_ids(spark, store)
+    assert not _dead_ids(spark, store)
     bidx2 = load_block_index(spark, store)
-    assert bidx2.n_docs == len(docs_pd) - 1
+    assert query_stats(bidx2, []).n_docs == len(docs_pd) - 1
     got = wand_topk(spark, bidx2, QUERY, k=5, cfg=CFG).collect()
     fresh_pd = oracle_materialize(
         corpus.where(f"conv_id != '{victim}'").toPandas()
@@ -117,6 +120,10 @@ def test_delete_then_query_excludes(spark, store, corpus):
     want = oracle_bm25_topk(fresh_pd, QUERY, k=5, cfg=CFG)
     assert [r["conv_id"] for r in got] == list(want["conv_id"])
     assert all(abs(r["score"] - s) < 1e-9 for r, s in zip(got, want["score"]))
+
+
+def _dead_ids(spark, store):
+    return sorted(r["doc_id"] for r in tombstoned_convs(spark, store).collect())
 
 
 def _deleted_copy(spark, store, tmp_path):
@@ -133,19 +140,36 @@ def _deleted_copy(spark, store, tmp_path):
 
 def test_delete_conv_twice_tombstones_each_doc_once(spark, store, tmp_path):
     copy, doc_ids = _deleted_copy(spark, store, tmp_path)
-    assert sorted(tombstoned_doc_ids(spark, copy)) == doc_ids
+    assert _dead_ids(spark, copy) == doc_ids
 
 
 def test_tombstoned_convs_opens_without_a_job(spark, store, tmp_path):
+    """Opening a store with tombstones — the tombstone table, the
+    postings-level Index and the BlockIndex — runs no Spark job."""
     copy, doc_ids = _deleted_copy(spark, store, tmp_path)
     sc = spark.sparkContext
-    sc.setJobGroup("open-tombstones", "open-tombstones")
+    sc.setJobGroup("open-store", "open-store")
     try:
         dead = tombstoned_convs(spark, copy)
+        idx = load_index(spark, copy)
+        bidx = load_block_index(spark, copy)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup("open-tombstones")) == []
+    assert list(sc.statusTracker().getJobIdsForGroup("open-store")) == []
     assert sorted(r["doc_id"] for r in dead.collect()) == doc_ids
+    assert query_stats(idx, []) == query_stats(bidx, [])
+    assert "shard" in idx.postings.columns and "shard" in bidx.blocks.columns
+
+
+def test_read_table_schema_equals_inference(spark, store, tmp_path):
+    """For every table of a store with tombstones, the footer schema
+    read_table opens with equals the one Spark infers."""
+    copy, _ = _deleted_copy(spark, store, tmp_path)
+    tables = sorted(n for n in os.listdir(copy.root) if not n.startswith(("_", ".")))
+    assert {"doc_map", "postings", "blocks", "doc_meta", "tombstones"} <= set(tables)
+    for name in tables:
+        path = copy.path(name)
+        assert read_table(spark, path).schema == spark.read.parquet(path).schema, name
 
 
 def test_tz_naive_ts_fingerprints_like_utc_timestamps(spark, tmp_path_factory):
@@ -174,14 +198,17 @@ def test_tz_naive_ts_fingerprints_like_utc_timestamps(spark, tmp_path_factory):
         "naive": pdf,
         "utc": pdf.assign(ts=pdf["ts"].dt.tz_localize("UTC")),
     }
-    hashes = {}
+    hashes, dfs = {}, {}
     for name, frame in frames.items():
         path = str(tmp / f"{name}.parquet")
         frame.to_parquet(path, coerce_timestamps="us")
-        df = spark.read.parquet(path)
+        df = dfs[name] = spark.read.parquet(path)
         want_type = T.TimestampNTZType if name == "naive" else T.TimestampType
         assert isinstance(df.schema["ts"].dataType, want_type)
         store = build_store(spark, df, str(tmp / f"store_{name}"), CFG, n_shards=1)
+        meta = store.path("doc_meta")
+        assert isinstance(read_table(spark, meta).schema["last_ts"].dataType, want_type)
+        assert read_table(spark, meta).schema == spark.read.parquet(meta).schema
         res = sync_store(spark, store, df.where("conv_id != 'c3'"))
         assert res == {"added": 0, "changed": 0, "removed": 1, "unchanged": 2}
         hashes[name] = sorted(
@@ -189,6 +216,16 @@ def test_tz_naive_ts_fingerprints_like_utc_timestamps(spark, tmp_path_factory):
         )
     assert hashes["naive"] == hashes["utc"]
     assert [h[0] for h in hashes["utc"]] == ["c1", "c2"]
+
+    # an inline-text ("full") store of the naive frame: doc_text and the
+    # TIMESTAMP_NTZ last_ts read back with the inferred schema
+    full = build_store(
+        spark, dfs["naive"], str(tmp / "store_full"), replace(CFG, index_type="full"), n_shards=1
+    )
+    meta = full.path("doc_meta")
+    assert "doc_text" in read_table(spark, meta).columns
+    assert isinstance(read_table(spark, meta).schema["last_ts"].dataType, T.TimestampNTZType)
+    assert read_table(spark, meta).schema == spark.read.parquet(meta).schema
 
 
 def test_empty_store_after_compact_loads_and_syncs_back(spark, tmp_path_factory):

@@ -66,7 +66,7 @@ from solr_ocr_processor_spark.operators.lifecycle import (
     sync_store,
     tombstoned_convs,
 )
-from solr_ocr_processor_spark.operators.score import bm25_topk
+from solr_ocr_processor_spark.operators.score import bm25_topk, query_stats
 from solr_ocr_processor_spark.operators.wand import wand_topk
 from solr_ocr_processor_spark.oracle import oracle_bm25_topk, oracle_materialize
 from solr_ocr_processor_spark.sources.transcripts import synth_transcripts
@@ -268,11 +268,18 @@ def test_build_resumes_from_every_crash_point(spark, corpus, built, tmp_path):
     assert n == (2 + 2) + 2 * (2 + 4) + (2 + 4)
     root = str(tmp_path / "uninterrupted")
     store = IndexStore(root, CFG)
-    assert all(r["turns_per_sec"] > 0 for r in build_metrics(spark, store).collect())
+    for r in build_metrics(spark, store).collect():
+        assert r["turns_per_sec"] > 0
+        # n_postings comes from footer row counts: it equals the shard's
+        # posting rows and the postings its blocks hold
+        shard = f"shard={r['shard']}"
+        blocks = pads.dataset(os.path.join(root, "blocks", shard)).to_table(["n_docs"])
+        assert r["n_postings"] == pads.dataset(os.path.join(root, "postings", shard)).count_rows()
+        assert r["n_postings"] == sum(blocks.column("n_docs").to_pylist())
     # the resumed stores answer like the oracle and like one plain build
     bidx = load_block_index(spark, store)
     docs_pd = oracle_materialize(corpus.toPandas())
-    assert bidx.n_docs == len(docs_pd)
+    assert query_stats(bidx, []).n_docs == len(docs_pd)
     got = wand_topk(spark, bidx, QUERY, k=10, cfg=CFG).collect()
     want = oracle_bm25_topk(docs_pd, QUERY, k=10, cfg=CFG)
     assert [r["doc_id"] for r in got] == list(want["doc_id"])

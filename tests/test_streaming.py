@@ -148,7 +148,6 @@ def test_merge_then_delete_then_compact(spark, tmp_path_factory):
         compact,
         delete_conv,
         load_block_index,
-        tombstoned_doc_ids,
     )
     from solr_ocr_processor_spark.operators.wand import wand_topk
     from solr_ocr_processor_spark.streaming.ingest import (

@@ -20,6 +20,7 @@ from solr_ocr_processor_spark.operators.lifecycle import (
     load_block_index,
     sync_store,
 )
+from solr_ocr_processor_spark.operators.score import query_stats
 from solr_ocr_processor_spark.operators.wand import wand_topk
 from solr_ocr_processor_spark.oracle import oracle_bm25_topk, oracle_materialize
 from solr_ocr_processor_spark.sources.transcripts import synth_transcripts
@@ -77,7 +78,7 @@ def test_sync_diff_counts_membership_and_rank_identity(
     # after compaction, ranking == fresh build of the new corpus
     bidx = load_block_index(spark, store)
     docs_pd = oracle_materialize(new_corpus.toPandas())
-    assert bidx.n_docs == len(docs_pd)
+    assert query_stats(bidx, []).n_docs == len(docs_pd)
     got = wand_topk(spark, bidx, QUERY, k=10, cfg=CFG).collect()
     want = oracle_bm25_topk(docs_pd, QUERY, k=10, cfg=CFG)
     got_convs = [r["conv_id"] for r in got]

@@ -6,6 +6,7 @@ from __future__ import annotations
 from solr_ocr_processor_spark.config import IndexConfig
 from solr_ocr_processor_spark.operators.blocks import build_block_index
 from solr_ocr_processor_spark.operators.build import build_postings
+from solr_ocr_processor_spark.operators.score import bm25_topk
 from solr_ocr_processor_spark.operators.wand import wand_topk
 from solr_ocr_processor_spark.sources.transcripts import synth_transcripts
 
@@ -19,17 +20,19 @@ def _bidx(spark, n_convs=40, seed=5):
 
 
 def test_plan_path_equals_scalar_path_many_tombstones(spark):
-    bidx = _bidx(spark)
+    """The in-plan WAND tombstones answer exactly like the exhaustive
+    scorer's tombstone anti-join over the same postings."""
+    t = synth_transcripts(spark, n_convs=40, max_turns=8, seed=5)
+    idx = build_postings(t, CFG)
+    bidx = build_block_index(idx, CFG)
     base = wand_topk(spark, bidx, QUERY, k=30, cfg=CFG).collect()
     # tombstone every third doc of the full id space — a "many
     # tombstones between compactions" store
     all_ids = [r["doc_id"] for r in bidx.doc_meta.select("doc_id").collect()]
     dead = [d for d in all_ids if d % 3 == 0]
     assert len(dead) > 8
-    scalar = wand_topk(
-        spark, bidx, QUERY, k=10, cfg=CFG, exclude_doc_ids=dead
-    ).collect()
     dead_df = spark.createDataFrame([(d,) for d in dead], "doc_id long")
+    scalar = bm25_topk(spark, idx, QUERY, k=10, cfg=CFG, exclude_docs=dead_df).collect()
     plan = wand_topk(
         spark, bidx, QUERY, k=10, cfg=CFG, exclude_docs=dead_df
     ).collect()
@@ -50,15 +53,3 @@ def test_plan_path_empty_tombstones_is_identity(spark):
     assert [(r["doc_id"], r["score"]) for r in a] == [
         (r["doc_id"], r["score"]) for r in b
     ]
-
-
-def test_both_exclude_forms_compose(spark):
-    bidx = _bidx(spark, n_convs=20, seed=9)
-    top = wand_topk(spark, bidx, QUERY, k=4, cfg=CFG).collect()
-    d0, d1 = top[0]["doc_id"], top[1]["doc_id"]
-    df = spark.createDataFrame([(d0,)], "doc_id long")
-    out = wand_topk(
-        spark, bidx, QUERY, k=4, cfg=CFG, exclude_doc_ids=[d1], exclude_docs=df
-    ).collect()
-    got = {r["doc_id"] for r in out}
-    assert d0 not in got and d1 not in got
