@@ -37,21 +37,12 @@ class IndexConfig:
     # the DuckDB oracle (regexp_extract_all(lower(text),'[a-z0-9]+')).
     token_pattern: str = r"[a-z0-9]+"
 
-    # Posting-block geometry: docs per compressed block; each block
-    # carries max_score metadata for block-max WAND pruning.
-    block_size: int = 128
-
-    # Doc-id range width for block alignment: blocks never cross a
-    # range boundary, so every (term, range) group the block builder
-    # shuffles is bounded by range_size postings — hot-term (stopword)
-    # skew is structurally impossible, no salting pre-pass needed.
-    # Query-side, ranges are the block-max pruning granularity.
+    # Doc-id range width of the block-max bound table: one bound row per
+    # (term, range), so every group the bound aggregation builds holds
+    # at most range_size postings — hot-term (stopword) skew is
+    # structurally impossible, no salting pre-pass needed. Query-side,
+    # ranges are WAND's pruning granularity.
     range_size: int = 4096
-
-    # (No salting knobs: hot-term skew is handled structurally by
-    # range_size — a (term, range) shuffle group can never exceed
-    # range_size postings, so no term needs salting. See
-    # operators/blocks.py module docstring.)
 
     # Query-side projection cap — mirrors the reference's hard
     # rows=600 file-list cap (app/process/solr.go:69).

@@ -1,6 +1,7 @@
-"""BM25 scoring math — ONE definition shared by the Spark engine, the
-block-max metadata computation, and the in-repo oracle scorer, so rank
-identity is never broken by two drifting formulas (SURVEY §7.3).
+"""BM25 scoring math — ONE definition shared by the Spark engine (its
+column spelling is score.bm25_term_score, which also computes the
+block-max bounds) and the in-repo oracle scorer, so rank identity is
+never broken by two drifting formulas (SURVEY §7.3).
 
 Lucene/Solr (the engine behind the reference) formula, k1=1.2 b=0.75:
 

@@ -1,10 +1,10 @@
-"""Posting-block compression: delta + LEB128 varint, numpy-vectorized.
+"""Posting payload compression: delta + LEB128 varint, numpy-vectorized.
 
 The analog of the compact MiniOCR encoding the reference emits so Solr
 stores small position-annotated payloads (app/process/alto.go:275-385
 — hierarchical XML squeezed to one-letter tags with packed coordinate
-strings). Our posting blocks pack sorted doc-id gaps, tfs, doc
-lengths, and position deltas as varint byte streams.
+strings). Each posting row packs its token positions and highlight
+char spans as varint byte streams of gaps that reset per posting.
 
 Everything here is pure numpy over uint64 arrays — no per-value Python
 in encode or decode (a constant ≤10-iteration byte-position loop does
@@ -92,24 +92,6 @@ def varint_decode(buf: bytes) -> np.ndarray:
     vals = np.zeros(int(last.sum()), dtype=_U64)
     np.bitwise_or.at(vals, gid, contrib)
     return vals
-
-
-def delta_encode(sorted_vals: np.ndarray) -> bytes:
-    """Gap-encode a sorted uint64 array (first value absolute) + varint."""
-    v = np.ascontiguousarray(sorted_vals, dtype=_U64)
-    if v.size == 0:
-        return b""
-    gaps = np.empty_like(v)
-    gaps[0] = v[0]
-    np.subtract(v[1:], v[:-1], out=gaps[1:])
-    return varint_encode(gaps)
-
-
-def delta_decode(buf: bytes) -> np.ndarray:
-    gaps = varint_decode(buf)
-    if gaps.size == 0:
-        return gaps
-    return np.cumsum(gaps, dtype=_U64)
 
 
 def encode_positions(tfs: np.ndarray, flat_positions: np.ndarray) -> bytes:

@@ -2,8 +2,8 @@
 
 The capability Solr performed for the reference (Lucene segment build,
 delegated at app/process/solr.go:171-202 where pages are POSTed per
-document): tokenize -> positional postings -> compressed blocks with
-max-score metadata.
+document): tokenize -> positional postings -> per-(term, range) max-score
+bounds.
 
 Two layers:
 
@@ -14,18 +14,18 @@ Two layers:
   the tokenizer (functions/tokenizer.py::tokenize_postings). This is
   the classic IR posting as a Spark row. Positions travel as ONE
   binary value per row because Spark's JVM->Python Arrow writer costs
-  ~1 µs per value regardless of type (measured) — a row per token made
-  the block shuffle transfer-bound. Query operators filter by term
-  FIRST (dictionary pre-filter) and only then decode payloads; at rest
+  ~1 µs per value regardless of type (measured). Query operators
+  filter by term FIRST (dictionary pre-filter) and only then decode
+  payloads; at rest
   the table is written term-bucketed so term filters prune files. The
   flat one-row-per-token view still exists (``Index.tokens``) as a
   vectorized decode for tests and post-filter query steps.
 
-- ``build_block_index`` (operators/blocks.py, M2): compressed posting
-  BLOCKS — delta+varint doc-id gaps, tf/dl streams, concatenated
-  position payloads, per-block max_score for block-max WAND — built
-  straight from the posting table with one (term, range_id)
-  repartition and a mapInArrow encoder.
+- ``build_block_index`` (operators/blocks.py, M2): the block-max
+  BOUND table — one (term, range_id) row with its posting count and
+  max tfnorm, what WAND prunes with — built from the posting table by
+  one groupBy(term, range_id) aggregation. The postings themselves are
+  not copied: WAND scores them through the shared BM25 core.
 """
 
 from __future__ import annotations
@@ -69,7 +69,7 @@ def build_postings(
         with_text=(cfg.index_type == "full"),
         n_docs_hint=n_docs_hint,
     )
-    # docs feeds doc_meta; postings feed blocks, dl, and stats. Persist
+    # docs feeds doc_meta; postings feed bounds, dl, and stats. Persist
     # both hubs so each subtree runs once.
     mat.docs.persist()
     # doc_partitioned: when materialize_docs broadcast the doc-id map,
@@ -103,7 +103,7 @@ def build_postings(
     # sum(tf over postings) and n_docs comes from the (much smaller)
     # docs frame, so avgdl needs two tiny aggs — same longs, same
     # double division, bit-identical value. This keeps the per-doc-id
-    # shuffle (doc_len above) off the block builder's critical path:
+    # shuffle (doc_len above) off the bound builder's critical path:
     # its DAG pulls corpus for the 3 scalars, only scorers pull doc_meta.
     corpus = (
         mat.docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))

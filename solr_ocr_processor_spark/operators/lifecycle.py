@@ -19,7 +19,7 @@ relational shape, swap the writer):
 
     {root}/doc_map/                 doc_id <-> conv_id (checkpointed sort)
     {root}/postings/shard=K/        posting rows (tf/dl + packed payloads)
-    {root}/blocks/shard=K/          compressed posting blocks
+    {root}/blocks/shard=K/          (term, range) block-max bound rows
     {root}/doc_meta/shard=K/
     {root}/term_stats/              global dictionary (finalize step)
     {root}/corpus/                  n_docs / avgdl / total_tokens
@@ -392,11 +392,11 @@ def _write_globals(dest: str, postings: DataFrame, doc_meta: DataFrame) -> None:
 
 
 def write_blocks(blocks: DataFrame, path: str) -> None:
-    """Write encoded blocks clustered + sorted by term, so query-time
+    """Write the bound rows clustered + sorted by term, so query-time
     `term IN (...)` filters prune parquet row groups via min/max stats
     (the file-level analog of Iceberg bucket(term) partitioning)."""
     blocks.repartition(F.col("term")).sortWithinPartitions(
-        "term", "range_id", "block_id"
+        "term", "range_id"
     ).write.mode("overwrite").parquet(path)
 
 
@@ -414,7 +414,7 @@ def _write_shard(
 ) -> None:
     """Write one shard's postings, doc_meta and blocks under
     ``{dest}/<table>/shard=N`` — ``dest`` is the store root (the build)
-    or a swap stage. Blocks encode against the GLOBAL ``stats`` =
+    or a swap stage. Block bounds use the GLOBAL ``stats`` =
     (n_docs, avgdl), from ``postings`` when it is cached (a fresh
     build or fold), else from the table just written instead of
     re-running its plan."""
@@ -437,9 +437,10 @@ def _write_shard(
 def _shard_counts(spark: SparkSession, dest: str, shard: int) -> tuple[int, int, int, int]:
     """(n_convs, n_turns, n_postings, n_blocks) of a shard written by
     :func:`_write_shard`, from its parquet, not a re-run of the
-    tokenize+encode DAG: row counts from the footers (every posting
-    sits in exactly one block, so n_postings is also Σ blocks.n_docs)
-    and one aggregate for n_turns."""
+    tokenize+bound DAG: row counts from the footers (n_blocks counts
+    the shard's (term, range) bound rows; every posting falls in
+    exactly one, so n_postings is also Σ blocks.n_docs) and one
+    aggregate for n_turns."""
 
     def path(table: str) -> str:
         return os.path.join(dest, table, f"shard={shard}")
@@ -476,7 +477,7 @@ def _stage_fold(
     Doc ids follow the live doc_map's max and the shard number is the
     manifest's max + 1 — both read from live tables, so a re-run after
     a crash before the commit repeats them. Staged: the shard's
-    postings, doc_meta and blocks (encoded against the post-fold global
+    postings, doc_meta and blocks (bounded against the post-fold global
     stats, as a batch build of the union would), its doc_map rows,
     term_stats/corpus over the live plus the staged tables,
     corpus_prior, and one lineage row. Older shards' blocks keep their
@@ -545,8 +546,9 @@ def _heal_fold(spark: SparkSession, store: IndexStore, name: str) -> int:
 def load_index(spark: SparkSession, store: IndexStore) -> Index:
     """Open the persisted store as a postings-level Index — the surface
     the AND / phrase / NOT query operators run against (the block index
-    serves bag-of-words WAND; positional and boolean operators read the
-    posting table, term-pruned at the parquet scan)."""
+    adds the (term, range) bounds bag-of-words WAND prunes with; every
+    operator reads the posting table, term-pruned at the parquet
+    scan)."""
     from ..plans.materialize import Materialized
 
     return Index(
@@ -577,9 +579,11 @@ def load_index_with_content(
 
 
 def load_block_index(spark: SparkSession, store: IndexStore) -> BlockIndex:
-    """Open the persisted store for querying (blocks + dictionary)."""
+    """Open the persisted store for querying (bounds, postings and
+    dictionary)."""
     return BlockIndex(
         blocks=read_table(spark, store.path("blocks")),
+        postings=read_table(spark, store.path("postings")),
         term_stats=read_table(spark, store.path("term_stats")),
         doc_meta=read_table(spark, store.path("doc_meta")),
         corpus=read_table(spark, store.path("corpus")),
@@ -863,10 +867,10 @@ def _stage_compact(spark: SparkSession, store: IndexStore, dead: DataFrame) -> N
     # Rewrites keep the shard=K partition layout (everything folds into
     # shard=0): writing FLAT files under the root would leave any LATER
     # merge_stream shard=N directory in a mixed flat+partitioned layout
-    # that Spark's partition discovery rejects. Blocks are re-encoded
-    # (a dead doc may sit mid-block) against the compacted corpus, and
-    # corpus_prior follows it so later appends encode against the
-    # post-compaction avgdl.
+    # that Spark's partition discovery rejects. Block bounds are
+    # rebuilt (a dead doc may hold a range's max) against the compacted
+    # corpus, and corpus_prior follows it so later appends bound against
+    # the post-compaction avgdl.
     postings, doc_meta = kept("postings").drop("shard"), kept("doc_meta").drop("shard")
     _write_globals(stage, postings, doc_meta)
     gstats = _corpus_stats(spark, os.path.join(stage, "corpus"))
@@ -900,7 +904,7 @@ def merge_shards_tiered(
 
     Per planned group: the members' postings and doc_meta concatenate
     unchanged (doc ids are global — a shard is just a storage
-    partition), the group's blocks RE-ENCODE from the union postings
+    partition), the group's block bounds REBUILD from the union postings
     against the store's GLOBAL corpus stats (same rule as the sharded
     build, so WAND bounds stay exact), and the three tables swap in as
     ``shard=min(members)`` through the journaled stage (module

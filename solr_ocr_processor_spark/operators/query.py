@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT, IndexConfig
 from ..functions.tokenizer import query_terms, tokenize_text
+from .blocks import range_id
 from .build import Index
 from .score import (
     _suppress,
@@ -248,8 +249,8 @@ _PRUNE_MAX_RANGES = 4_000_000
 def _block_range_prune(
     index: Index, sub: DataFrame, terms: list[str], bidx, dfs=None
 ) -> DataFrame:
-    """Keep only the posting rows whose doc's range holds a block of
-    EVERY term (see :func:`_phrase_counts`). ``dfs``: callers that
+    """Keep only the posting rows whose doc's range holds a bound row
+    of EVERY term (see :func:`_phrase_counts`). ``dfs``: callers that
     already read the query stats pass the terms' doc frequencies, so
     the gate costs zero extra Spark jobs."""
     if dfs is None:
@@ -259,15 +260,14 @@ def _block_range_prune(
     cand = (
         bidx.blocks.where(F.col("term").isin(terms))
         .select("term", "range_id")
-        .distinct()
+        .distinct()  # shards may share a range
         .groupBy("range_id")
         .agg(F.count(F.lit(1)).alias("_nt"))
         .where(F.col("_nt") == len(terms))
         .select("range_id")
     )
-    rs = int(bidx.cfg.range_size)
     return (
-        sub.withColumn("range_id", (F.col("doc_id") / F.lit(rs)).cast("long"))
+        sub.withColumn("range_id", range_id(bidx.cfg.range_size))
         .join(F.broadcast(cand), "range_id")
         .drop("range_id")
     )
@@ -298,9 +298,9 @@ def _phrase_counts(
     the decoded set is the phrase terms' posting lists, the same data
     a posting-list-intersection engine reads.
 
-    ``bidx`` (the compressed block index) enables BLOCK-RANGE PRUNING:
-    a doc can hold the phrase only if EVERY term has a block in the
-    doc's 4096-doc range, so the intersection of the terms' block
+    ``bidx`` (the block index) enables BLOCK-RANGE PRUNING: a doc can
+    hold the phrase only if EVERY term has a bound row for the doc's
+    4096-doc range, so the intersection of the terms' bound-row
     range sets — a tiny dictionary-scale frame — broadcast-joins
     against the postings BEFORE the doc shuffle. For a mixed
     rare+common phrase ("heisenberg the") this drops the common term's

@@ -20,7 +20,8 @@ coordinates. Here:
 Scores are float64; ties break by doc_id ASC (Lucene convention,
 BASELINE.md). ``round_to`` exists only for oracle comparison plumbing.
 
-The scoring core every float BM25 query scorer over an Index shares:
+The scoring core every float BM25 query scorer shares, block-max WAND
+(operators/wand.py) included:
 :func:`query_stats` (the one stats read; idf via
 functions/bm25.idf_scalar), :func:`bm25_term_score` (the one clause
 score), :func:`term_scores` / :func:`sorted_term_fold` /
@@ -131,7 +132,8 @@ def term_scores(
     term the dictionary holds — the scan every term-at-a-time scorer
     folds. The isin filter reaches the parquet scan (row-group pruning);
     posting rows already carry tf and dl, so there is NO per-(term, doc)
-    aggregation at query time."""
+    aggregation at query time. ``index`` is anything with a
+    ``postings`` frame (Index, BlockIndex)."""
     present = sorted(t for t in set(terms) if t in stats.df)
     idf = term_lookup({t: stats.idf(t) for t in present})
     return index.postings.where(F.col("term").isin(present)).select(

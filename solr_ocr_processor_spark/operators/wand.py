@@ -1,116 +1,68 @@
-"""Block-max pruned BM25 top-k over the compressed block index (M3).
+"""Block-max pruned BM25 top-k over the (term, range) bound table (M3).
 
 The capability Lucene's WAND/MAXSCORE implementation performed for the
 reference (Solr >= 8 with the query side delegated, SURVEY Q8/Q9):
-answer top-k without scoring every document, using per-block score
-upper bounds computed at build time.
+answer top-k without scoring every document, using per-range score
+upper bounds computed at build time (operators/blocks.py).
 
 Distributed shape — two-phase block-max pruning:
 
 1. **Bound pass (metadata only).** For every doc-id range touched by
-   the query terms, compute ``ub(range) = Σ_t max(block max_score)``.
+   the query terms, compute ``ub(range) = Σ_t idf_t · max_tfnorm``.
    Any document in the range scores ≤ ub(range). This is a tiny
-   aggregation over block *metadata* (no posting bytes decoded), and
-   it STAYS distributed: the driver only collects a fixed-size head of
-   the bound order to pick seed ranges (~64 rows), never the full
+   aggregation over the bound table (no posting read), and it STAYS
+   distributed: the driver only collects a fixed-size head of the
+   bound order to pick seed ranges (~64 rows), never the full
    ~n_docs/range_size bound table.
 2. **Seed + prune.** Exactly score the highest-ub ranges first (one
    Spark job), establishing the running top-k threshold θ = kth best
    score — collected as k rows via a distributed top-k. Every unscored
    range with ub < θ is provably outside the top-k and is pruned by a
-   Spark-side filter on the bound table; the survivors are scored in a
-   second job and merged with the seed scores by orderBy().limit(k)
-   (TakeOrderedAndProject: per-partition heaps, k-row driver merge).
-   θ-pruning is *exact* (ranges are pruned only when no document in
-   them can reach the heap), so results are rank-identical to
-   exhaustive scoring — verified in tests against both the DataFrame
-   scorer and the pandas oracle. Total driver traffic per query:
-   64 bound rows + 2·k score rows, independent of corpus size.
+   Spark-side filter on the bound table; the seed and surviving ranges
+   are scored by the returned plan, whose top-k is the one
+   (score DESC, doc_id ASC) helper every scorer shares. θ-pruning is
+   *exact* (ranges are pruned only when no document in them can reach
+   the heap), so results are rank-identical to exhaustive scoring.
+   Total driver traffic per query: 64 bound rows + 2·k score rows,
+   independent of corpus size.
 
-The query's n_docs, avgdl and per-term df come from
-``score.query_stats`` — the one stats read every BM25 scorer shares
-(the index's ``corpus`` and ``term_stats`` frames, one collect) — and
-the idfs are ``QueryStats.idf``, folded into the block scan as a
-literal map. Tombstones have one form, a (doc_id) frame grouped by
-range inside the plan (:func:`wand_topk`).
-
-Inside a range, scoring is a dense numpy accumulation: decode each
-block's (doc_ids, tfs, dls), score ``idf·tfnorm`` vectorized, and
-``np.add.at`` into a range-local dense array. Blocks are processed in
-sorted (term, block_id) order, so per-document float addition order
-equals the sorted-term fold used by the DataFrame scorer —
-bit-identical scores (SURVEY §7.3 rank-identity discipline).
+Scoring is the shared BM25 core of operators/score.py: the query's
+n_docs, avgdl and per-term df come from ``score.query_stats``, the
+posting scan is ``score.term_scores`` and each doc's score is the
+``score.sorted_term_fold`` of its term scores — a range filter only
+selects which docs are folded, and a doc's postings all sit in its
+range — so WAND's scores are bit-identical to ``bm25_topk``'s by
+construction. Tombstones anti-join through ``score._suppress``, the
+same plan ``bm25_topk`` uses, before θ and before the top-k.
 
 Why range-granular pruning instead of per-document cursors: a Python
-cursor loop is per-posting interpreted code (the slow path the input
-hint bans); dense vectorized scoring of a 4096-doc range costs about
-as much as advancing a cursor a few dozen times, and the θ bound still
-skips the long tail of ranges where no competitive document lives.
+cursor loop is per-posting interpreted code; a range filter is one
+column predicate on the posting scan, and the θ bound still skips the
+long tail of ranges where no competitive document lives.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT, IndexConfig
-from ..functions.bm25 import tf_norm
-from ..functions.codec import delta_decode, varint_decode
+from ..config import IndexConfig
 from ..functions.tokenizer import query_terms
-from .blocks import BlockIndex
-from .score import query_stats, rank_topk, term_lookup
+from .blocks import BlockIndex, range_id
+from .score import (
+    _suppress,
+    doc_scores,
+    query_stats,
+    rank_topk,
+    sorted_term_fold,
+    term_lookup,
+    term_scores,
+)
 
-_TOPK_SCHEMA = "range_id long, doc_id long, score double"
-
-
-def _make_range_scorer(range_size: int, k: int, k1: float, b: float, avgdl: float):
-    """applyInPandas scorer for one doc-id range's query blocks.
-
-    A ``dead_ids`` column carries the range's tombstoned doc ids
-    (lifecycle deletes, grouped by range in :func:`wand_topk`'s plan so
-    the driver never materializes the global dead list); their scores
-    are zeroed before top-k selection so deleted docs can never
-    surface, without rewriting the index (query-time tombstones,
-    SURVEY A9)."""
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        range_id = int(pdf["range_id"].iat[0])
-        base = range_id * range_size
-        dense = np.zeros(range_size, dtype=np.float64)
-        # every row of the range carries the same dead list (or null)
-        dead = pdf["dead_ids"].iat[0] if "dead_ids" in pdf.columns else None
-        pdf = pdf.sort_values(["term", "block_id"], kind="mergesort")
-        for row in pdf.itertuples():
-            docs = delta_decode(row.doc_ids).astype(np.int64)
-            tfs = varint_decode(row.tfs).astype(np.int64)
-            dls = varint_decode(row.dls).astype(np.int64)
-            contrib = row.idf * tf_norm(tfs, dls, avgdl, k1, b)
-            np.add.at(dense, docs - base, contrib)
-        if isinstance(dead, (list, np.ndarray)) and len(dead):
-            dense[np.asarray(dead, dtype=np.int64) - base] = 0.0
-        hit = np.flatnonzero(dense)
-        if hit.size == 0:
-            return pd.DataFrame({"range_id": [], "doc_id": [], "score": []}).astype(
-                {"range_id": "int64", "doc_id": "int64", "score": "float64"}
-            )
-        scores = dense[hit]
-        # Full (score desc, doc_id asc) sort, THEN truncate: argpartition
-        # would pick arbitrarily among docs tied at the k-th score, which
-        # can disagree with the exhaustive scorer's doc_id-asc tie-break.
-        # Ranges hold <= range_size docs, so the full lexsort is cheap.
-        order = np.lexsort((hit, -scores))
-        hit, scores = hit[order][:k], scores[order][:k]
-        return pd.DataFrame(
-            {
-                "range_id": np.full(hit.size, range_id, dtype=np.int64),
-                "doc_id": (hit + base).astype(np.int64),
-                "score": scores,
-            }
-        )
-
-    return score
+# Bound rows the driver collects per query. When the head holds every
+# touched range, θ-pruning cannot skip enough to pay for its jobs and
+# the query is scored exhaustively.
+HEAD = 64
 
 
 def wand_topk(
@@ -129,148 +81,87 @@ def wand_topk(
     every other BM25 scorer uses; the idfs ride the plan as a literal
     map (``score.term_lookup``).
 
-    Tombstone suppression is exact — zeroed inside the scorer, not
-    post-filtered, so the result always has k live docs when k exist.
-    ``exclude_docs`` is a (doc_id) DataFrame: dead ids are grouped BY
-    RANGE (``range_id = doc_id // range_size``) in the plan and each
-    range's list rides its block group into the kernel, so driver
-    traffic stays O(touched ranges) and a store with 10^8 tombstones
-    between compactions never materializes a driver-side id list.
+    ``exclude_docs`` is a (doc_id) DataFrame of tombstones, anti-joined
+    in the plan before θ and before the top-k, so the result always has
+    k live docs when k exist and the driver never holds the dead list.
     """
     cfg = cfg or bidx.cfg
     terms = query_terms(query, cfg)
     empty = spark.createDataFrame([], "doc_id long, conv_id string, score double")
-    if not terms:
+    if not terms or k <= 0:
         return empty
 
     stats = query_stats(bidx, terms)
     present = sorted(t for t in set(terms) if t in stats.df)
     if not present:
         return empty
-    # Bound validity under avgdl drift: each block carries the avgdl its
+    # Bound validity under avgdl drift: each row carries the avgdl its
     # max_tfnorm was computed against; tfnorm grows with avgdl by at most
     # avgdl_now/avgdl_built (blocks.py module docstring), so scaling the
     # stored bound by max(1, ratio) keeps pruning exact even for shards
-    # built against a stale or shard-local avgdl.
+    # built against a stale or shard-local avgdl. Shards may share a
+    # range, so a term's bound is its max over their rows.
     # The isin filter reaches the parquet/Iceberg scan as a
-    # PushedFilter: the store writes blocks term-sorted so min/max
+    # PushedFilter: the store writes bounds term-sorted so min/max
     # row-group stats prune to a handful of pages per query term.
-    qb = (
+    bounds = (
         bidx.blocks.where(F.col("term").isin(present))
-        .withColumn("idf", term_lookup({t: stats.idf(t) for t in present}))
-        .withColumn(
-            "max_score",
-            F.col("idf")
-            * F.col("max_tfnorm")
-            * F.greatest(F.lit(1.0), F.lit(stats.avgdl) / F.col("avgdl")),
-        )
         .select(
-            "term", "range_id", "block_id", "idf", "max_score", "n_docs",
-            "doc_ids", "tfs", "dls",
+            "range_id",
+            "term",
+            "n_docs",
+            (
+                term_lookup({t: stats.idf(t) for t in present})
+                * F.col("max_tfnorm")
+                * F.greatest(F.lit(1.0), F.lit(stats.avgdl) / F.col("avgdl"))
+            ).alias("max_score"),
         )
-    )
-    if exclude_docs is not None:
-        # tombstones grouped by the range their doc id falls in; the
-        # left join hands each kernel ONLY its own range's dead list
-        dead_ranges = (
-            exclude_docs.select(F.col("doc_id").cast("long").alias("doc_id"))
-            .withColumn(
-                "range_id",
-                F.floor(F.col("doc_id") / F.lit(int(cfg.range_size))).cast("long"),
-            )
-            .groupBy("range_id")
-            .agg(F.collect_list("doc_id").alias("dead_ids"))
-        )
-        qb = qb.join(dead_ranges, "range_id", "left")
-    qb.persist()
-    bounds_df = (
-        qb.groupBy("range_id", "term")
+        .groupBy("range_id", "term")
         .agg(F.max("max_score").alias("tmax"), F.sum("n_docs").alias("nd"))
         .groupBy("range_id")
         .agg(F.sum("tmax").alias("ub"), F.sum("nd").alias("npost"))
-    ).persist()
-    seed_scored = None
-    try:
-        # --- phase 1: seed selection from the TOP of the bound order ---
-        # Only a fixed-size head of the per-range bound table reaches
-        # the driver (TakeOrderedAndProject) — at 10^9 docs / range 4096
-        # the full bound table is ~250k rows per query; the driver never
-        # sees it. Ranges beyond the head simply stay in the survivor
-        # pool, so exactness is unaffected by the head size.
-        HEAD = 64
-        head = (
-            bounds_df.orderBy(F.desc("ub"), F.asc("range_id")).limit(HEAD).collect()
+    )
+    # --- phase 1: seed selection from the TOP of the bound order ---
+    # Only a fixed-size head of the per-range bound table reaches the
+    # driver (TakeOrderedAndProject) — at 10^9 docs / range 4096 the
+    # full bound table is ~250k rows per query; the driver never sees
+    # it. Ranges beyond the head stay in the survivor pool, so
+    # exactness is unaffected by the head size.
+    head = bounds.orderBy(F.desc("ub"), F.asc("range_id")).limit(HEAD).collect()
+    if len(head) < HEAD:
+        # the head holds EVERY touched range: bm25_topk's plan
+        scored = doc_scores(bidx, stats, present, cfg)
+        return rank_topk(bidx, _suppress(scored, exclude_docs), k)
+
+    seed, docs_cov = [], 0
+    for r in head:
+        seed.append(int(r["range_id"]))
+        docs_cov += r["npost"]
+        if docs_cov >= max(4 * k, 256) and len(seed) >= 2:
+            break
+    scan = term_scores(bidx, stats, present, cfg).withColumn(
+        "range_id", range_id(cfg.range_size)
+    )
+
+    def scored_in(ranges) -> DataFrame:
+        return _suppress(
+            ranges.groupBy("doc_id").agg(sorted_term_fold().alias("score")),
+            exclude_docs,
         )
-        if not head:
-            return empty
 
-        scorer = _make_range_scorer(cfg.range_size, k, cfg.k1, cfg.b, stats.avgdl)
+    # --- phase 2a: score the seed ranges; theta = k-th best (k rows
+    # collected — the only score rows the driver holds) ---
+    top_seed = (
+        scored_in(scan.where(F.col("range_id").isin(seed)))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
+        .collect()
+    )
+    theta = top_seed[k - 1]["score"] if len(top_seed) >= k else float("-inf")
 
-        # --- adaptive cutover: when the head holds EVERY touched range
-        # (small corpus or rare terms), theta-pruning cannot skip enough
-        # work to pay for its extra jobs — score all ranges in ONE job
-        # and take the distributed top-k directly (trivially exact).
-        # The two-phase path below is for range counts ≫ HEAD, where
-        # pruning skips the long tail.
-        if len(head) < HEAD:
-            top = (
-                qb.groupBy("range_id")
-                .applyInPandas(scorer, _TOPK_SCHEMA)
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-                .collect()
-            )
-        else:
-            seed, docs_cov = [], 0
-            for r in head:
-                seed.append(int(r["range_id"]))
-                docs_cov += r["npost"]
-                if docs_cov >= max(4 * k, 256) and len(seed) >= 2:
-                    break
-
-            # --- phase 2a: score seed ranges; theta = k-th best (k rows
-            # collected — the only score rows the driver ever holds) ---
-            seed_scored = (
-                qb.where(F.col("range_id").isin(seed))
-                .groupBy("range_id")
-                .applyInPandas(scorer, _TOPK_SCHEMA)
-                .persist()
-            )
-            top_seed = (
-                seed_scored.orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-                .collect()
-            )
-            theta = (
-                top_seed[k - 1]["score"] if len(top_seed) >= k else float("-inf")
-            )
-
-            # --- phase 2b: prune ub < theta IN SPARK, score survivors,
-            # and merge via a distributed top-k (per-partition heaps +
-            # k-row driver merge) instead of a driver-side Python sort ---
-            surv_ranges = bounds_df.where(
-                (F.col("ub") >= theta) & (~F.col("range_id").isin(seed))
-            ).select("range_id")
-            survivor_scored = (
-                qb.join(F.broadcast(surv_ranges), "range_id")
-                .groupBy("range_id")
-                .applyInPandas(scorer, _TOPK_SCHEMA)
-            )
-            top = (
-                seed_scored.select("doc_id", "score")
-                .unionByName(survivor_scored.select("doc_id", "score"))
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-                .collect()
-            )
-        # k rows reach the driver before the finally block drops the
-        # persisted frames; conv_id resolves on them
-        out = spark.createDataFrame(
-            [(r["doc_id"], r["score"]) for r in top], "doc_id long, score double"
-        )
-        return rank_topk(bidx, out, k)
-    finally:
-        qb.unpersist()
-        bounds_df.unpersist()
-        if seed_scored is not None:
-            seed_scored.unpersist()
+    # --- phase 2b: prune ub < theta IN SPARK; the seed and surviving
+    # ranges are scored together by the returned top-k plan ---
+    kept = bounds.where(
+        (F.col("ub") >= theta) | F.col("range_id").isin(seed)
+    ).select("range_id")
+    return rank_topk(bidx, scored_in(scan.join(F.broadcast(kept), "range_id")), k)

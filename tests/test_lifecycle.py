@@ -29,7 +29,7 @@ from solr_ocr_processor_spark.operators.wand import wand_topk
 from solr_ocr_processor_spark.oracle import oracle_bm25_topk, oracle_materialize
 from solr_ocr_processor_spark.sources.transcripts import synth_transcripts
 
-CFG = IndexConfig(block_size=4, range_size=8)
+CFG = IndexConfig(range_size=8)
 QUERY = "spark window merge"
 
 
@@ -74,6 +74,8 @@ def test_sharded_wand_bounds_survive_skewed_shard_avgdl(spark, tmp_path_factory)
     # sanity: the winners are the short docs (high tfnorm), which live
     # entirely in the under-avgdl shard the old bounds pruned
     assert all(r["conv_id"].startswith("a") for r in got)
+    # 75 ranges take the two-phase path: k=0 is an empty top-k there too
+    assert wand_topk(spark, bidx, "zebra", k=0, cfg=CFG).collect() == []
 
 
 @pytest.fixture(scope="module")

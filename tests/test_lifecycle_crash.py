@@ -72,7 +72,7 @@ from solr_ocr_processor_spark.oracle import oracle_bm25_topk, oracle_materialize
 from solr_ocr_processor_spark.sources.transcripts import synth_transcripts
 from solr_ocr_processor_spark.streaming.ingest import merge_stream
 
-CFG = IndexConfig(block_size=4, range_size=8)
+CFG = IndexConfig(range_size=8)
 QUERY = "spark window merge"
 TEXT_TABLES = (
     "postings", "doc_meta", "blocks", "doc_map", "term_stats", "corpus",

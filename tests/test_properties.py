@@ -18,7 +18,7 @@ from solr_ocr_processor_spark.operators.wand import wand_topk
 from solr_ocr_processor_spark.oracle import oracle_bm25_topk, oracle_materialize
 from solr_ocr_processor_spark.sources.transcripts import synth_transcripts
 
-CFG = IndexConfig(block_size=3, range_size=8)
+CFG = IndexConfig(range_size=8)
 SEEDS = (101, 202, 303)
 
 
@@ -50,11 +50,11 @@ def test_every_posting_doc_exists(built):
     tok_docs = {r["doc_id"] for r in idx.tokens.select("doc_id").distinct().collect()}
     assert tok_docs <= doc_ids
     assert doc_ids == set(docs_pd["doc_id"])
-    # block metadata consistent with doc universe
-    bad = bidx.blocks.where(
-        (F.col("first_doc") < 0) | (F.col("last_doc") < F.col("first_doc"))
-    ).count()
-    assert bad == 0
+    # every bound row's range holds a doc of the doc universe
+    bound_ranges = {
+        r["range_id"] for r in bidx.blocks.select("range_id").distinct().collect()
+    }
+    assert bound_ranges <= {d // CFG.range_size for d in doc_ids}
 
 
 def test_df_bounded_by_n_docs(built):

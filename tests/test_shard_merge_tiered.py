@@ -20,7 +20,7 @@ from solr_ocr_processor_spark.operators.lifecycle import (
 from solr_ocr_processor_spark.operators.wand import wand_topk
 from solr_ocr_processor_spark.sources.transcripts import synth_transcripts
 
-CFG = IndexConfig(block_size=4, range_size=8)
+CFG = IndexConfig(range_size=8)
 QUERY = "spark window merge"
 
 

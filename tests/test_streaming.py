@@ -103,7 +103,7 @@ def test_merge_stream_fold_in(spark, tmp_path_factory):
         stream_transcripts,
     )
 
-    cfg = IndexConfig(block_size=4, range_size=8)
+    cfg = IndexConfig(range_size=8)
     root = tmp_path_factory.mktemp("fold")
     t = synth_transcripts(spark, n_convs=20, max_turns=8, seed=31)
     batch = t.where("conv_id < 's000014'")
@@ -156,7 +156,7 @@ def test_merge_then_delete_then_compact(spark, tmp_path_factory):
         stream_transcripts,
     )
 
-    cfg = IndexConfig(block_size=4, range_size=8)
+    cfg = IndexConfig(range_size=8)
     root = tmp_path_factory.mktemp("mdc")
     t = synth_transcripts(spark, n_convs=16, max_turns=7, seed=41)
     batch = t.where("conv_id < 's000011'")
@@ -217,7 +217,7 @@ def test_compact_then_merge_stream(spark, tmp_path_factory):
         stream_transcripts,
     )
 
-    cfg = IndexConfig(block_size=4, range_size=8)
+    cfg = IndexConfig(range_size=8)
     root = tmp_path_factory.mktemp("ctm")
     t = synth_transcripts(spark, n_convs=14, max_turns=6, seed=47)
     batch = t.where("conv_id < 's000010'")
@@ -279,7 +279,7 @@ def test_merge_stream_crash_resume(spark, tmp_path_factory, monkeypatch):
         stream_transcripts,
     )
 
-    cfg = IndexConfig(block_size=4, range_size=8)
+    cfg = IndexConfig(range_size=8)
     root = tmp_path_factory.mktemp("crash")
     t = synth_transcripts(spark, n_convs=18, max_turns=6, seed=53)
     batch = t.where("conv_id < 's000010'")
@@ -354,7 +354,7 @@ def test_merge_stream_crash_before_commit(spark, tmp_path_factory, monkeypatch):
         stream_transcripts,
     )
 
-    cfg = IndexConfig(block_size=4, range_size=8)
+    cfg = IndexConfig(range_size=8)
     root = tmp_path_factory.mktemp("crashpre")
     t = synth_transcripts(spark, n_convs=14, max_turns=6, seed=59)
     batch = t.where("conv_id < 's000009'")

@@ -25,7 +25,7 @@ from solr_ocr_processor_spark.operators.wand import wand_topk
 from solr_ocr_processor_spark.oracle import oracle_bm25_topk, oracle_materialize
 from solr_ocr_processor_spark.sources.transcripts import synth_transcripts
 
-CFG = IndexConfig(block_size=4, range_size=8)
+CFG = IndexConfig(range_size=8)
 QUERY = "spark window merge"
 
 

@@ -1,5 +1,5 @@
-"""In-plan WAND tombstones (round-4: the exclude_docs DataFrame path
-groups dead ids by range inside the plan — no driver-side id list)."""
+"""In-plan WAND tombstones: the exclude_docs DataFrame anti-joins into
+the scoring plan (score._suppress) — no driver-side id list."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ from solr_ocr_processor_spark.operators.score import bm25_topk
 from solr_ocr_processor_spark.operators.wand import wand_topk
 from solr_ocr_processor_spark.sources.transcripts import synth_transcripts
 
-CFG = IndexConfig(block_size=4, range_size=8)
+CFG = IndexConfig(range_size=8)
 QUERY = "spark window merge"
 
 
