@@ -71,26 +71,71 @@ def corpus(spark):
     return idx, bidx, docs_pd
 
 
+def _postings_by_range(idx):
+    post = idx.postings.select("term", "doc_id", "tf", "dl").toPandas()
+    post["range_id"] = post["doc_id"] // CFG.range_size
+    return post
+
+
+def test_block_integrity(corpus):
+    """One bound row per (term, range_id) that has postings, and no
+    other: n_docs is exactly that range's posting count."""
+    idx, bidx, _ = corpus
+    blocks = bidx.blocks.toPandas().set_index(["term", "range_id"]).sort_index()
+    assert blocks.index.is_unique
+    per_range = _postings_by_range(idx).groupby(["term", "range_id"]).size()
+    assert per_range.index.equals(blocks.index)
+    assert (per_range.to_numpy() == blocks["n_docs"].to_numpy()).all()
+    assert int(blocks["n_docs"].sum()) == idx.postings.count()
+
+
+def test_block_positions_match_postings(corpus):
+    """Positions live on the postings, not the bound table: a term's
+    pos_bytes decode to its token positions, and its bound rows cover
+    exactly the ranges of the docs that hold it."""
+    idx, bidx, _ = corpus
+    want: dict[int, list[int]] = {}
+    for r in (
+        idx.tokens.where("term = 'spark'")
+        .select("doc_id", "token_pos")
+        .collect()
+    ):
+        want.setdefault(r["doc_id"], []).append(r["token_pos"])
+    want = {k: sorted(v) for k, v in want.items()}
+    got = {
+        int(r["doc_id"]): list(
+            decode_positions(np.array([r["tf"]]), bytes(r["pos_bytes"]))
+        )
+        for r in idx.postings.where("term = 'spark'")
+        .select("doc_id", "tf", "pos_bytes")
+        .collect()
+    }
+    assert got == want
+    ranges = {
+        r["range_id"]: r["n_docs"]
+        for r in bidx.blocks.where("term = 'spark'").collect()
+    }
+    expect: dict[int, int] = {}
+    for d in want:
+        expect[d // CFG.range_size] = expect.get(d // CFG.range_size, 0) + 1
+    assert ranges == expect
+
+
 def test_block_bounds_match_postings(corpus):
-    """One bound row per (term, range_id): n_docs is the range's posting
-    count and max_tfnorm is >= every posting's tfnorm in the range —
+    """max_tfnorm is >= every posting's tfnorm in its (term, range) —
     exactly, and attained by one of them."""
     idx, bidx, _ = corpus
     avgdl = float(idx.corpus.first()["avgdl"])
     blocks = bidx.blocks.toPandas().set_index(["term", "range_id"]).sort_index()
-    assert blocks.index.is_unique
     assert (blocks["avgdl"] == avgdl).all()
-    post = idx.postings.select("term", "doc_id", "tf", "dl").toPandas()
-    post["range_id"] = post["doc_id"] // CFG.range_size
+    post = _postings_by_range(idx)
     post["tfnorm"] = tf_norm(post["tf"], post["dl"], avgdl, CFG.k1, CFG.b)
     per_range = post.groupby(["term", "range_id"])
-    assert per_range.size().index.equals(blocks.index)
-    assert (per_range.size().to_numpy() == blocks["n_docs"].to_numpy()).all()
     bound = blocks["max_tfnorm"].reindex(
         pd.MultiIndex.from_frame(post[["term", "range_id"]])
     )
     assert (bound.to_numpy() >= post["tfnorm"].to_numpy()).all()
-    tight = per_range["tfnorm"].max().to_numpy()
+    tight = per_range["tfnorm"].max().reindex(blocks.index).to_numpy()
     assert (tight == blocks["max_tfnorm"].to_numpy()).all()
 
 
