@@ -187,18 +187,19 @@ def rank_topk(index, scored: DataFrame, k: int, start: int = 0) -> DataFrame:
     TakeOrderedAndProject (per-partition heaps + driver merge — the
     global sort never materializes), and conv_id joins only the k
     surviving rows (late materialization: never a corpus-wide doc_meta
-    shuffle). ``index`` is anything with a ``doc_meta`` frame (Index,
+    shuffle). The join returns at most k rows, so the final order is
+    orderBy+limit(k) again: the plan's root is a second
+    TakeOrderedAndProject, not a range-partitioned sort (whose sampling
+    job and shuffle would cost two Spark jobs to re-sort k rows).
+    ``index`` is anything with a ``doc_meta`` frame (Index,
     BlockIndex)."""
-    top = (
-        scored.select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .offset(start)
-        .limit(k)
-    )
+    order = [F.desc("score"), F.asc("doc_id")]
+    top = scored.select("doc_id", "score").orderBy(*order).offset(start).limit(k)
     return (
         top.join(index.doc_meta.select("doc_id", "conv_id"), "doc_id")
         .select("doc_id", "conv_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .orderBy(*order)
+        .limit(k)
     )
 
 
@@ -290,7 +291,9 @@ def bm25_topk(
     """Top-k (doc_id, conv_id, score). Spark lowers orderBy+limit to
     TakeOrderedAndProject: per-partition heaps + driver merge — the
     global sort never materializes. conv_id resolves AFTER the top-k
-    (k-row broadcast join, never a corpus-wide doc_meta shuffle).
+    (k-row broadcast join, never a corpus-wide doc_meta shuffle), and
+    the plan's root is a TakeOrderedAndProject over the joined k rows:
+    no range-partitioned sort (:func:`rank_topk`).
     ``exclude_docs`` (tombstones) anti-joins in-plan before the top-k.
     ``start`` pages (Solr's ``start=`` param): rows [start, start+k)
     of the ranking — offset+limit lower into the SAME
@@ -1017,7 +1020,11 @@ def bm25_batch_topk(
       scores in sorted-term order;
     - per-query top-k is a rank window partitioned by query_id — one
       shuffle keyed on the workload, k rows per query survive;
-    - conv_id resolves after, on |workload|·k rows.
+    - conv_id resolves after, on |workload|·k rows;
+    - the final (query_id, rank) order is orderBy+limit(|workload|·k),
+      which the join's row count never exceeds: the plan's root is a
+      TakeOrderedAndProject, not a range-partitioned sort (a sampling
+      job and a shuffle to order that many rows).
     """
     from pyspark.sql.window import Window
 
@@ -1056,4 +1063,5 @@ def bm25_batch_topk(
         .join(index.doc_meta.select("doc_id", "conv_id"), "doc_id")
         .select("query_id", "rank", "doc_id", "conv_id", "score")
         .orderBy("query_id", "rank")
+        .limit(len(queries) * max(k, 0))
     )

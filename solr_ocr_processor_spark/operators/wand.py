@@ -35,6 +35,18 @@ range — so WAND's scores are bit-identical to ``bm25_topk``'s by
 construction. Tombstones anti-join through ``score._suppress``, the
 same plan ``bm25_topk`` uses, before θ and before the top-k.
 
+Dispatch. Pruning pays only when the query touches at least HEAD
+ranges; below that the head would hold every touched range and the
+query runs ``bm25_topk``'s plan (``doc_scores`` -> ``_suppress`` ->
+``rank_topk``). The touched count is bounded before any bound-table
+job, from the stats ``query_stats`` already collected:
+``min(Σ df(present terms), ceil(n_docs / range_size))``. The Σ df half
+is exact (a term touches at most df ranges). The n_docs half is exact
+when doc ids are dense, as after a fresh build or ``compact``; after a
+sync it is a cost rule (below HEAD · range_size docs an exhaustive
+scan is cheap). Both plans are exact, so the rule only picks which one
+runs; a head that comes back shorter than HEAD still falls back.
+
 Why range-granular pruning instead of per-document cursors: a Python
 cursor loop is per-posting interpreted code; a range filter is one
 column predicate on the posting scan, and the θ bound still skips the
@@ -61,7 +73,9 @@ from .score import (
 
 # Bound rows the driver collects per query. When the head holds every
 # touched range, θ-pruning cannot skip enough to pay for its jobs and
-# the query is scored exhaustively.
+# the query is scored exhaustively. A query whose stats bound its
+# touched ranges below HEAD (Σ df: exact; ceil(n_docs / range_size):
+# exact for dense doc ids, else a cost rule) skips the head collect.
 HEAD = 64
 
 
@@ -95,6 +109,13 @@ def wand_topk(
     present = sorted(t for t in set(terms) if t in stats.df)
     if not present:
         return empty
+    # a job-free bound on the touched ranges (module docstring,
+    # Dispatch): below HEAD the head would hold every one of them
+    touched = min(
+        sum(stats.df[t] for t in present), -(-stats.n_docs // cfg.range_size)
+    )
+    if touched < HEAD:
+        return _exhaustive(bidx, stats, present, cfg, exclude_docs, k)
     # Bound validity under avgdl drift: each row carries the avgdl its
     # max_tfnorm was computed against; tfnorm grows with avgdl by at most
     # avgdl_now/avgdl_built (blocks.py module docstring), so scaling the
@@ -129,9 +150,8 @@ def wand_topk(
     # exactness is unaffected by the head size.
     head = bounds.orderBy(F.desc("ub"), F.asc("range_id")).limit(HEAD).collect()
     if len(head) < HEAD:
-        # the head holds EVERY touched range: bm25_topk's plan
-        scored = doc_scores(bidx, stats, present, cfg)
-        return rank_topk(bidx, _suppress(scored, exclude_docs), k)
+        # the head holds EVERY touched range
+        return _exhaustive(bidx, stats, present, cfg, exclude_docs, k)
 
     seed, docs_cov = [], 0
     for r in head:
@@ -165,3 +185,9 @@ def wand_topk(
         (F.col("ub") >= theta) | F.col("range_id").isin(seed)
     ).select("range_id")
     return rank_topk(bidx, scored_in(scan.join(F.broadcast(kept), "range_id")), k)
+
+
+def _exhaustive(bidx, stats, present, cfg, exclude_docs, k) -> DataFrame:
+    """bm25_topk's plan over the stats already read."""
+    scored = doc_scores(bidx, stats, present, cfg)
+    return rank_topk(bidx, _suppress(scored, exclude_docs), k)

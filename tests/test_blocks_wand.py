@@ -140,9 +140,10 @@ def test_block_bounds_match_postings(corpus):
 
 
 def test_wand_runs_the_exhaustive_jobs_below_head(spark, corpus):
-    """Below HEAD ranges WAND's plan is bm25_topk's: it runs no more
-    Spark jobs than bm25_topk plus the bound-head collect (2 jobs, as
-    measured on the warm fixture)."""
+    """Below HEAD ranges WAND's plan is bm25_topk's, with no bound-head
+    collect: it runs no more Spark jobs than bm25_topk, and the shared
+    top-k ends in a TakeOrderedAndProject (no range-partitioned sort's
+    sampling job and shuffle)."""
     idx, bidx, _ = corpus
     assert bidx.blocks.select("range_id").distinct().count() < HEAD
     sc = spark.sparkContext
@@ -160,7 +161,13 @@ def test_wand_runs_the_exhaustive_jobs_below_head(spark, corpus):
     bm25_topk(spark, idx, q, cfg=CFG).collect()
     wand = jobs("wand-budget", lambda: wand_topk(spark, bidx, q, cfg=CFG).collect())
     exhaustive = jobs("bm25-budget", lambda: bm25_topk(spark, idx, q, cfg=CFG).collect())
-    assert wand <= exhaustive + 2, (wand, exhaustive)
+    assert wand <= exhaustive, (wand, exhaustive)
+    assert exhaustive <= 7, exhaustive
+    top = wand_topk(spark, bidx, q, cfg=CFG)
+    top.collect()
+    final = top._jdf.queryExecution().executedPlan().toString().split("== Final Plan ==")[1]
+    root = [ln for ln in final.splitlines() if ln.strip() and "QueryStage" not in ln][0]
+    assert "TakeOrderedAndProject" in root, final
 
 
 @pytest.mark.parametrize("query", QUERIES)

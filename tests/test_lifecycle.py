@@ -24,7 +24,7 @@ from solr_ocr_processor_spark.operators.lifecycle import (
     read_table,
     tombstoned_convs,
 )
-from solr_ocr_processor_spark.operators.score import query_stats
+from solr_ocr_processor_spark.operators.score import bm25_topk, query_stats
 from solr_ocr_processor_spark.operators.wand import wand_topk
 from solr_ocr_processor_spark.oracle import oracle_bm25_topk, oracle_materialize
 from solr_ocr_processor_spark.sources.transcripts import synth_transcripts
@@ -76,6 +76,16 @@ def test_sharded_wand_bounds_survive_skewed_shard_avgdl(spark, tmp_path_factory)
     assert all(r["conv_id"].startswith("a") for r in got)
     # 75 ranges take the two-phase path: k=0 is an empty top-k there too
     assert wand_topk(spark, bidx, "zebra", k=0, cfg=CFG).collect() == []
+    # ...and tombstones anti-join before θ: with the top-3 docs dead the
+    # seed+prune result equals the exhaustive scorer's, bit for bit
+    dead = spark.createDataFrame([(r["doc_id"],) for r in got[:3]], "doc_id long")
+    pruned = wand_topk(spark, bidx, "zebra", k=10, cfg=CFG, exclude_docs=dead)
+    exhaustive = bm25_topk(
+        spark, load_index(spark, store), "zebra", k=10, cfg=CFG, exclude_docs=dead
+    )
+    pairs = [(r["doc_id"], r["score"]) for r in pruned.collect()]
+    assert pairs == [(r["doc_id"], r["score"]) for r in exhaustive.collect()]
+    assert len(pairs) == 10 and not {d for d, _ in pairs} & {r["doc_id"] for r in got[:3]}
 
 
 @pytest.fixture(scope="module")
@@ -236,12 +246,7 @@ def test_empty_store_after_compact_loads_and_syncs_back(spark, tmp_path_factory)
     empty frames, and a later sync back to the corpus answers exactly
     like a fresh build. Reached both ways: a sync to an empty corpus
     (compact_after), and delete_convs of everything + compact."""
-    from solr_ocr_processor_spark.operators.lifecycle import (
-        delete_convs,
-        load_index,
-        sync_store,
-    )
-    from solr_ocr_processor_spark.operators.score import bm25_topk
+    from solr_ocr_processor_spark.operators.lifecycle import delete_convs, sync_store
 
     small = synth_transcripts(spark, n_convs=6, max_turns=5, seed=13)
     tmp = tmp_path_factory.mktemp("empty_store")
